@@ -15,20 +15,32 @@ Semantics deliberately improved (documented, SURVEY §7): the reference
 performs N independent PUTs and raises afterwards, leaving partial
 batches on failure (``DatalakePublishService.kt:79-88``). Here a batch
 commits through the lake's ACID table format (``lake/txn.py``): the
-distributed write lands in an invisible per-commit subdir and ONE
-atomic manifest commit publishes it — a crash anywhere leaves the
-previous snapshot intact, and readers never see a partial batch. The
-*validation* behavior is kept identical: publishing resources that
-lack ids raises AFTER the valid subset is durably committed.
+write lands in an invisible per-commit subdir and ONE atomic manifest
+commit publishes it — a crash anywhere leaves the previous snapshot
+intact, and readers never see a partial batch. The *validation*
+behavior is kept identical: publishing FHIR resources that lack ids
+raises AFTER the valid subset is durably committed, and a Binary
+batch with a missing id raises before anything is visible.
 ``session.acid=False`` falls back to plain Hive-layout writes (the
 FileOutputCommitter path) for non-transactional deployments.
 
 Scale design: tables are partitioned ``(resource_type, fhir_tenant_id,
 _date)`` (Binary: tenant) with per-file ``resource_id`` min/max stats
 recorded in the manifest, so downstream point reads prune first by
-partition directory semantics and then by file stats; the id filter
-and date stamp ride the write job itself via ``Observation`` metrics —
-a single pass over the input, no extra count job.
+partition directory semantics and then by file stats.
+
+One pass per ACID publish: the date stamp, the id filter and the
+batch's ``total``/missing-id counts (an ``Observation``) all ride the
+single write of the input, and a pre-commit gate on the commit
+(``TxnTable.append``'s callable ``_props``) checks those counts after
+the write and before the manifest CAS. An empty batch and a Binary
+batch with a missing id are refused there: no version is made and the
+staged files are deleted. The row count returned comes from the same
+observation — no probe job before the write, no count job after it.
+A batch built from Python rows (``createDataFrame`` of a list, pandas
+or Arrow) is driver-resident, so the commit collects it once and
+writes it on the driver (``lake/txn.py`` bounded-commit driver write):
+one Spark job per publish call.
 """
 
 from __future__ import annotations
@@ -102,7 +114,25 @@ def _id_present():
 
 class MissingResourceIdError(ValueError):
     """Raised when a publish batch contained id-less resources — after
-    the valid rows were written, mirroring ``DatalakePublishService.kt:83-88``."""
+    the valid rows were written for FHIR (``DatalakePublishService.kt:83-88``),
+    before anything is visible for Binary (:107)."""
+
+
+class _EmptyBatch(Exception):
+    """Pre-commit gate verdict: the batch had no rows, so no version."""
+
+
+def _gated_append(session, table: str, df: DataFrame, gate) -> bool:
+    """ACID append of ``df`` with ``gate`` as the pre-commit check
+    (``TxnTable.append``'s callable ``_props``: it runs after the data
+    write, once the batch's Observation metrics are ready, and a raise
+    refuses the commit and deletes its staged files). Returns False
+    when the gate found the batch empty (no version was made)."""
+    try:
+        txn_table(session, table).append(df, _props=gate)
+    except _EmptyBatch:
+        return False
+    return True
 
 
 def publish_fhir_r4(
@@ -116,8 +146,8 @@ def publish_fhir_r4(
     an id — after writing the valid rows (reference ordering,
     ``DatalakePublishService.kt:79-88``).
     """
-    if not resources.head(1):  # empty-input no-op (:56-59)
-        return 0
+    if not session.acid and not resources.head(1):
+        return 0  # empty-input no-op (:56-59)
 
     obs = Observation("publish_fhir_r4")
     stamped = (
@@ -132,8 +162,14 @@ def publish_fhir_r4(
     )
     valid = stamped.filter(_id_present())
     if session.acid:
-        # ACID publish: distributed write + one atomic manifest commit
-        txn_table(session, FHIR_TABLE).append(valid)
+        # ACID publish: one write + one atomic manifest commit; the
+        # empty-input no-op (:56-59) is decided by the commit gate
+        def gate():
+            if not obs.get["total"]:
+                raise _EmptyBatch
+
+        if not _gated_append(session, FHIR_TABLE, valid, gate):
+            return 0
     else:
         (
             _non_acid_writer(valid.write.mode("append"))
@@ -156,25 +192,43 @@ def publish_binary(
     """Publish Binary resources keyed by (tenant, id); no date partition
     (``DatalakePublishService.kt:100-120``, path layout :148-153).
 
-    Unlike FHIR publish, a missing id here is a hard error before any
-    write — the reference dereferences ``binary.id!!`` (:107), which
-    throws before its upload starts.
+    Unlike FHIR publish, a missing id here is a hard error before
+    anything is published — the reference dereferences ``binary.id!!``
+    (:107), which throws before its upload starts. On an ACID session
+    the batch is written once and the commit gate refuses it, so no
+    version is made and its staged files are deleted; the non-ACID
+    path probes the input before writing.
     """
-    if not binaries.head(1):
-        return 0
-    if binaries.filter(~_id_present()).head(1):
-        raise MissingResourceIdError("Binary resources must all carry an id")
     stamped = binaries.withColumn("fhir_tenant_id", F.lit(tenant_id))
-    if session.acid:
-        txn_table(session, BINARY_TABLE).append(stamped)
-    else:
+    if not session.acid:
+        if not binaries.head(1):
+            return 0
+        if binaries.filter(~_id_present()).head(1):
+            raise MissingResourceIdError("Binary resources must all carry an id")
         (
             _non_acid_writer(stamped.write.mode("append"))
             .partitionBy("fhir_tenant_id")
             .format(session.format)
             .save(session.table_path(BINARY_TABLE))
         )
-    return stamped.count()
+        return stamped.count()
+    obs = Observation("publish_binary")
+    observed = stamped.observe(
+        obs,
+        F.count(F.lit(1)).alias("total"),
+        F.count(F.when(~_id_present(), 1)).alias("missing"),
+    )
+
+    def gate():
+        metrics = obs.get
+        if not metrics["total"]:
+            raise _EmptyBatch
+        if metrics["missing"]:
+            raise MissingResourceIdError("Binary resources must all carry an id")
+
+    if not _gated_append(session, BINARY_TABLE, observed, gate):
+        return 0
+    return obs.get["total"]
 
 
 def overwrite_tenant_partition(

@@ -224,14 +224,28 @@ def _footer_stats(
 # of a write job (+ footer metadata reads), identical on-disk layout.
 #
 # Scale discipline (guide §5: the driver does no DATA work): the path
-# fires only when Catalyst's own size estimate for the frame — the
-# same estimate the session already trusts for 64 MB auto-broadcasts —
-# is under ``spark.interop.datalake.driverCommit.maxBytes`` (default
-# 32 MB, conf-tunable, 0 disables). A 100 TB table's data writes blow
-# the estimate and take the distributed writer unchanged; what stays
-# on the driver is the metadata-sized commit traffic (IVM refresh
-# deltas, stream micro-batches, witness fixtures) that was paying a
-# cluster job per handful of rows. File-splitting semantics are
+# is bounded by ``spark.interop.datalake.driverCommit.maxBytes``
+# (default 32 MB, conf-tunable, 0 disables) at two points.
+# - Before the collect, the frame must look bounded. Either Catalyst's
+#   own size estimate — the same estimate the session already trusts
+#   for 64 MB auto-broadcasts — is under the cap, or, when a leaf has
+#   no estimate, every leaf is DRIVER-RESIDENT (_driver_resident): a
+#   LocalRelation, or a LogicalRDD whose lineage has one
+#   ParallelCollectionRDD root. Those are rows that already live in
+#   driver memory (``createDataFrame`` of a Python list, pandas or
+#   Arrow — every publish batch), so collecting them moves nothing
+#   new onto the driver, and the one full-drain collect also lets the
+#   Python worker that unpickles them be reused instead of killed.
+#   Every other unknown leaf (checkpoints, file-backed RDDs, unions
+#   of RDDs) keeps the distributed writer.
+# - After the collect, the Arrow table itself must fit under the cap
+#   (``tbl.nbytes``); a frame that grew past it (a fan-out join, a
+#   large Python list) is dropped and the distributed writer runs.
+# A 100 TB table's data writes blow the estimate and take the
+# distributed writer unchanged; what stays on the driver is the
+# metadata-sized commit traffic (publish batches, IVM refresh deltas,
+# stream micro-batches, witness fixtures) that was paying a cluster
+# job per handful of rows. File-splitting semantics are
 # preserved exactly: rows are grouped by ``spark_partition_id()`` (+
 # layout values), one file per group, so file counts/contents match
 # what the distributed writer produces for the same execution.
@@ -269,12 +283,13 @@ def _plan_size_estimate(df) -> int | None:
     merge) would report petabytes for kilobyte inputs. The commit
     shapes written here (filters, anti-join rewrites, unions, FK
     joins, aggregations) emit at most ~their input bytes; a
-    pathological fan-out past the inputs is caught by the Arrow
-    collect failing spark.driver.maxResultSize, which falls back to
-    the distributed writer. Unknown leaves (LogicalRDD, checkpoints)
-    report defaultSizeInBytes ≈ Long.Max and route the write to the
-    distributed path. Analysis has already run (DataFrames analyze
-    eagerly), so this is a tree walk, not an optimizer pass."""
+    pathological fan-out past the inputs is caught by the driver
+    write's post-collect cap, which falls back to the
+    distributed writer. Unknown leaves (LogicalRDD, checkpoints)
+    report defaultSizeInBytes ≈ Long.Max and return None; the caller
+    then admits the frame only if :func:`_driver_resident` holds.
+    Analysis has already run (DataFrames analyze eagerly), so this is
+    a tree walk, not an optimizer pass."""
     try:
         leaves = df._jdf.queryExecution().analyzed().collectLeaves()
         total = 0
@@ -287,6 +302,41 @@ def _plan_size_estimate(df) -> int | None:
         return total
     except Exception:
         return None
+
+
+def _driver_resident(df) -> bool:
+    """True when every analyzed-plan leaf holds rows that already
+    live in driver memory: a LocalRelation, or a LogicalRDD whose RDD
+    lineage has exactly one root and that root is a
+    ParallelCollectionRDD (``createDataFrame`` of a Python list,
+    pandas or Arrow, and ``parallelize``). Checkpoints, file-backed
+    RDDs and unions of RDDs are not. A few py4j calls per RDD of the
+    lineage; no Spark job."""
+    try:
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            kind = leaf.getClass().getSimpleName()
+            if kind == "LocalRelation":
+                continue
+            if kind != "LogicalRDD":
+                return False
+            roots, stack, seen = [], [leaf.rdd()], set()
+            while stack:
+                rdd = stack.pop()
+                if rdd.id() in seen:
+                    continue
+                seen.add(rdd.id())
+                deps = rdd.dependencies()
+                if deps.size() == 0:
+                    roots.append(rdd.getClass().getSimpleName())
+                for j in range(deps.size()):
+                    stack.append(deps.apply(j).rdd())
+            if roots != ["ParallelCollectionRDD"]:
+                return False
+        return True
+    except Exception:
+        return False
 
 
 def _part_dir_value(v) -> str | None:
@@ -1517,7 +1567,6 @@ class TxnTable:
         stat_cols: list[str],
         pcols: list[str],
         transforms: dict,
-        force_bounded: bool = False,
     ) -> tuple[list[str], int, dict, dict] | None:
         """Bounded-commit fast path: ONE Arrow collect + driver-side
         pyarrow parquet writes in place of the distributed write job
@@ -1545,16 +1594,12 @@ class TxnTable:
         dt = dict(wdf.dtypes)
         if any(dt.get(c) not in _PATH_SAFE_LAYOUT_TYPES for c in layout):
             return None
-        if not force_bounded:
-            # ``force_bounded`` marks frames whose rows ALREADY live on
-            # the driver (sources.tables.local_frame — bounded witness
-            # tails/fixtures by construction): their RDD-backed plans
-            # report defaultSizeInBytes ≈ Long.Max, so the estimate
-            # gate would route every such commit to the distributed
-            # writer for nothing.
-            est = _plan_size_estimate(wdf)
-            if est is None or est > max_bytes:
+        est = _plan_size_estimate(wdf)
+        if est is None:
+            if not _driver_resident(wdf):
                 return None
+        elif est > max_bytes:
+            return None
         from pyspark.sql import functions as F
 
         pid = "_idl_pid"
@@ -1564,6 +1609,8 @@ class TxnTable:
             tbl = wdf.withColumn(pid, F.spark_partition_id()).toArrow()
         except Exception:
             return None  # unsupported type / result too large: fall back
+        if tbl.nbytes > max_bytes:
+            return None  # post-collect cap: the frame outgrew its bound
         if tbl.num_rows == 0:
             # the distributed writer's empty part files are dropped
             # from the commit anyway — the visible end state is the
@@ -1596,7 +1643,14 @@ class TxnTable:
             d = out.joinpath(*segs) if segs else out
             d.mkdir(parents=True, exist_ok=True)
             fpath = d / f"part-{k[0]:05d}-{uuid.uuid4().hex}.snappy.parquet"
-            pq.write_table(g, fpath, compression="snappy")
+            # parquet min/max only for the stats columns (the ones
+            # point reads filter on): pyarrow otherwise writes full
+            # min/max of every column into the footer AND every page
+            # header, which for wide text columns nearly doubles a
+            # small file; Spark's writer keeps no page-header stats
+            pq.write_table(
+                g, fpath, compression="snappy", write_statistics=stat_cols
+            )
             rel = str(fpath.relative_to(self.root))
             rel_files.append(rel)
             entry: dict = {"rows": g.num_rows}
@@ -1620,7 +1674,10 @@ class TxnTable:
         return rel_files, tbl.num_rows, stats, partitions
 
     def _write_data(
-        self, df: DataFrame, layout_partition_by: list[str] | None = None
+        self,
+        df: DataFrame,
+        layout_partition_by: list[str] | None = None,
+        commit_dir: str | None = None,
     ) -> tuple[list[str], int, dict[str, dict], dict[str, dict], dict[str, str]]:
         """Distributed write into a fresh per-commit subdir; returns
         (root-relative file paths, row count, per-file stats, per-file
@@ -1662,7 +1719,7 @@ class TxnTable:
                     self.spark, src, spec, in_dtypes[src]
                 ),
             )
-        commit_dir = f"data/{uuid.uuid4().hex}"
+        commit_dir = commit_dir or f"data/{uuid.uuid4().hex}"
         out = self.root / commit_dir
         layout = (
             list(pcols)
@@ -1700,8 +1757,6 @@ class TxnTable:
                 eff_stat_cols,
                 pcols,
                 transforms,
-                force_bounded=getattr(df, "_idl_bounded_rows", None)
-                is not None,
             )
             if got is not None:
                 rel_files, rows, stats, partitions = got
@@ -2355,24 +2410,41 @@ class TxnTable:
         tmp.write_text(json.dumps(state))
         os.replace(tmp, path)
 
+    def _write_gated(self, df: DataFrame, props):
+        """:meth:`_write_data`, then resolve ``props``. A zero-arg
+        callable runs here, AFTER the data write and before the commit
+        — the Observation idiom: metrics observed on ``df`` are ready
+        once the write action ran, so a caller can record or check
+        aggregates of the written batch with zero extra jobs. A
+        callable that raises is a pre-commit gate refusing the batch:
+        the commit's staged directory is deleted and the error
+        propagates, so no version is made and nothing is left behind."""
+        commit_dir = f"data/{uuid.uuid4().hex}"
+        written = self._write_data(df, commit_dir=commit_dir)
+        if callable(props):
+            try:
+                props = props()
+            except BaseException:
+                shutil.rmtree(self.root / commit_dir, ignore_errors=True)
+                raise
+        return written, props
+
     def append(self, df: DataFrame, _props=None) -> int:
         """ACID append; returns the new version. Schema evolution:
         new columns merge into the table schema (metadata-only — no
         existing file is rewritten; old files read the column as NULL),
         type changes raise :class:`SchemaEvolutionError` BEFORE any
         data is written. ``_props`` (a dict, or a zero-arg callable
-        evaluated AFTER the data write and before the commit — the
-        Observation idiom: metrics observed on ``df`` become available
-        once the write action ran, letting callers record aggregates
-        of the written batch with zero extra jobs) rides the commit
-        record verbatim (see :meth:`_commit`); cumulative props assume
-        a single writer per prop — a rebase re-CASes the same record,
-        it does not recompute caller state."""
+        run after the data write and before the commit, which may
+        refuse the commit by raising — see :meth:`_write_gated`) rides
+        the commit record verbatim (see :meth:`_commit`); cumulative
+        props assume a single writer per prop — a rebase re-CASes the
+        same record, it does not recompute caller state."""
         base = self.current_version()
         self._merge_schema(self._state(base), df)  # validate before writing
-        files, rows, stats, parts, ptypes = self._write_data(df)
-        if callable(_props):
-            _props = _props()
+        (files, rows, stats, parts, ptypes), _props = self._write_gated(
+            df, _props
+        )
         return self._commit_retry(
             base,
             op="append",
@@ -3674,9 +3746,9 @@ class TxnTable:
         if last is not None and epoch_id <= last:
             return None
         self._merge_schema(prev, batch_df)  # validate before writing
-        files, rows, stats, parts, ptypes = self._write_data(batch_df)
-        if callable(_props):
-            _props = _props()  # post-write: Observation metrics ready
+        (files, rows, stats, parts, ptypes), _props = self._write_gated(
+            batch_df, _props
+        )
         return self._commit_retry(
             base,
             op="append",

@@ -89,16 +89,11 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     bounded result assembly, not a data path."""
     if not rows:
         return spark.createDataFrame(rows, schema)
-    df = spark.createDataFrame(
+    # a parallelize-rooted frame: TxnTable's bounded-commit driver
+    # write admits it as driver-resident (lake/txn.py:_driver_resident)
+    return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema
     )
-    # bounded-by-construction marker: TxnTable's bounded-commit driver
-    # write honors it because an RDD-backed plan has no usable
-    # Catalyst size estimate (lake/txn.py:_driver_commit_write). Set
-    # only on the frame object itself — any transformation returns a
-    # new DataFrame without it, which is the conservative direction.
-    df._idl_bounded_rows = len(rows)
-    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

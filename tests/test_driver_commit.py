@@ -180,3 +180,157 @@ def test_transform_literals_batched_equals_per_literal(lake, spark, sf_dir):
     assert got == ref
     assert all(v is not None and 0 <= v < 8 for v in got["b"])
     assert got["tr"] == [0, 0, 4200]
+
+
+# -- driver-resident inputs (createDataFrame of Python rows) -------------
+
+_ROWS_SCHEMA = (
+    "id BIGINT, tenant STRING, body STRING, price DOUBLE, "
+    "amt DECIMAL(10,2), ts TIMESTAMP"
+)
+
+
+def _python_rows(spark):
+    from datetime import datetime
+    from decimal import Decimal
+
+    return spark.createDataFrame(
+        [
+            (
+                i,
+                f"t{i % 3}",
+                "x" * (i % 50),
+                float("nan") if i % 11 == 0 else i / 7,
+                Decimal(i) / 4,
+                datetime(2024, 1, 1 + i % 28, i % 24),
+            )
+            for i in range(120)
+        ],
+        _ROWS_SCHEMA,
+    )
+
+
+def _spy_path(monkeypatch):
+    """Record, per ``_driver_commit_write`` call, whether the driver
+    write took the commit (True) or fell back (False)."""
+    took: list[bool] = []
+    real = TxnTable._driver_commit_write
+
+    def spy(self, *a, **kw):
+        got = real(self, *a, **kw)
+        took.append(got is not None)
+        return got
+
+    monkeypatch.setattr(TxnTable, "_driver_commit_write", spy)
+    return took
+
+
+def _commit_shape(t):
+    """Visible state of a one-commit table with the file names left
+    out: per-file (partition, stats incl. rows), and the rows read."""
+    m = t.manifest()
+    files = sorted(
+        (
+            tuple(sorted(m["partitions"][f].items())),
+            tuple(sorted((k, str(v)) for k, v in m["stats"][f].items())),
+        )
+        for f in m["files"]
+    )
+    rows = sorted(
+        tuple("nan" if x != x else x for x in r) for r in t.read().collect()
+    )
+    return files, rows
+
+
+def _append_python_rows(lake, spark, name, max_bytes=None):
+    if max_bytes is not None:
+        spark.conf.set(_KEY, str(max_bytes))
+    try:
+        t = TxnTable(lake, name, stats_cols=["id"], partition_cols=["tenant"])
+        t.append(_python_rows(spark))
+        return t
+    finally:
+        spark.conf.unset(_KEY)
+
+
+def test_python_rows_commit_in_one_job(lake, spark, monkeypatch):
+    """A ``createDataFrame(list)`` frame is driver-resident: its commit
+    runs exactly one Spark job (the Arrow collect) and leaves the same
+    state as the distributed writer — files per partition, rows, stats
+    — including timestamp, decimal and NaN data columns."""
+    took = _spy_path(monkeypatch)
+    sc = spark.sparkContext
+    sc.setJobGroup("driver-commit-one-job", "one job")
+    try:
+        on = _append_python_rows(lake, spark, "py_on")
+        jobs = sc.statusTracker().getJobIdsForGroup("driver-commit-one-job")
+    finally:
+        sc.setJobGroup("", "")
+    assert took == [True]
+    assert len(jobs) == 1
+    off = _append_python_rows(lake, spark, "py_off", max_bytes=0)
+    assert took == [True, False]  # maxBytes=0 disables the driver write
+    assert _commit_shape(on) == _commit_shape(off)
+
+
+def test_python_rows_over_cap_fall_back(lake, spark, monkeypatch):
+    """The post-collect cap: the same frame over a tiny maxBytes is
+    collected, found too large, and written by the distributed writer
+    with identical state."""
+    took = _spy_path(monkeypatch)
+    small = _append_python_rows(lake, spark, "py_small", max_bytes=1024)
+    assert took == [False]
+    ref = _append_python_rows(lake, spark, "py_ref")
+    assert took == [False, True]
+    assert _commit_shape(small) == _commit_shape(ref)
+
+
+def test_checkpointed_frame_takes_distributed_path(lake, spark, monkeypatch):
+    """A localCheckpoint()ed frame is not driver-resident (its rows live
+    in executor block storage): no estimate, no lineage admission."""
+    took = _spy_path(monkeypatch)
+    t = TxnTable(lake, "ckpt", stats_cols=["id"], partition_cols=["tenant"])
+    t.append(_python_rows(spark).localCheckpoint())
+    assert took == [False]
+    assert t.read().count() == 120
+
+
+def test_driver_resident_lineage_rule(spark, tmp_path):
+    import pandas as pd
+
+    from interop_datalake_spark.lake.txn import _driver_resident
+
+    sc = spark.sparkContext
+    one = spark.createDataFrame([(1,)], "x INT")
+    assert _driver_resident(one)
+    assert _driver_resident(spark.createDataFrame([], "x INT"))
+    assert _driver_resident(spark.createDataFrame(pd.DataFrame({"x": [1]})))
+    assert _driver_resident(one.union(one).filter("x > 0"))
+    assert not _driver_resident(one.localCheckpoint())
+    both = sc.union([sc.parallelize([(1,)]), sc.parallelize([(2,)])])
+    assert not _driver_resident(spark.createDataFrame(both, "x INT"))
+    (tmp_path / "f.txt").write_text("1\n")
+    text = sc.textFile(str(tmp_path / "f.txt")).map(lambda s: (s,))
+    assert not _driver_resident(spark.createDataFrame(text, "s STRING"))
+    # a file scan has an estimate and is not driver-resident
+    spark.range(3).write.parquet(str(tmp_path / "p"))
+    assert not _driver_resident(spark.read.parquet(str(tmp_path / "p")))
+
+
+def test_exploding_join_over_cap_falls_back(lake, spark, monkeypatch):
+    """The post-collect cap also bounds estimated frames: a join whose
+    inputs are far under maxBytes but whose output is far over it is
+    collected, refused and written by the distributed writer."""
+    took = _spy_path(monkeypatch)
+    a = spark.range(300).withColumnRenamed("id", "a")
+    b = spark.range(300).withColumnRenamed("id", "b")
+    frame = a.crossJoin(b)  # 90k rows from two 2.4 KB leaves
+    assert _plan_size_estimate(frame) < 64 * 1024
+    spark.conf.set(_KEY, str(64 * 1024))
+    try:
+        t = TxnTable(lake, "fanout", stats_cols=["a"])
+        t.append(frame)
+    finally:
+        spark.conf.unset(_KEY)
+    assert took == [False]
+    assert t.read().count() == 90_000

@@ -117,10 +117,64 @@ def test_binary_batch_drops_missing(session, spark):
     assert sorted(r["resource_id"] for r in got.collect()) == ["a", "b"]
 
 
+def _files_under(root):
+    from pathlib import Path
+
+    root = Path(root)
+    return {p for p in root.rglob("*") if p.is_file()} if root.exists() else set()
+
+
 def test_binary_requires_id(session, spark):
-    df = spark.createDataFrame([(None, "pdf", "{}")], BIN_SCHEMA)
+    """A Binary batch with a null or '' id is refused at the commit
+    gate (reference :107): even mixed with valid rows, nothing becomes
+    visible, no version is made and the staged files are deleted."""
+    from interop_datalake_spark.lake.publish import txn_table
+
+    publish_binary(
+        session, "t", spark.createDataFrame([("a", "pdf", "{}")], BIN_SCHEMA)
+    )
+    t = txn_table(session, "ehr_binary")
+    v0, files0 = t.current_version(), _files_under(t.root)
+    for bad_id in (None, ""):
+        df = spark.createDataFrame(
+            [("b", "pdf", "{}"), (bad_id, "pdf", "{}"), ("c", "mp4", "{}")],
+            BIN_SCHEMA,
+        )
+        with pytest.raises(MissingResourceIdError):
+            publish_binary(session, "t", df)
+        assert t.current_version() == v0
+        assert _files_under(t.root) == files0
+    got = retrieve_binary_batch(session, "t", ["a", "b", "c"]).collect()
+    assert [r["resource_id"] for r in got] == ["a"]
+
+
+@pytest.mark.parametrize("which", ["fhir", "binary"])
+def test_publish_empty_batch_makes_no_version(session, spark, which):
+    """Empty input makes no version and leaves no file, on a table
+    that already has data (the empty-input no-op, reference :56-59)."""
+    from interop_datalake_spark.lake.publish import txn_table
+
+    publish, table, schema, row = {
+        "fhir": (publish_fhir_r4, "ehr", FHIR_SCHEMA, ("Location", "x", "{}")),
+        "binary": (publish_binary, "ehr_binary", BIN_SCHEMA, ("x", "pdf", "{}")),
+    }[which]
+    assert publish(session, "t", spark.createDataFrame([row], schema)) == 1
+    t = txn_table(session, table)
+    v0, files0 = t.current_version(), _files_under(t.root)
+    assert publish(session, "t", spark.createDataFrame([], schema)) == 0
+    assert t.current_version() == v0
+    assert _files_under(t.root) == files0
+
+
+def test_binary_requires_id_non_acid(hive_session, spark):
+    """The non-ACID path refuses a missing id before any file is
+    written (it has no commit gate to fall back on)."""
+    df = spark.createDataFrame(
+        [("a", "pdf", "{}"), ("", "pdf", "{}")], BIN_SCHEMA
+    )
     with pytest.raises(MissingResourceIdError):
-        publish_binary(session, "t", df)
+        publish_binary(hive_session, "t", df)
+    assert _files_under(hive_session.table_path("ehr_binary")) == set()
 
 
 def test_binary_exists(session, spark):
