@@ -1,4 +1,3 @@
-from interop_datalake_spark.lake.maintenance import compact_table, merge_by_key
 from interop_datalake_spark.lake.publish import (
     overwrite_tenant_partition,
     publish_binary,
@@ -29,8 +28,6 @@ __all__ = [
     "retrieve_binary_by_urls",
     "retrieve_fhir",
     "binary_exists",
-    "compact_table",
-    "merge_by_key",
     "publish_concept_map",
     "load_concept_map",
     "enrich_with_concept_map",

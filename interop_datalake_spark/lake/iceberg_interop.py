@@ -770,10 +770,6 @@ def _read_avro(jvm, path: Path):
     return recs, meta
 
 
-def _jbytes(jvm, b: bytes):
-    return jvm.java.nio.ByteBuffer.wrap(b)
-
-
 def _py_bytes(jvm, bb) -> bytes | None:
     if bb is None:
         return None

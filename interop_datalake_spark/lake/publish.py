@@ -20,16 +20,16 @@ commit publishes it — a crash anywhere leaves the previous snapshot
 intact, and readers never see a partial batch. The *validation*
 behavior is kept identical: publishing FHIR resources that lack ids
 raises AFTER the valid subset is durably committed, and a Binary
-batch with a missing id raises before anything is visible.
-``session.acid=False`` falls back to plain Hive-layout writes (the
-FileOutputCommitter path) for non-transactional deployments.
+batch with a missing id raises before anything is visible. Every
+publish — append, partition overwrite, raw record — is a
+``TxnTable`` commit.
 
 Scale design: tables are partitioned ``(resource_type, fhir_tenant_id,
 _date)`` (Binary: tenant) with per-file ``resource_id`` min/max stats
 recorded in the manifest, so downstream point reads prune first by
 partition directory semantics and then by file stats.
 
-One pass per ACID publish: the date stamp, the id filter and the
+One pass per publish: the date stamp, the id filter and the
 batch's ``total``/missing-id counts (an ``Observation``) all ride the
 single write of the input, and a pre-commit gate on the commit
 (``TxnTable.append``'s callable ``_props``) checks those counts after
@@ -58,25 +58,6 @@ from interop_datalake_spark.session import DatalakeSession
 FHIR_TABLE = "ehr"
 BINARY_TABLE = "ehr_binary"
 RAW_TABLE = "raw_data_response"
-
-#: The session default committer is algorithm v2 (session.py), which is
-#: safe for TxnTable because every ACID write lands in an invisible
-#: per-commit UUID dir. The non-ACID fallback writes here append
-#: straight into the LIVE directory-listed table path, where v2's task
-#: commits would leave partial part-files visible after a mid-write
-#: job failure. Scope v1 back onto exactly these writes (writer
-#: options merge into the write job's Hadoop conf via
-#: ``newHadoopConfWithOptions``): a failed non-ACID publish then
-#: leaves only ignored ``_temporary`` content, as before round 14.
-_NON_ACID_COMMITTER = {
-    "mapreduce.fileoutputcommitter.algorithm.version": "1",
-}
-
-
-def _non_acid_writer(writer):
-    for k, v in _NON_ACID_COMMITTER.items():
-        writer = writer.option(k, v)
-    return writer
 
 #: manifest-table layouts for the reference's three publish surfaces —
 #: partition columns mirror the reference's object-key templates
@@ -146,9 +127,6 @@ def publish_fhir_r4(
     an id — after writing the valid rows (reference ordering,
     ``DatalakePublishService.kt:79-88``).
     """
-    if not session.acid and not resources.head(1):
-        return 0  # empty-input no-op (:56-59)
-
     obs = Observation("publish_fhir_r4")
     stamped = (
         resources.withColumn("fhir_tenant_id", F.lit(tenant_id))
@@ -161,22 +139,15 @@ def publish_fhir_r4(
         )
     )
     valid = stamped.filter(_id_present())
-    if session.acid:
-        # ACID publish: one write + one atomic manifest commit; the
-        # empty-input no-op (:56-59) is decided by the commit gate
-        def gate():
-            if not obs.get["total"]:
-                raise _EmptyBatch
 
-        if not _gated_append(session, FHIR_TABLE, valid, gate):
-            return 0
-    else:
-        (
-            _non_acid_writer(valid.write.mode("append"))
-            .partitionBy("resource_type", "fhir_tenant_id", "_date")
-            .format(session.format)
-            .save(session.table_path(FHIR_TABLE))
-        )
+    # one write + one atomic manifest commit; the empty-input no-op
+    # (:56-59) is decided by the commit gate
+    def gate():
+        if not obs.get["total"]:
+            raise _EmptyBatch
+
+    if not _gated_append(session, FHIR_TABLE, valid, gate):
+        return 0
     metrics = obs.get
     dropped = metrics["total"] - metrics["valid"]
     if dropped:
@@ -194,24 +165,11 @@ def publish_binary(
 
     Unlike FHIR publish, a missing id here is a hard error before
     anything is published — the reference dereferences ``binary.id!!``
-    (:107), which throws before its upload starts. On an ACID session
-    the batch is written once and the commit gate refuses it, so no
-    version is made and its staged files are deleted; the non-ACID
-    path probes the input before writing.
+    (:107), which throws before its upload starts. Here the batch is
+    written once and the commit gate refuses it, so no version is made
+    and its staged files are deleted.
     """
     stamped = binaries.withColumn("fhir_tenant_id", F.lit(tenant_id))
-    if not session.acid:
-        if not binaries.head(1):
-            return 0
-        if binaries.filter(~_id_present()).head(1):
-            raise MissingResourceIdError("Binary resources must all carry an id")
-        (
-            _non_acid_writer(stamped.write.mode("append"))
-            .partitionBy("fhir_tenant_id")
-            .format(session.format)
-            .save(session.table_path(BINARY_TABLE))
-        )
-        return stamped.count()
     obs = Observation("publish_binary")
     observed = stamped.observe(
         obs,
@@ -236,7 +194,6 @@ def overwrite_tenant_partition(
     table: str,
     tenant_id: str,
     replacement: DataFrame,
-    partition_cols: tuple[str, ...] = ("fhir_tenant_id",),
 ) -> int:
     """Replace exactly one tenant's partitions, leaving every other
     tenant untouched (Delta ``replaceWhere`` / Hive dynamic-partition
@@ -244,29 +201,16 @@ def overwrite_tenant_partition(
     — objects are only ever PUT by full key — so this is engine-layer
     surface (SURVEY §2.B "Sinks: overwrite-partition").
 
-    Scale note: dynamic mode only rewrites partitions present in
-    ``replacement``; a 1-tenant fix-up over a 100 TB lake touches one
-    partition subtree, not the table. On an ACID session the swap of
-    all affected partitions is additionally ONE atomic manifest commit
-    (``TxnTable.overwrite_partitions``).
+    Scale note: only partitions present in ``replacement`` are
+    rewritten; a 1-tenant fix-up over a 100 TB lake touches one
+    partition subtree, not the table, and the swap of all affected
+    partitions is ONE atomic manifest commit
+    (``TxnTable.overwrite_partitions``) — on a table with no commits
+    yet too. The partition columns are the table's layout
+    (``TXN_LAYOUT``) or, for another table, the ones its log records.
     """
     stamped = replacement.withColumn("fhir_tenant_id", F.lit(tenant_id))
-    if session.acid and TxnTable(session, table).current_version() > 0:
-        t = txn_table(session, table)
-        t.overwrite_partitions(stamped)
-        return stamped.count()
-    spark = session.spark
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            _non_acid_writer(stamped.write.mode("overwrite"))
-            .partitionBy(*partition_cols)
-            .format(session.format)
-            .save(session.table_path(table))
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    txn_table(session, table).overwrite_partitions(stamped)
     return stamped.count()
 
 
@@ -287,15 +231,7 @@ def publish_raw_data(
         [(tenant_id, txn_id, url, now_iso, data)],
         "tenant_id STRING, transaction_id STRING, url STRING, time STRING, body STRING",
     )
-    if session.acid:
-        txn_table(session, RAW_TABLE).append(row_df)
-    else:
-        (
-            _non_acid_writer(row_df.write.mode("append"))
-            .partitionBy("tenant_id")
-            .format(session.format)
-            .save(session.table_path(RAW_TABLE))
-        )
+    txn_table(session, RAW_TABLE).append(row_df)
     path = row_df.select(
         raw_data_file_path(F.col("tenant_id"), F.col("transaction_id")).alias("p")
     ).first()["p"]

@@ -15,26 +15,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from interop_datalake_spark.lake.txn import TxnTable
 from interop_datalake_spark.session import DatalakeSession
 
 REFERENCE_PREFIX = "reference"
+
+
+def _concept_map_table(session: DatalakeSession, name: str) -> TxnTable:
+    return TxnTable(session, f"{REFERENCE_PREFIX}/{name}")
 
 
 def publish_concept_map(
     session: DatalakeSession, name: str, mapping: DataFrame
 ) -> None:
     """Store a concept map (overwrite-whole semantics: maps are small
-    and versioned by republish, like the shared-bucket objects)."""
-    (
-        mapping.coalesce(1)
-        .write.mode("overwrite")
-        .format(session.format)
-        .save(session.table_path(f"{REFERENCE_PREFIX}/{name}"))
-    )
+    and versioned by republish, like the shared-bucket objects). The
+    replace is one atomic ``TxnTable`` commit, so a reader sees the old
+    map or the new one, never a half-written directory."""
+    _concept_map_table(session, name).overwrite(mapping.coalesce(1))
 
 
 def load_concept_map(session: DatalakeSession, name: str) -> DataFrame:
-    return session.read_table(f"{REFERENCE_PREFIX}/{name}")
+    return _concept_map_table(session, name).read()
 
 
 def enrich_with_concept_map(

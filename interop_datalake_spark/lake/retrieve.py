@@ -7,16 +7,13 @@ Reference parity (``DatalakeRetrieveService.kt``):
   absent from the result (drop-missing, test :125-151) ≡ semi-join.
 - R11 ``objectExists``/``binaryExists`` (:44-52): existence predicate.
 
-Scale design: lake tables published on an ACID session are
-manifest-committed ``TxnTable``s (``lake/txn.py``); every lookup here
-prunes the FILE LIST first — by recorded partition values
-(``fhir_tenant_id`` directory semantics) and then by per-file
-``resource_id`` min/max stats — before Spark plans the scan, so a
-point read on a 100 TB table opens one partition's intersecting files,
-not the table. Plain Hive-layout tables (``session.acid=False`` or
-externally written) fall back to Catalyst partition pruning on the
-same predicates. Batch lookup is an IN-list over one pruned scan —
-one scan for N keys, not N scans.
+Scale design: lake tables are manifest-committed ``TxnTable``s
+(``lake/txn.py``); every lookup here prunes the FILE LIST first — by
+recorded partition values (``fhir_tenant_id`` directory semantics) and
+then by per-file ``resource_id`` min/max stats — before Spark plans
+the scan, so a point read on a 100 TB table opens one partition's
+intersecting files, not the table. Batch lookup is an IN-list over one
+pruned scan — one scan for N keys, not N scans.
 """
 
 from __future__ import annotations
@@ -25,7 +22,6 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from interop_datalake_spark.lake.publish import BINARY_TABLE, FHIR_TABLE, txn_table
 from interop_datalake_spark.lake.txn import TxnTable
@@ -39,52 +35,35 @@ def _txn(session: DatalakeSession, table: str) -> TxnTable | None:
 
 
 def read_lake_table(session: DatalakeSession, table: str) -> DataFrame | None:
-    """A lake table's current snapshot: manifest-resolved when the
-    table is a ``TxnTable``, plain Hive read otherwise. Missing
-    table/path → None, mirroring 404→null (``OCIClient.kt:182-186``)."""
+    """A lake table's current snapshot, manifest-resolved. A table with
+    no commits (or missing files) → None, mirroring 404→null
+    (``OCIClient.kt:182-186``)."""
     t = _txn(session, table)
-    if t is not None:
-        try:
-            return t.read()
-        except FileNotFoundError:
-            return None
-    try:
-        return session.read_table(table)
-    except AnalysisException:
+    if t is None:
         return None
-
-
-# internal alias kept for the existing call sites below
-_read = read_lake_table
+    try:
+        return t.read()
+    except FileNotFoundError:
+        return None
 
 
 def _binary_lookup(
     session: DatalakeSession, tenant_id: str, resource_ids: list[str]
 ) -> DataFrame | None:
     """Pruned (tenant, ids) scan of the Binary table, or None when the
-    table is missing/empty. TxnTable path: manifest prunes files by
-    tenant partition and resource_id stats range; Hive path: Catalyst
-    prunes on the same predicates."""
+    table is missing/empty: the manifest prunes files by tenant
+    partition and resource_id stats range before the scan is planned."""
     t = _txn(session, BINARY_TABLE)
-    if t is not None:
-        try:
-            df = t.read(
-                partition_filter={"fhir_tenant_id": tenant_id},
-                key_range=(
-                    "resource_id",
-                    min(resource_ids),
-                    max(resource_ids),
-                ),
-            )
-        except FileNotFoundError:
-            return None
-        return df.filter(F.col("resource_id").isin(resource_ids))
-    df = _read(session, BINARY_TABLE)
-    if df is None:
+    if t is None:
         return None
-    return df.filter(F.col("fhir_tenant_id") == tenant_id).filter(
-        F.col("resource_id").isin(resource_ids)
-    )
+    try:
+        df = t.read(
+            partition_filter={"fhir_tenant_id": tenant_id},
+            key_range=("resource_id", min(resource_ids), max(resource_ids)),
+        )
+    except FileNotFoundError:
+        return None
+    return df.filter(F.col("resource_id").isin(resource_ids))
 
 
 def retrieve_binary(
@@ -120,7 +99,7 @@ def retrieve_binary_by_urls(
     from interop_datalake_spark.functions.uris import parse_object_url
 
     url_list = [u for u in urls if u]
-    df = _read(session, BINARY_TABLE)
+    df = read_lake_table(session, BINARY_TABLE)
     if df is None or not url_list:
         schema = (
             "url STRING, fhir_tenant_id STRING, resource_id STRING,"
@@ -169,16 +148,16 @@ def retrieve_fhir(
     """Pruned scan of one (type, tenant) partition subtree, optionally
     narrowed to a single resource — the read-side twin of
     ``publish_fhir_r4``'s layout (``DatalakePublishService.kt:68-73``).
-    TxnTable path: the manifest drops every non-matching partition's
+    The manifest drops every non-matching partition's
     files (and, for a point read, files whose resource_id stats range
     can't contain the id) before the scan is planned."""
-    rtype = resource_type.lower()
     t = _txn(session, FHIR_TABLE)
+    df = None
     if t is not None:
         try:
             df = t.read(
                 partition_filter={
-                    "resource_type": rtype,
+                    "resource_type": resource_type.lower(),
                     "fhir_tenant_id": tenant_id,
                 },
                 key_range=(
@@ -188,16 +167,7 @@ def retrieve_fhir(
                 ),
             )
         except FileNotFoundError:
-            df = None
-    else:
-        df = _read(session, FHIR_TABLE)
-        if df is not None:
-            df = df.filter(
-                (F.col("resource_type") == rtype)
-                & (F.col("fhir_tenant_id") == tenant_id)
-            )
-            if resource_id is not None:
-                df = df.filter(F.col("resource_id") == resource_id)
+            pass
     if df is None:
         schema = (
             "resource_id STRING, resource_json STRING, resource_type STRING,"

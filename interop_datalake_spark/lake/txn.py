@@ -1,6 +1,8 @@
-"""Transactional parquet tables via a manifest log — the ACID layer
-the plain Hive-layout lake lacks (Delta/Iceberg are not installed in
-this environment; ``session.py`` re-probes each round).
+"""Transactional parquet tables via a manifest log — the lake's one
+storage format: every publish, retrieve, merge and compaction goes
+through a ``TxnTable``. No Delta/Iceberg runtime is a dependency;
+``lake/delta_interop.py`` and ``lake/iceberg_interop.py`` write and
+read their public log formats.
 
 This is the table-format design pattern (Delta/Iceberg's core) reduced
 to its essentials, Spark-first:
@@ -1106,7 +1108,7 @@ class TxnTable:
             groups.setdefault(key, []).append(f)
 
         def _read(files: list[str], path_cols: tuple) -> DataFrame:
-            reader = self.spark.read.format(self.session.format)
+            reader = self.spark.read.format("parquet")
             if path_cols:
                 reader = reader.option("recursiveFileLookup", "true")
             if st is not None:
@@ -1740,14 +1742,9 @@ class TxnTable:
             + list(layout_partition_by or [])
         )
         eff_stat_cols = [c for c in self.stats_cols if c in df.columns]
-        stats_eligible = (
-            self.session.format == "parquet"
-            and not self.bloom_cols
-            and all(
-                in_types_all.get(c) in _FOOTER_STAT_TYPES
-                and c not in layout_set
-                for c in eff_stat_cols
-            )
+        stats_eligible = not self.bloom_cols and all(
+            in_types_all.get(c) in _FOOTER_STAT_TYPES and c not in layout_set
+            for c in eff_stat_cols
         )
         if stats_eligible:
             got = self._driver_commit_write(
@@ -1761,7 +1758,7 @@ class TxnTable:
             if got is not None:
                 rel_files, rows, stats, partitions = got
                 return rel_files, rows, stats, partitions, ptypes
-        writer = wdf.write.mode("overwrite").format(self.session.format)
+        writer = wdf.write.mode("overwrite").format("parquet")
         if layout:
             # layout_partition_by groups rows into per-value files
             # EXACTLY (the writer splits by value — no range-sampling
@@ -1840,9 +1837,7 @@ class TxnTable:
             _old_inf = self.spark.conf.get(_INF_KEY, "true")
             self.spark.conf.set(_INF_KEY, "false")
             try:
-                back = self.spark.read.format(self.session.format).load(
-                    str(out)
-                )
+                back = self.spark.read.parquet(str(out))
             finally:
                 self.spark.conf.set(_INF_KEY, _old_inf)
         stat_cols = [c for c in self.stats_cols if c in back.columns]
@@ -2740,7 +2735,7 @@ class TxnTable:
     ) -> int | None:
         """ACID upsert: update rows matching ``key_cols``, insert the
         rest — atomic across every file in ONE commit (the property
-        the Hive-layout merge cannot give). Returns the new version
+        a per-partition staged swap cannot give). Returns the new version
         (None only for internal epoch merges whose epoch landed
         concurrently — a streaming-replay no-op).
 

@@ -57,25 +57,3 @@ def cumulative_estimates(sketches: DataFrame) -> DataFrame:
             "est_to_date"
         ),
     )
-
-
-def exact_first_seen_cumulative(
-    ev: DataFrame, key_col: str = "user_id", ts_col: str = "ts"
-) -> DataFrame:
-    """(day, exact_to_date): exact distinct-to-date, computed the
-    scalable way — each key reduces to its FIRST-seen day (one
-    groupBy on the key), then a running sum over per-day first-seen
-    counts (a window over the day table). Engine-replayable, used as
-    the oracle-checkable twin of the sketch estimates."""
-    first = ev.groupBy(key_col).agg(
-        F.min(F.date_trunc("day", ts_col)).alias("first_day")
-    )
-    per_day = first.groupBy(F.col("first_day").alias("day")).agg(
-        F.count("*").alias("new_keys")
-    )
-    w = Window.orderBy("day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return per_day.select(
-        "day", F.sum("new_keys").over(w).alias("exact_to_date")
-    )

@@ -2,7 +2,7 @@
 
 Reference parity: ``DatalakeSpringConfig.kt:6-8`` (DI wiring) and
 ``OCIClient.kt:28-59`` (config-driven client: namespace/bucket/region →
-here: lake root path, table format). The reference wires an object-store
+here: lake root path). The reference wires an object-store
 client per environment; we wire a SparkSession tuned for the lakehouse
 workload and hold the lake root so every publish/retrieve call shares it.
 """
@@ -10,18 +10,9 @@ workload and hold the lake root so every publish/retrieve call shares it.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
-
-
-def _delta_available() -> bool:
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
+from pyspark.sql import SparkSession
 
 
 #: Tuning applied to every session this module builds. Sized for the
@@ -63,24 +54,19 @@ DEFAULT_CONF = {
 
 @dataclass
 class DatalakeSession:
-    """Wraps a SparkSession with the lake's root location and format.
+    """Wraps a SparkSession with the lake's root location.
 
     The reference's analog is the Spring-wired service pair holding an
     ``OCIClient`` (bucket + namespace + region, ``OCIClient.kt:28-59``);
-    ours holds ``lake_root`` (filesystem/object-store URI) and the table
-    format. ``shared`` vs per-call clients (``OCIClient.kt:59,64-71``)
-    map to SparkSession reuse — one session per process, getOrCreate.
+    ours holds ``lake_root`` (filesystem/object-store URI). Every lake
+    table under it is a manifest-committed ``TxnTable`` (``lake/txn.py``)
+    of Parquet files. ``shared`` vs per-call clients
+    (``OCIClient.kt:59,64-71``) map to SparkSession reuse — one session
+    per process, getOrCreate.
     """
 
     lake_root: str
     spark: SparkSession
-    format: str = "parquet"
-    #: route the publish surface through manifest-committed TxnTables
-    #: (the lake's ACID table format). ``False`` falls back to plain
-    #: Hive-layout writes — kept for the non-transactional maintenance
-    #: ops (merge_by_key/compact_table) and external Hive tables.
-    acid: bool = True
-    _tables: dict = field(default_factory=dict)
 
     @classmethod
     def build(
@@ -96,21 +82,11 @@ class DatalakeSession:
         merged = dict(DEFAULT_CONF)
         if conf:
             merged.update(conf)
-        fmt = "parquet"
-        if _delta_available():
-            merged.setdefault(
-                "spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension"
-            )
-            merged.setdefault(
-                "spark.sql.catalog.spark_catalog",
-                "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-            )
-            fmt = "delta"
         for k, v in merged.items():
             builder = builder.config(k, v)
         spark = builder.getOrCreate()
         root = lake_root or os.environ.get("DATALAKE_ROOT", "/tmp/datalake")
-        return cls(lake_root=root, spark=spark, format=fmt)
+        return cls(lake_root=root, spark=spark)
 
     # ---- table helpers -------------------------------------------------
 
@@ -120,12 +96,6 @@ class DatalakeSession:
         Analog of the reference's bucket+prefix layout
         (``DatalakePublishService.kt:42`` "root: ehr")."""
         return f"{self.lake_root.rstrip('/')}/{table}"
-
-    def read_table(self, table: str, **options) -> DataFrame:
-        reader = self.spark.read.format(self.format)
-        for k, v in options.items():
-            reader = reader.option(k, v)
-        return reader.load(self.table_path(table))
 
 
 def get_spark(

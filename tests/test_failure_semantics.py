@@ -1,17 +1,16 @@
 """Write-failure semantics: a mid-write abort must leave no partial
 table state visible. The reference pins upload retry/failure behavior
 (``OCIClientTest.kt:201-222``, ``DatalakePublishServiceTest.kt:127-162``)
-per object; our analog is the Spark commit protocol for ``publish_*``
-(task outputs invisible until job commit) and the staged partition swap
-for ``merge_by_key`` (live table untouched until the staging write has
-fully succeeded)."""
+per object; our analog is the ``TxnTable`` commit protocol for
+``publish_*`` and ``TxnTable.merge``: the write lands in an invisible
+per-commit directory and only the manifest commit makes it visible, so
+a failed write leaves the previous snapshot as it was."""
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from interop_datalake_spark.lake.maintenance import merge_by_key
-from interop_datalake_spark.lake.publish import publish_fhir_r4
+from interop_datalake_spark.lake.publish import publish_fhir_r4, txn_table
 from interop_datalake_spark.lake.retrieve import retrieve_fhir
 from interop_datalake_spark.session import DatalakeSession
 
@@ -68,13 +67,12 @@ def test_publish_abort_leaves_no_partial_rows(session, spark):
     assert after == before, "aborted publish leaked partial rows"
 
 
-def test_merge_abort_during_staging_leaves_table_intact(spark, tmp_path):
-    # merge_by_key stages against the Hive layout (non-ACID path)
-    session = DatalakeSession(
-        lake_root=str(tmp_path / "hive_lake"), spark=spark, acid=False
-    )
+def test_txn_merge_abort_during_write_leaves_table_intact(session, spark):
     before = _seed(session, spark)
+    t = txn_table(session, "ehr")
+    v0 = t.current_version()
     cols = retrieve_fhir(session, "t1", "Location").columns
+    keys = ["resource_type", "fhir_tenant_id", "resource_id"]
 
     def updates_df(rows):
         return (
@@ -89,71 +87,20 @@ def test_merge_abort_during_staging_leaves_table_intact(spark, tmp_path):
     ).withColumn("resource_json", _poison(F.col("resource_json")))
 
     with pytest.raises(Exception):
-        merge_by_key(
-            session, "ehr", bad,
-            key_cols=["resource_type", "fhir_tenant_id", "resource_id"],
-            partition_cols=["resource_type", "fhir_tenant_id", "_date"],
-        )
+        t.merge(bad, keys)
 
+    assert t.current_version() == v0, "aborted merge made a version"
     after = {
         r["resource_id"]: r["resource_json"]
         for r in retrieve_fhir(session, "t1", "Location").collect()
     }
     assert after == before, "aborted merge mutated the live table"
 
-    # stale staging from the crash must not poison the next merge
+    # files staged by the failed write must not leak into the next merge
     good = updates_df([("location", "a", '{"v":2}'), ("location", "c", '{"v":1}')])
-    merge_by_key(
-        session, "ehr", good,
-        key_cols=["resource_type", "fhir_tenant_id", "resource_id"],
-        partition_cols=["resource_type", "fhir_tenant_id", "_date"],
-    )
+    t.merge(good, keys)
     final = {
         r["resource_id"]: r["resource_json"]
         for r in retrieve_fhir(session, "t1", "Location").collect()
     }
     assert final == {"a": '{"v":2}', "b": '{"v":1}', "c": '{"v":1}'}
-
-
-def test_merge_recovers_interrupted_swap_backup(spark, tmp_path):
-    """Crash between backup-rename and stage-rename leaves the live
-    partition dir missing and only the __pre_merge backup on disk.
-    The NEXT merge must restore the backup BEFORE computing the merged
-    result — not silently recompute without those rows and destroy
-    the backup (the old lazy-delete behavior lost them permanently)."""
-    from pathlib import Path
-
-    session = DatalakeSession(
-        lake_root=str(tmp_path / "hive_lake"), spark=spark, acid=False
-    )
-    before = _seed(session, spark)  # Location a, b for t1
-    cols = retrieve_fhir(session, "t1", "Location").columns
-
-    # simulate the interrupted swap: live partition dir → __pre_merge
-    part_dirs = [
-        p
-        for p in Path(session.table_path("ehr")).rglob("_date=*")
-        if p.is_dir()
-    ]
-    assert part_dirs, "expected a published partition dir"
-    live = part_dirs[0]
-    live.rename(live.with_name(live.name + "__pre_merge"))
-
-    updates = (
-        spark.createDataFrame([("location", "c", '{"v":1}')], FHIR_SCHEMA)
-        .withColumn("fhir_tenant_id", F.lit("t1"))
-        .withColumn("_date", F.current_date())
-        .select(*cols)
-    )
-    merge_by_key(
-        session, "ehr", updates,
-        key_cols=["resource_type", "fhir_tenant_id", "resource_id"],
-        partition_cols=["resource_type", "fhir_tenant_id", "_date"],
-    )
-    after = {
-        r["resource_id"]: r["resource_json"]
-        for r in retrieve_fhir(session, "t1", "Location").collect()
-    }
-    assert after == {**before, "c": '{"v":1}'}, (
-        "pre-merge rows from the interrupted partition were lost"
-    )

@@ -22,7 +22,6 @@ from interop_datalake_spark.lake.retrieve import (
     retrieve_binary_batch,
     retrieve_fhir,
 )
-from interop_datalake_spark.lake.maintenance import compact_table
 from interop_datalake_spark.session import DatalakeSession
 
 FHIR_SCHEMA = "resource_type STRING, resource_id STRING, resource_json STRING"
@@ -32,15 +31,6 @@ BIN_SCHEMA = "resource_id STRING, content_type STRING, resource_json STRING"
 @pytest.fixture()
 def session(spark, tmp_path):
     return DatalakeSession(lake_root=str(tmp_path / "lake"), spark=spark)
-
-
-@pytest.fixture()
-def hive_session(spark, tmp_path):
-    """Non-ACID session: plain Hive-layout writes, for the
-    non-transactional maintenance ops (compact_table/merge_by_key)."""
-    return DatalakeSession(
-        lake_root=str(tmp_path / "hive_lake"), spark=spark, acid=False
-    )
 
 
 def test_publish_mixed_types_and_retrieve(session, spark):
@@ -166,17 +156,6 @@ def test_publish_empty_batch_makes_no_version(session, spark, which):
     assert _files_under(t.root) == files0
 
 
-def test_binary_requires_id_non_acid(hive_session, spark):
-    """The non-ACID path refuses a missing id before any file is
-    written (it has no commit gate to fall back on)."""
-    df = spark.createDataFrame(
-        [("a", "pdf", "{}"), ("", "pdf", "{}")], BIN_SCHEMA
-    )
-    with pytest.raises(MissingResourceIdError):
-        publish_binary(hive_session, "t", df)
-    assert _files_under(hive_session.table_path("ehr_binary")) == set()
-
-
 def test_binary_exists(session, spark):
     df = spark.createDataFrame([("x", "pdf", "{}")], BIN_SCHEMA)
     publish_binary(session, "t", df)
@@ -269,44 +248,3 @@ def test_parse_object_url_malformed_is_null(spark):
     assert rows[0]["p"]["path"] == "a/b.json"
     assert rows[1]["p"] is None and rows[2]["p"] is None and rows[3]["p"] is None
 
-
-def test_compaction_partition_filter(hive_session, spark):
-    # compact only one tenant's partitions; the other tenant's data and
-    # partition structure must survive untouched (Hive-layout op)
-    session = hive_session
-    for tenant in ("tA", "tB"):
-        df = spark.createDataFrame(
-            [("Location", f"{tenant}-{i}", "{}") for i in range(20)], FHIR_SCHEMA
-        )
-        publish_fhir_r4(session, tenant, df)
-    n = compact_table(
-        session,
-        "ehr",
-        ["resource_type", "fhir_tenant_id", "_date"],
-        1,
-        partition_filter="fhir_tenant_id = 'tA'",
-    )
-    assert n == 20  # only tA rows rewritten
-    assert retrieve_fhir(session, "tA", "Location").count() == 20
-    assert retrieve_fhir(session, "tB", "Location").count() == 20
-
-
-def test_compaction_preserves_rows(hive_session, spark):
-    session = hive_session
-    df = spark.createDataFrame(
-        [("Location", f"id{i}", "{}") for i in range(50)], FHIR_SCHEMA
-    )
-    publish_fhir_r4(session, "t", df)
-    before = retrieve_fhir(session, "t", "Location")
-    before_rows = sorted(r["resource_id"] for r in before.collect())
-    n = compact_table(
-        session, "ehr", ["resource_type", "fhir_tenant_id", "_date"], 1
-    )
-    assert n == 50
-    after = retrieve_fhir(session, "t", "Location")
-    assert sorted(r["resource_id"] for r in after.collect()) == before_rows
-    # fewer data files than rows: compaction actually merged files
-    from pathlib import Path
-
-    files = list(Path(session.table_path("ehr")).rglob("*.parquet"))
-    assert len(files) <= 4

@@ -1,22 +1,19 @@
-"""URL-keyed retrieval (R8's real signature), concept-map enrichment
-(INFX analog), and key-based merge/upsert."""
+"""URL-keyed retrieval (R8's real signature) and concept-map
+enrichment (INFX analog)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from interop_datalake_spark.functions.uris import binary_file_path, datalake_full_url
-from interop_datalake_spark.lake.maintenance import merge_by_key
-from interop_datalake_spark.lake.publish import publish_binary, publish_fhir_r4
+from interop_datalake_spark.lake.publish import publish_binary
 from interop_datalake_spark.lake.reference_data import (
     enrich_with_concept_map,
     load_concept_map,
     publish_concept_map,
 )
-from interop_datalake_spark.lake.retrieve import retrieve_binary_by_urls, retrieve_fhir
+from interop_datalake_spark.lake.retrieve import retrieve_binary_by_urls
 from interop_datalake_spark.session import DatalakeSession
 
 BIN_SCHEMA = "resource_id STRING, content_type STRING, resource_json STRING"
-FHIR_SCHEMA = "resource_type STRING, resource_id STRING, resource_json STRING"
 
 
 @pytest.fixture()
@@ -68,37 +65,3 @@ def test_concept_map_roundtrip_and_enrich(session, spark):
     got = {r["id"]: r["category"] for r in out.collect()}
     assert got == {1: "engagement", 2: "fault", 3: None}  # gap visible, not dropped
 
-
-def test_merge_by_key_upsert(spark, tmp_path):
-    # merge_by_key is the Hive-layout (non-ACID) upsert — TxnTable.merge
-    # is the transactional twin (tests/test_txn.py)
-    session = DatalakeSession(
-        lake_root=str(tmp_path / "hive_lake"), spark=spark, acid=False
-    )
-    base = spark.createDataFrame(
-        [("Location", "a", '{"v":1}'), ("Location", "b", '{"v":1}'),
-         ("Practitioner", "p", '{"v":1}')],
-        FHIR_SCHEMA,
-    )
-    publish_fhir_r4(session, "t1", base)
-    # update 'a', insert 'c', leave 'b' and the practitioner untouched
-    existing = retrieve_fhir(session, "t1", "Location").limit(1)
-    cols = existing.columns
-    updates = (
-        spark.createDataFrame(
-            [("location", "a", '{"v":2}'), ("location", "c", '{"v":1}')],
-            FHIR_SCHEMA,
-        )
-        .withColumn("fhir_tenant_id", F.lit("t1"))
-        .withColumn("_date", F.current_date())
-        .select(*cols)
-    )
-    merge_by_key(
-        session, "ehr", updates,
-        key_cols=["resource_type", "fhir_tenant_id", "resource_id"],
-        partition_cols=["resource_type", "fhir_tenant_id", "_date"],
-    )
-    locs = {r["resource_id"]: r["resource_json"]
-            for r in retrieve_fhir(session, "t1", "Location").collect()}
-    assert locs == {"a": '{"v":2}', "b": '{"v":1}', "c": '{"v":1}'}
-    assert retrieve_fhir(session, "t1", "Practitioner").count() == 1

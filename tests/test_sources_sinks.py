@@ -35,6 +35,23 @@ def test_overwrite_partition_touches_one_tenant(spark, tmp_path):
     assert [r["resource_id"] for r in b.collect()] == ["b1"]  # untouched
 
 
+def test_overwrite_partition_on_empty_table_survives_publish(spark, tmp_path):
+    """A partition overwrite on a table with no commits yet is a
+    manifest commit like any other, so a later publish to another
+    tenant keeps its rows visible."""
+    session = DatalakeSession(lake_root=str(tmp_path / "lake"), spark=spark)
+    replacement = spark.createDataFrame([("a9", "pdf", '{"fixed":true}')], BIN_SCHEMA)
+    assert overwrite_tenant_partition(session, "ehr_binary", "tenantA", replacement) == 1
+    publish_binary(
+        session, "tenantB",
+        spark.createDataFrame([("b1", "mp4", "{}")], BIN_SCHEMA),
+    )
+    a = retrieve_binary_batch(session, "tenantA", ["a9"])
+    assert [r["resource_id"] for r in a.collect()] == ["a9"]
+    b = retrieve_binary_batch(session, "tenantB", ["b1"])
+    assert [r["resource_id"] for r in b.collect()] == ["b1"]
+
+
 def test_json_scan_bronze_fidelity(spark, tmp_path):
     p = tmp_path / "docs.jsonl"
     p.write_text(
