@@ -247,6 +247,31 @@ GROUP BY 1, 2 ORDER BY p.user_id, pid
 
 
 
+def _drain_available_now(
+    sdf: DataFrame, ckpt: str, what: str, output_mode: str | None = None
+) -> list:
+    """Every row ``sdf`` delivers under ``trigger(availableNow=True)``,
+    collected per micro-batch. A drain that has not finished in 300 s
+    is stopped and raises instead of returning a partial result."""
+    got: list = []
+    writer = sdf.writeStream
+    if output_mode is not None:
+        writer = writer.outputMode(output_mode)
+    q = (
+        writer.foreachBatch(lambda bdf, eid: got.extend(bdf.collect()))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError(
+            f"{what} did not drain in 300s — refusing to return a "
+            f"silently partial result"
+        )
+    return got
+
+
 def stream_iceberg_appends(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FOREIGN-FORMAT streaming, driven end-to-end: a TxnTable ingests
     a bounded orders slice in two batches, each published as an
@@ -285,23 +310,10 @@ def stream_iceberg_appends(spark: SparkSession, sf_dir: str) -> DataFrame:
         export_iceberg_metadata(t)
         t.append(orders.filter(F.col("o_orderkey") % 4 != 0).coalesce(2))
         export_iceberg_metadata(t)
-        got: list = []
-        q = (
-            read_iceberg_stream(spark, str(t.root))
-            .writeStream.foreachBatch(
-                lambda bdf, eid: got.extend(bdf.collect())
-            )
-            .option("checkpointLocation", root + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        got = _drain_available_now(
+            read_iceberg_stream(spark, str(t.root)), root + "/ckpt",
+            "iceberg append stream",
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "iceberg append stream did not drain in 300s — "
-                "refusing to return a silently partial result "
-                "(round-10 review)"
-            )
         rows = [
             (r.o_orderkey, r.o_custkey, r.o_orderstatus, r._snapshot_id)
             for r in got
@@ -360,22 +372,10 @@ def stream_delta_appends(spark: SparkSession, sf_dir: str) -> DataFrame:
         export_delta_log(t, mode="mirror")
         t.append(orders.filter(F.col("o_orderkey") % 4 != 0).coalesce(2))
         export_delta_log(t, mode="mirror")
-        got: list = []
-        q = (
-            read_delta_stream(spark, str(t.root))
-            .writeStream.foreachBatch(
-                lambda bdf, eid: got.extend(bdf.collect())
-            )
-            .option("checkpointLocation", root + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        got = _drain_available_now(
+            read_delta_stream(spark, str(t.root)), root + "/ckpt",
+            "delta append stream",
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "delta append stream did not drain in 300s — "
-                "refusing to return a silently partial result"
-            )
         rows = [
             (
                 r.o_orderkey,
@@ -433,22 +433,10 @@ def stream_delta_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderkey") % 10 == 0, merge_on_read=True
         )
         export_delta_log(t, mode="mirror")
-        got: list = []
-        q = (
-            read_delta_cdc_stream(spark, str(t.root))
-            .writeStream.foreachBatch(
-                lambda bdf, eid: got.extend(bdf.collect())
-            )
-            .option("checkpointLocation", root + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        got = _drain_available_now(
+            read_delta_cdc_stream(spark, str(t.root)), root + "/ckpt",
+            "delta cdc stream",
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "delta cdc stream did not drain in 300s — refusing "
-                "to return a silently partial result"
-            )
         rows = [
             (
                 r.o_orderkey,
@@ -541,22 +529,10 @@ def stream_iceberg_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             e["snapshot-id"]: i
             for i, e in enumerate(meta["snapshot-log"])
         }
-        got: list = []
-        q = (
-            read_iceberg_cdc_stream(spark, str(t.root))
-            .writeStream.foreachBatch(
-                lambda bdf, eid: got.extend(bdf.collect())
-            )
-            .option("checkpointLocation", root + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        got = _drain_available_now(
+            read_iceberg_cdc_stream(spark, str(t.root)), root + "/ckpt",
+            "iceberg cdc stream",
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "iceberg cdc stream did not drain in 300s — refusing "
-                "to return a silently partial result"
-            )
         rows = [
             (
                 r.o_orderkey,
@@ -623,20 +599,10 @@ def stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         sdf = spark.readStream.schema(
             "doc_id BIGINT, _batch BIGINT"
         ).parquet(root + "/spool")
-        got: list = []
-        q = (
-            stateful_dedup_stream(sdf)
-            .writeStream.outputMode("update")
-            .foreachBatch(lambda b, e: got.extend(b.collect()))
-            .option("checkpointLocation", root + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        got = _drain_available_now(
+            stateful_dedup_stream(sdf), root + "/ckpt",
+            "stateful dedup stream", output_mode="update",
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "stateful dedup stream did not drain in 300s"
-            )
         rows = [(r.doc_id, r.first_seen_batch) for r in got]
     finally:
         shutil.rmtree(root, ignore_errors=True)

@@ -3143,7 +3143,9 @@ def _grouped_read(
                             if e is None
                             else e.when(fcol == F.lit(p), c)
                         )
-                    exprs.append(e.alias(n))
+                    # a file path matching no item raises, never NULLs
+                    miss = F.concat(F.lit(f"no {n} value for file "), fcol)
+                    exprs.append(e.otherwise(F.raise_error(miss)).alias(n))
                 else:
                     exprs.append(F.col(n))
             if lineage:

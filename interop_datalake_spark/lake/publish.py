@@ -209,9 +209,12 @@ def overwrite_tenant_partition(
     yet too. The partition columns are the table's layout
     (``TXN_LAYOUT``) or, for another table, the ones its log records.
     """
-    stamped = replacement.withColumn("fhir_tenant_id", F.lit(tenant_id))
-    txn_table(session, table).overwrite_partitions(stamped)
-    return stamped.count()
+    t = txn_table(session, table)
+    v = t.overwrite_partitions(
+        replacement.withColumn("fhir_tenant_id", F.lit(tenant_id))
+    )
+    # the committed rows, from the commit's own per-file stats
+    return t._rows_of(t.manifest(v), t.commit_record(v)["added"])
 
 
 def publish_raw_data(

@@ -1,5 +1,7 @@
 """Vectorized ``read()`` path for the Python DataSource streaming
-sources (txn_source.py, iceberg_source.py).
+sources — the one ``FeedReader.read`` (streaming/feed.py) that all
+five formats (txntable, delta_appends, delta_cdc, iceberg_appends,
+iceberg_cdc) share.
 
 PySpark 4.1.2's ``DataSourceStreamReader.read`` accepts
 ``Iterator[pyarrow.RecordBatch]`` and passes the batches straight

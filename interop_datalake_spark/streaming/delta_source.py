@@ -61,39 +61,18 @@ log parsing is the pure-Python replay delta_interop already uses.
 from __future__ import annotations
 
 import json
-from datetime import date, datetime
-from decimal import Decimal
-from pathlib import Path
 from urllib.parse import unquote
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
+from interop_datalake_spark.streaming.feed import (
+    FeedReader,
+    FeedSource,
+    Slice,
+    _stream,
+    typed_partition_value,
 )
 
 FORMAT_NAME = "delta_appends"
-
-
-def _typed_pv(s: str | None, dt_simple: str):
-    """A Delta partitionValues string in its canonical serialization →
-    the Python value ``arrow_yield`` can type as the declared arrow
-    scalar."""
-    if s is None:
-        return None
-    if dt_simple in ("int", "bigint", "smallint", "tinyint"):
-        return int(s)
-    if dt_simple in ("float", "double"):
-        return float(s)
-    if dt_simple == "boolean":
-        return s == "true"
-    if dt_simple == "date":
-        return date.fromisoformat(s)
-    if dt_simple.startswith("decimal"):
-        return Decimal(s)
-    if dt_simple.startswith("timestamp"):
-        return datetime.fromisoformat(s)
-    return s
+CDC_FORMAT_NAME = "delta_cdc"
 
 
 def _schema_fingerprint(schema_string: str) -> list:
@@ -110,8 +89,9 @@ def _schema_fingerprint(schema_string: str) -> list:
 #: reader features an in-window protocol upgrade may claim without
 #: changing how this stream reads physical parquet. columnMapping is
 #: NOT here (the executor slice reads physical column names directly);
-#: deletionVectors IS — enabling the feature is harmless because any
-#: add that actually carries a vector refuses individually below.
+#: deletionVectors IS — enabling the feature is harmless because
+#: delta_appends refuses any add that actually carries a vector and
+#: delta_cdc applies it.
 _STREAM_SAFE_READER_FEATURES = {
     "timestampNtz",
     "vacuumProtocolCheck",
@@ -120,14 +100,7 @@ _STREAM_SAFE_READER_FEATURES = {
 }
 
 
-class _DeltaSlice(InputPartition):
-    def __init__(self, path, version, part_values):
-        self.path = path
-        self.version = version
-        self.part_values = part_values  # {col: typed python value}
-
-
-class DeltaStreamReader(DataSourceStreamReader):
+class DeltaStreamReader(FeedReader):
     def __init__(
         self,
         root: str,
@@ -137,305 +110,58 @@ class DeltaStreamReader(DataSourceStreamReader):
         partition_cols: list[str],
         max_versions_per_trigger: int | None = None,
     ):
-        from interop_datalake_spark.streaming.pacing import Pacer
-
-        self.root = Path(root)
-        self.schema_struct = schema  # declared StructType (picklable)
-        self.start_version = start_version
+        super().__init__(
+            root, schema, start_version, max_versions_per_trigger
+        )
         self.fingerprint = _schema_fingerprint(schema_string)
         self.partition_cols = partition_cols
+        # Spark's type names, not the log's JSON ones (integer, long)
         self.ptypes = {
-            f["name"]: (
-                f["type"] if isinstance(f["type"], str) else "string"
-            )
-            for f in json.loads(schema_string)["fields"]
-            if f["name"] in partition_cols
+            f.name: f.dataType.simpleString()
+            for f in schema.fields
+            if f.name in partition_cols
         }
-        #: rate limit — every micro-batch (the opener of a fresh or
-        #: restarted run included) spans at most this many commits;
-        #: streaming/pacing.py documents the measured call order
-        #: that seeds the base on both run shapes
-        self.max_versions_per_trigger = max_versions_per_trigger
-        self._pacer = Pacer(start_version)
         #: listing floor: the highest commit version known to exist.
         #: Seeded by ONE glob, then advanced by O(new commits)
         #: exists() probes per trigger — latestOffset stops listing
         #: the entire _delta_log every micro-batch (commit jsons are
         #: written contiguously by version, so probing head+1, head+2,
         #: … finds every new commit)
-        self._head: int | None = None
+        self._seen: int | None = None
 
-    def initialOffset(self) -> dict:
-        self._pacer.note(self.start_version)
-        return {"version": self.start_version}
-
-    def _latest_version(self) -> int:
+    def _head(self) -> int:
         log = self.root / "_delta_log"
-        if self._head is None:
-            versions = [
-                int(p.stem)
-                for p in log.glob("*.json")
-                if p.stem.isdigit()
-            ]
-            self._head = max(versions) if versions else self.start_version
-        v = self._head + 1
+        if self._seen is None:
+            self._seen = max(
+                (int(p.stem) for p in log.glob("*.json") if p.stem.isdigit()),
+                default=self.start,
+            )
+        v = self._seen + 1
         while (log / f"{v:020d}.json").exists():
-            self._head = v
+            self._seen = v
             v += 1
-        return self._head
-
-    def latestOffset(self) -> dict:
-        n = self.max_versions_per_trigger
-        return {
-            "version": self._pacer.advance(
-                self._latest_version(),
-                None if n is None else (lambda base: base + n),
-            )
-        }
-
-    def commit(self, end: dict) -> None:
-        pass  # commit jsons are immutable; Spark checkpoints progress
-
-    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        # restart replay reveals the checkpointed base BEFORE the
-        # first latestOffset (measured — streaming/pacing.py)
-        self._pacer.note(end["version"])
-        log = self.root / "_delta_log"
-        slices: list[InputPartition] = []
-        for v in range(start["version"] + 1, end["version"] + 1):
-            p = log / f"{v:020d}.json"
-            try:
-                text = p.read_text()
-            except FileNotFoundError:
-                raise ValueError(
-                    f"commit json for version {v} is gone — history "
-                    f"was expired by log cleanup; restart the stream "
-                    f"with starting_after_version at or past the "
-                    f"oldest retained commit"
-                )
-            for line in text.splitlines():
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "protocol" in action:
-                    # a mid-stream table upgrade (e.g. enabling
-                    # columnMapping) changes how later physical files
-                    # must be read — refuse like the batch reader's
-                    # schema-time gate instead of NULLing columns
-                    feats = (
-                        set(action["protocol"].get("readerFeatures")
-                            or [])
-                        - _STREAM_SAFE_READER_FEATURES
-                    )
-                    if feats:
-                        raise ValueError(
-                            f"version {v} upgrades the table to "
-                            f"reader features {sorted(feats)} this "
-                            f"streaming source does not implement — "
-                            f"read the table with the batch reader"
-                        )
-                elif "metaData" in action:
-                    md = action["metaData"]
-                    mode = (md.get("configuration") or {}).get(
-                        "delta.columnMapping.mode"
-                    )
-                    if mode and mode != "none":
-                        raise ValueError(
-                            f"version {v} sets delta.columnMapping."
-                            f"mode={mode!r} mid-stream — the executor "
-                            f"slices read physical parquet directly "
-                            f"and would silently NULL logical "
-                            f"columns; use the batch reader"
-                        )
-                    # HISTORICAL schemas (older, fewer columns) are
-                    # safe — their files null-fill through the
-                    # schema-on-read rule. Refuse only when a window
-                    # metaData carries (name, type) pairs the DECLARED
-                    # schema lacks: the table evolved after this
-                    # stream resolved its schema, and emitting those
-                    # files would silently drop or re-type columns.
-                    fp = _schema_fingerprint(md["schemaString"])
-                    extra = set(fp) - set(self.fingerprint)
-                    if extra:
-                        raise ValueError(
-                            f"table schema changed at version {v} "
-                            f"(new/retyped columns "
-                            f"{sorted(n for n, _ in extra)}) — "
-                            f"restart the stream to pick up the new "
-                            f"schema"
-                        )
-                elif "remove" in action:
-                    if action["remove"].get("dataChange", True):
-                        raise ValueError(
-                            f"version {v} removes data "
-                            f"({unquote(action['remove']['path'])}) — "
-                            f"a streaming append feed cannot express "
-                            f"retractions; use the delta_cdc stream "
-                            f"(read_delta_cdc_stream) or the batch "
-                            f"CDC reader (read_delta_changes)"
-                        )
-                elif "add" in action:
-                    a = action["add"]
-                    if not a.get("dataChange", True):
-                        continue  # compaction rewrite: no new rows
-                    if a.get("deletionVector"):
-                        raise ValueError(
-                            f"version {v} adds a deletion-vectored "
-                            f"file — its rows need a MOR anti-join; "
-                            f"use the delta_cdc stream or the batch "
-                            f"reader"
-                        )
-                    pv = a.get("partitionValues") or {}
-                    typed = {
-                        c: _typed_pv(pv.get(c), self.ptypes.get(c, ""))
-                        for c in self.partition_cols
-                    }
-                    slices.append(
-                        _DeltaSlice(
-                            str(self.root / unquote(a["path"])),
-                            v,
-                            typed,
-                        )
-                    )
-        return slices
-
-    def read(self, partition: _DeltaSlice):
-        from interop_datalake_spark.streaming.arrow_yield import (
-            arrow_batches,
-        )
-
-        yield from arrow_batches(
-            partition.path,
-            self.schema_struct,
-            {
-                **partition.part_values,
-                "_commit_version": partition.version,
-            },
-        )
-
-
-class DeltaAppendsDataSource(DataSource):
-    """``spark.readStream.format("delta_appends").option("path",
-    <table root>)`` — register with :func:`register_delta_source`.
-    Schema = the log's current logical schema (partition columns
-    included — they inject from add actions) +
-    ``_commit_version bigint``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return FORMAT_NAME
-
-    def _meta(self):
-        from interop_datalake_spark.lake.delta_interop import (
-            _replay_log,
-        )
-
-        path = self.options.get("path")
-        if not path:
-            raise ValueError(
-                "delta_appends source requires "
-                ".option('path', <table root>)"
-            )
-        meta, _ = _replay_log(path, None)
-        mode = (meta.get("configuration") or {}).get(
-            "delta.columnMapping.mode"
-        )
-        if mode and mode != "none":
-            raise ValueError(
-                f"delta.columnMapping.mode={mode!r}: the streaming "
-                f"source reads physical parquet directly and would "
-                f"silently NULL logical columns; read mapped tables "
-                f"with the batch reader (read_delta)"
-            )
-        return meta
-
-    def schema(self) -> str:
-        from pyspark.sql.types import StructType
-
-        meta = self._meta()
-        st = StructType.fromJson(json.loads(meta["schemaString"]))
-        parts = [
-            f"`{f.name}` {f.dataType.simpleString()}" for f in st.fields
-        ]
-        parts.append("`_commit_version` bigint")
-        return ", ".join(parts)
-
-    def streamReader(self, schema) -> DeltaStreamReader:
-        meta = self._meta()
-        mvpt = self.options.get("max_versions_per_trigger")
-        return DeltaStreamReader(
-            str(self.options["path"]),
-            schema,
-            int(self.options.get("starting_after_version", -1)),
-            meta["schemaString"],
-            list(meta.get("partitionColumns") or []),
-            int(mvpt) if mvpt is not None else None,
-        )
-
-
-CDC_FORMAT_NAME = "delta_cdc"
-
-
-class _CdcSlice(InputPartition):
-    """One unit of change data: a whole file tagged with a constant
-    change type (or a cdc file whose rows carry their own), or a
-    deletion-vector POSITION DIFF of one file (the DV-update commit
-    shape) — vectors decode on the EXECUTOR from their descriptors,
-    so the planner never materializes positions."""
-
-    def __init__(
-        self, root, path, version, ts_ms, part_values,
-        ctype=None, drop_desc=None, old_desc=None, new_desc=None,
-    ):
-        self.root = root
-        self.path = path
-        self.version = version
-        self.ts_ms = ts_ms
-        self.part_values = part_values
-        self.ctype = ctype          # None → cdc file carries its own
-        self.drop_desc = drop_desc  # DV to EXCLUDE (live rows only)
-        self.old_desc = old_desc    # diff mode: positions(new−old)
-        self.new_desc = new_desc    # (ctype=delete) / old−new (insert)
-
-
-class DeltaCdcStreamReader(DataSourceStreamReader):
-    """CDC micro-batches over a Delta log: each commit window emits
-    its change rows per the SAME per-commit semantics as the batch
-    :func:`~interop_datalake_spark.lake.delta_interop.
-    read_delta_changes` — cdc actions authoritative, else derived
-    from file actions (full-file insert/delete, DV position diffs).
-    This LIFTS the delta_appends source's retraction refusal: a
-    DELETE/UPDATE/MERGE commit streams as its delete/insert rows
-    instead of refusing."""
-
-    # offset/pacing machinery is identical to the appends reader —
-    # __init__ included (same signature, same attributes)
-    __init__ = DeltaStreamReader.__init__
-    initialOffset = DeltaStreamReader.initialOffset
-    _latest_version = DeltaStreamReader._latest_version
-    latestOffset = DeltaStreamReader.latestOffset
-    commit = DeltaStreamReader.commit
+        return self._seen
 
     def _typed(self, pv: dict | None) -> dict:
         pv = pv or {}
         return {
-            c: _typed_pv(pv.get(c), self.ptypes.get(c, ""))
+            c: typed_partition_value(pv.get(c), self.ptypes.get(c, ""))
             for c in self.partition_cols
         }
 
-    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        # the SAME per-commit parse as read_delta_changes — batch and
-        # streaming CDC must never drift on identical commits
+    def _commits(self, start: int, end: int):
+        """Yield ``(version, parse_cdc_commit result, json path)`` per
+        window commit — the SAME per-commit parse as the batch
+        ``read_delta_changes`` — after the checks both Delta streams
+        share: expired history, a mid-stream protocol upgrade, a
+        mid-stream ``columnMapping`` switch, and a schema the declared
+        one lacks."""
         from interop_datalake_spark.lake.delta_interop import (
             parse_cdc_commit,
         )
 
-        # restart replay reveals the checkpointed base BEFORE the
-        # first latestOffset (measured — streaming/pacing.py)
-        self._pacer.note(end["version"])
         log = self.root / "_delta_log"
-        slices: list[InputPartition] = []
-        for v in range(start["version"] + 1, end["version"] + 1):
+        for v in range(start + 1, end + 1):
             p = log / f"{v:020d}.json"
             try:
                 text = p.read_text()
@@ -448,6 +174,10 @@ class DeltaCdcStreamReader(DataSourceStreamReader):
                 )
             parsed = parse_cdc_commit(text)
             for proto in parsed["protocols"]:
+                # a mid-stream table upgrade (e.g. enabling
+                # columnMapping) changes how later physical files must
+                # be read — refuse like the batch reader's schema-time
+                # gate instead of NULLing columns
                 feats = (
                     set(proto.get("readerFeatures") or [])
                     - _STREAM_SAFE_READER_FEATURES
@@ -456,7 +186,8 @@ class DeltaCdcStreamReader(DataSourceStreamReader):
                     raise ValueError(
                         f"version {v} upgrades the table to reader "
                         f"features {sorted(feats)} this streaming "
-                        f"source does not implement"
+                        f"source does not implement — read the table "
+                        f"with the batch reader"
                     )
             for md in parsed["metas"]:
                 mode = (md.get("configuration") or {}).get(
@@ -465,48 +196,158 @@ class DeltaCdcStreamReader(DataSourceStreamReader):
                 if mode and mode != "none":
                     raise ValueError(
                         f"version {v} sets delta.columnMapping."
-                        f"mode={mode!r} mid-stream; use the "
+                        f"mode={mode!r} mid-stream — the executor "
+                        f"slices read physical parquet directly and "
+                        f"would silently NULL logical columns; use the "
                         f"batch reader"
                     )
-                extra = set(
-                    _schema_fingerprint(md["schemaString"])
-                ) - set(self.fingerprint)
+                # HISTORICAL schemas (older, fewer columns) are safe —
+                # their files null-fill through the schema-on-read
+                # rule. Refuse only when a window metaData carries
+                # (name, type) pairs the DECLARED schema lacks: the
+                # table evolved after this stream resolved its schema,
+                # and emitting those files would silently drop or
+                # re-type columns.
+                extra = set(_schema_fingerprint(md["schemaString"])) - set(
+                    self.fingerprint
+                )
                 if extra:
                     raise ValueError(
                         f"table schema changed at version {v} "
                         f"(new/retyped columns "
                         f"{sorted(n for n, _ in extra)}) — "
-                        f"restart the stream to pick up the new "
-                        f"schema"
+                        f"restart the stream to pick up the new schema"
                     )
-            cdc, adds, removes = (
-                parsed["cdc"], parsed["adds"], parsed["removes"],
+            yield v, parsed, p
+
+    def _plan(self, start: int, end: int) -> list[Slice]:
+        slices = []
+        for v, parsed, _ in self._commits(start, end):
+            if parsed["removes"]:
+                raise ValueError(
+                    f"version {v} removes data "
+                    f"({next(iter(parsed['removes']))}) — a streaming "
+                    f"append feed cannot express retractions; use the "
+                    f"delta_cdc stream (read_delta_cdc_stream) or the "
+                    f"batch CDC reader (read_delta_changes)"
+                )
+            for f, a in parsed["adds"].items():
+                if a.get("deletionVector"):
+                    raise ValueError(
+                        f"version {v} adds a deletion-vectored file — "
+                        f"its rows need a MOR anti-join; use the "
+                        f"delta_cdc stream or the batch reader"
+                    )
+                slices.append(
+                    Slice(
+                        str(self.root / f),
+                        {
+                            **self._typed(a.get("partitionValues")),
+                            "_commit_version": v,
+                        },
+                    )
+                )
+        return slices
+
+
+class DeltaAppendsDataSource(FeedSource):
+    """``spark.readStream.format("delta_appends").option("path",
+    <table root>)`` — register with :func:`register_delta_source`.
+    Schema = the log's current logical schema (partition columns
+    included — they inject from add actions) +
+    ``_commit_version bigint``."""
+
+    format_name = FORMAT_NAME
+    reader = DeltaStreamReader
+    start_option = "starting_after_version"
+    start_default = -1
+    tags = ("`_commit_version` bigint",)
+
+    def _meta(self):
+        from interop_datalake_spark.lake.delta_interop import (
+            _replay_log,
+        )
+
+        meta, _ = _replay_log(self._path(), None)
+        mode = (meta.get("configuration") or {}).get(
+            "delta.columnMapping.mode"
+        )
+        if mode and mode != "none":
+            raise ValueError(
+                f"delta.columnMapping.mode={mode!r}: the streaming "
+                f"source reads physical parquet directly and would "
+                f"silently NULL logical columns; read mapped tables "
+                f"with the batch reader (read_delta)"
             )
+        return meta
+
+    def _columns(self) -> list[str]:
+        from pyspark.sql.types import StructType
+
+        st = StructType.fromJson(json.loads(self._meta()["schemaString"]))
+        return [f"`{f.name}` {f.dataType.simpleString()}" for f in st.fields]
+
+    def _reader(self, path, schema, start, cap) -> DeltaStreamReader:
+        meta = self._meta()
+        return self.reader(
+            path,
+            schema,
+            start,
+            meta["schemaString"],
+            list(meta.get("partitionColumns") or []),
+            cap,
+        )
+
+
+class DeltaCdcStreamReader(DeltaStreamReader):
+    """CDC micro-batches over a Delta log: each commit window emits
+    its change rows per the SAME per-commit semantics as the batch
+    :func:`~interop_datalake_spark.lake.delta_interop.
+    read_delta_changes` — cdc actions authoritative, else derived
+    from file actions (full-file insert/delete, DV position diffs).
+    This LIFTS the delta_appends source's retraction refusal: a
+    DELETE/UPDATE/MERGE commit streams as its delete/insert rows
+    instead of refusing. Deletion vectors decode on the EXECUTOR from
+    their descriptors, so the planner never materializes positions."""
+
+    def _plan(self, start: int, end: int) -> list[Slice]:
+        from datetime import datetime, timezone
+
+        slices = []
+        for v, parsed, p in self._commits(start, end):
             ts_ms = parsed["ts_ms"]
             if ts_ms is None:
                 ts_ms = int(p.stat().st_mtime * 1000)
-            if cdc:
+            tags = {
+                "_commit_version": v,
+                "_commit_timestamp": datetime.fromtimestamp(
+                    ts_ms / 1000, tz=timezone.utc
+                ),
+            }
+
+            def change(f, pv, ctype=None, **deletes):
+                # ctype None: a cdc file whose rows carry their own
+                constants = {**self._typed(pv), **tags}
+                if ctype is not None:
+                    constants["_change_type"] = ctype
+                return Slice(str(self.root / f), constants, **deletes)
+
+            if parsed["cdc"]:
                 slices += [
-                    _CdcSlice(
-                        str(self.root),
-                        str(self.root / unquote(c["path"])),
-                        v, ts_ms,
-                        self._typed(c.get("partitionValues")),
-                    )
-                    for c in cdc
+                    change(unquote(c["path"]), c.get("partitionValues"))
+                    for c in parsed["cdc"]
                 ]
                 continue
-            paired = set(adds) & set(removes)
+            adds, removes = parsed["adds"], parsed["removes"]
+            paired = [f for f in adds if f in removes]
             for f, a in adds.items():
-                if f in paired:
-                    continue
-                slices.append(_CdcSlice(
-                    str(self.root), str(self.root / f), v, ts_ms,
-                    self._typed(a.get("partitionValues")),
-                    ctype="insert", drop_desc=a.get("deletionVector"),
-                ))
+                if f not in removes:
+                    slices.append(change(
+                        f, a.get("partitionValues"), "insert",
+                        drop=a.get("deletionVector"),
+                    ))
             for f, r in removes.items():
-                if f in paired:
+                if f in adds:
                     continue
                 pv = r.get("partitionValues")
                 if self.partition_cols and pv is None:
@@ -516,131 +357,48 @@ class DeltaCdcStreamReader(DataSourceStreamReader):
                         f"table — its deleted rows' partition columns "
                         f"cannot be reconstructed"
                     )
-                slices.append(_CdcSlice(
-                    str(self.root), str(self.root / f), v, ts_ms,
-                    self._typed(pv),
-                    ctype="delete", drop_desc=r.get("deletionVector"),
+                slices.append(change(
+                    f, pv, "delete", drop=r.get("deletionVector"),
                 ))
             for f in paired:
-                old_desc = removes[f].get("deletionVector")
-                new_desc = adds[f].get("deletionVector")
-                if old_desc is None and new_desc is None:
+                old = removes[f].get("deletionVector")
+                new = adds[f].get("deletionVector")
+                if old is None and new is None:
                     # remove+add of the same file with no vectors on
-                    # either side: the position diff is empty, so the
-                    # commit changed no rows of this file. The batch
-                    # reader (read_delta_changes) emits nothing here;
-                    # without this skip the slices below would fall
-                    # through read()'s ctype branch and emit the whole
-                    # file as delete+insert — batch/stream drift.
+                    # either side changed no rows of it; the batch
+                    # reader emits nothing here either
                     continue
-                common = dict(
-                    root=str(self.root),
-                    path=str(self.root / f),
-                    version=v,
-                    ts_ms=ts_ms,
-                    part_values=self._typed(
-                        adds[f].get("partitionValues")
-                    ),
-                    old_desc=old_desc,
-                    new_desc=new_desc,
-                )
-                slices.append(_CdcSlice(**common, ctype="delete"))
-                slices.append(_CdcSlice(**common, ctype="insert"))
+                pv = adds[f].get("partitionValues")
+                slices.append(change(f, pv, "delete", diff=(old, new)))
+                slices.append(change(f, pv, "insert", diff=(new, old)))
         return slices
 
-    def read(self, partition: _CdcSlice):
-        from datetime import datetime, timezone
+    def _positions(self, desc):
+        import numpy as np
 
-        from interop_datalake_spark.streaming.arrow_yield import (
-            arrow_batches,
+        from interop_datalake_spark.lake.delta_dv import (
+            load_dv_row_indexes,
         )
 
-        s = partition
-        constants = {
-            **s.part_values,
-            "_commit_version": s.version,
-            "_commit_timestamp": datetime.fromtimestamp(
-                s.ts_ms / 1000, tz=timezone.utc
-            ),
-        }
-        keep = drop = None
-        if s.old_desc is not None or s.new_desc is not None:
-            # DV position diff, decoded HERE on the executor
-            import numpy as np
-
-            from interop_datalake_spark.lake.delta_dv import (
-                load_dv_row_indexes,
-            )
-
-            def pos(d):
-                return np.asarray(
-                    load_dv_row_indexes(s.root, d) if d else [],
-                    dtype=np.int64,
-                )
-
-            old, new = pos(s.old_desc), pos(s.new_desc)
-            keep = (
-                np.setdiff1d(new, old)
-                if s.ctype == "delete"
-                else np.setdiff1d(old, new)
-            )
-            if len(keep) == 0:
-                return
-        elif s.drop_desc is not None:
-            from interop_datalake_spark.lake.delta_dv import (
-                load_dv_row_indexes,
-            )
-
-            drop = load_dv_row_indexes(s.root, s.drop_desc)
-        if s.ctype is not None:
-            constants["_change_type"] = s.ctype
-        yield from arrow_batches(
-            s.path,
-            self.schema_struct,
-            constants,
-            keep_positions=keep,
-            drop_positions=drop,
+        return np.asarray(
+            load_dv_row_indexes(str(self.root), desc) if desc else [],
+            dtype=np.int64,
         )
 
 
-class DeltaCdcDataSource(DataSource):
+class DeltaCdcDataSource(DeltaAppendsDataSource):
     """``spark.readStream.format("delta_cdc").option("path", <table
     root>)`` — register with :func:`register_delta_source`. Schema =
     the log's current logical schema + ``_change_type string`` +
     ``_commit_version bigint`` + ``_commit_timestamp timestamp``."""
 
-    @classmethod
-    def name(cls) -> str:
-        return CDC_FORMAT_NAME
-
-    _meta = DeltaAppendsDataSource._meta
-
-    def schema(self) -> str:
-        from pyspark.sql.types import StructType
-
-        meta = self._meta()
-        st = StructType.fromJson(json.loads(meta["schemaString"]))
-        parts = [
-            f"`{f.name}` {f.dataType.simpleString()}" for f in st.fields
-        ]
-        parts += [
-            "`_change_type` string",
-            "`_commit_version` bigint",
-            "`_commit_timestamp` timestamp",
-        ]
-        return ", ".join(parts)
-
-    def streamReader(self, schema) -> DeltaCdcStreamReader:
-        meta = self._meta()
-        mvpt = self.options.get("max_versions_per_trigger")
-        return DeltaCdcStreamReader(
-            str(self.options["path"]),
-            schema,
-            int(self.options.get("starting_after_version", -1)),
-            meta["schemaString"],
-            list(meta.get("partitionColumns") or []),
-            int(mvpt) if mvpt is not None else None,
-        )
+    format_name = CDC_FORMAT_NAME
+    reader = DeltaCdcStreamReader
+    tags = (
+        "`_change_type` string",
+        "`_commit_version` bigint",
+        "`_commit_timestamp` timestamp",
+    )
 
 
 def register_delta_source(spark) -> None:
@@ -648,26 +406,6 @@ def register_delta_source(spark) -> None:
     streaming formats."""
     spark.dataSource.register(DeltaAppendsDataSource)
     spark.dataSource.register(DeltaCdcDataSource)
-
-
-def _delta_stream_reader(
-    spark,
-    fmt: str,
-    path: str,
-    starting_after_version: int,
-    max_versions_per_trigger: int | None,
-):
-    register_delta_source(spark)
-    reader = (
-        spark.readStream.format(fmt)
-        .option("path", path)
-        .option("starting_after_version", starting_after_version)
-    )
-    if max_versions_per_trigger is not None:
-        reader = reader.option(
-            "max_versions_per_trigger", max_versions_per_trigger
-        )
-    return reader.load()
 
 
 def read_delta_stream(
@@ -685,8 +423,8 @@ def read_delta_stream(
     catch-up over a long history drains in bounded hops instead of one
     giant batch; use a processing-time trigger for throttled catch-up
     (streaming/pacing.py)."""
-    return _delta_stream_reader(
-        spark, FORMAT_NAME, path, starting_after_version,
+    return _stream(
+        spark, DeltaAppendsDataSource, path, starting_after_version,
         max_versions_per_trigger,
     )
 
@@ -704,7 +442,7 @@ def read_delta_cdc_stream(
     ``_change_type`` rows instead of refusing.
     ``max_versions_per_trigger`` bounds every micro-batch's commit
     span, exactly as in :func:`read_delta_stream`."""
-    return _delta_stream_reader(
-        spark, CDC_FORMAT_NAME, path, starting_after_version,
+    return _stream(
+        spark, DeltaCdcDataSource, path, starting_after_version,
         max_versions_per_trigger,
     )

@@ -36,13 +36,15 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
+from interop_datalake_spark.streaming.feed import (
+    FeedReader,
+    FeedSource,
+    Slice,
+    _stream,
 )
 
 FORMAT_NAME = "iceberg_appends"
+CDC_FORMAT_NAME = "iceberg_cdc"
 
 
 def _interop():
@@ -75,267 +77,158 @@ def _schema_fields(meta: dict) -> list[dict]:
     return schema["fields"]
 
 
-class _IcebergSlice(InputPartition):
-    def __init__(self, path, snapshot_id, part_values):
-        self.path = path
-        self.snapshot_id = snapshot_id
-        self.part_values = part_values  # {col: python value}
+def _projector(meta: dict):
+    """``(data_file record, partition spec id) → {column: typed
+    value}`` through the ONE shared projection site (refuses
+    unmappable identity types loudly)."""
+    ids_to_type = {f["id"]: f["type"] for f in _schema_fields(meta)}
+    specs = {s["spec-id"]: s["fields"] for s in meta["partition-specs"]}
+    return lambda dfr, spec_id: _interop()._entry_partition_values(
+        None, dfr, specs.get(spec_id, []), ids_to_type
+    )
 
 
-class IcebergStreamReader(DataSourceStreamReader):
-    def __init__(
-        self,
-        root: str,
-        schema,
-        start_seq: int,
-        max_snapshots_per_trigger: int | None = None,
-    ):
-        from interop_datalake_spark.streaming.pacing import Pacer
+class IcebergStreamReader(FeedReader):
+    """Offsets are sequence numbers; the per-trigger cap counts
+    retained SNAPSHOTS, not raw sequence numbers — numbers burned by
+    failed commits never had data, and counting them would silently
+    shrink batches."""
 
-        self.root = Path(root)
-        self.schema_struct = schema  # declared StructType (picklable)
-        self.field_names = [f.name for f in schema.fields]
-        self.start_seq = start_seq
-        #: rate limit — every micro-batch (the opener of a fresh or
-        #: restarted run included) covers at most this many SNAPSHOTS.
-        #: The cap counts retained snapshots, not raw sequence
-        #: numbers: sequence numbers burned by failed commits never
-        #: had data, and counting them would silently shrink batches.
-        #: streaming/pacing.py documents the measured call order that
-        #: seeds the base on both run shapes.
-        self.max_snapshots_per_trigger = max_snapshots_per_trigger
-        self._pacer = Pacer(start_seq)
+    key = "seq"
 
-    def initialOffset(self) -> dict:
-        self._pacer.note(self.start_seq)
-        return {"seq": self.start_seq}
-
-    def latestOffset(self) -> dict:
+    def _head(self) -> int:
         meta = _load_meta(self.root)
-        latest = int(meta.get("last-sequence-number") or 0)
-        n = self.max_snapshots_per_trigger
-        if n is None:
-            cap = None
-        else:
-            def cap(base: int) -> int:
-                seqs = sorted(
-                    int(s["sequence-number"])
-                    for s in (meta.get("snapshots") or [])
-                    if int(s["sequence-number"]) > base
-                )
-                return seqs[n - 1] if len(seqs) >= n else latest
+        self._latest = int(meta.get("last-sequence-number") or 0)
+        self._seqs = sorted(
+            int(s["sequence-number"]) for s in meta.get("snapshots") or []
+        )
+        return self._latest
 
-        return {"seq": self._pacer.advance(latest, cap)}
+    def _cap(self, base: int, n: int) -> int:
+        later = [s for s in self._seqs if s > base]
+        return later[n - 1] if len(later) >= n else self._latest
 
-    def commit(self, end: dict) -> None:
-        pass  # snapshots are immutable; Spark's checkpoint is progress
-
-    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        from interop_datalake_spark.lake.avro_read import read_avro_file
-
-        # restart replay reveals the checkpointed base BEFORE the
-        # first latestOffset (measured — streaming/pacing.py)
-        self._pacer.note(end["seq"])
-
+    def _window(self, start: int, end: int) -> tuple[dict, list[dict]]:
+        """The current metadata and the window's snapshots oldest
+        first, after the expiry guard: a maintenance job's
+        expireSnapshots removes snapshots from metadata, and silently
+        skipping their sequence numbers would permanently lose their
+        rows on resume. Refuse when the window starts before the
+        oldest RETAINED snapshot (Iceberg's own incremental read
+        refuses expired from-snapshots the same way) — unless the
+        stream is FRESH (start is the configured initial offset) and
+        the metadata holds no proof of expiry: then the missing head
+        sequence numbers may simply have been burned by failed
+        commits, which never had a snapshot or data. The repo's own
+        expireSnapshots records the expired ids in
+        ``txn.expired-snapshot-ids``; a resumed stream's checkpoint
+        proves the missing range once existed and was consumable."""
         meta = _load_meta(self.root)
-        fields = _schema_fields(meta)
-        ids_to_type = {f["id"]: f["type"] for f in fields}
-        specs = {
-            s["spec-id"]: s["fields"] for s in meta["partition-specs"]
-        }
         snaps = meta.get("snapshots") or []
-        # expiry guard (round-10 review): a maintenance job's
-        # expireSnapshots removes snapshots from metadata — silently
-        # skipping their sequence numbers would permanently lose their
-        # rows on resume. Refuse when the window starts before the
-        # oldest RETAINED snapshot (Iceberg's own incremental read
-        # refuses expired from-snapshots the same way). Sequence
-        # numbers consumed by failed commits never had a snapshot or
-        # data, so in-history gaps are safe to skip.
-        if start["seq"] < end["seq"]:
-            retained = [s["sequence-number"] for s in snaps]
-            if not retained or start["seq"] + 1 < min(retained):
-                # round-11 advice: a FRESH stream (nothing consumed
-                # yet — start IS the configured initial offset) over a
-                # table whose oldest retained snapshot has seq >
-                # start+1 may simply have head sequence numbers burned
-                # by failed commits, which never had a snapshot or
-                # data — permanently refusing it misses nothing. But
-                # when the metadata PROVES snapshots were expired (the
-                # repo's own expireSnapshots records their ids in
-                # txn.expired-snapshot-ids), a stream from before them
-                # WOULD silently lose their increments — still refuse.
-                # Resumed streams (start advanced past the initial
-                # offset) always refuse: their checkpoint proves the
-                # missing range once existed and was consumable.
-                expired_evidence = json.loads(
-                    (meta.get("properties") or {}).get(
-                        "txn.expired-snapshot-ids", "[]"
-                    )
+        retained = [s["sequence-number"] for s in snaps]
+        if start < end and (not retained or start + 1 < min(retained)):
+            expired_evidence = json.loads(
+                (meta.get("properties") or {}).get(
+                    "txn.expired-snapshot-ids", "[]"
                 )
-                if (
-                    start["seq"] != self.start_seq
-                    or expired_evidence
-                ):
-                    raise ValueError(
-                        f"offset window ({start['seq']}, "
-                        f"{end['seq']}] begins before the oldest "
-                        f"retained snapshot (seq "
-                        f"{min(retained) if retained else 'none'}) — "
-                        f"history was expired; restart the stream "
-                        f"from a retained sequence number"
-                    )
+            )
+            if start != self.start or expired_evidence:
+                raise ValueError(
+                    f"offset window ({start}, {end}] begins before "
+                    f"the oldest retained snapshot (seq "
+                    f"{min(retained) if retained else 'none'}) — "
+                    f"history was expired; restart the stream from a "
+                    f"retained sequence number"
+                )
         window = sorted(
-            (
-                s
-                for s in snaps
-                if start["seq"] < s["sequence-number"] <= end["seq"]
-            ),
+            (s for s in snaps if start < s["sequence-number"] <= end),
             key=lambda s: s["sequence-number"],
         )
-        slices: list[InputPartition] = []
+        return meta, window
+
+    def _plan(self, start: int, end: int) -> list[Slice]:
+        from interop_datalake_spark.lake.avro_read import read_avro_file
+
+        meta, window = self._window(start, end)
+        project = _projector(meta)
+        slices = []
         for snap in window:
+            sid = snap["snapshot-id"]
             op = (snap.get("summary") or {}).get("operation")
             if op != "append":
                 raise ValueError(
-                    f"snapshot {snap['snapshot-id']} is a {op!r} "
-                    f"operation — a streaming append feed cannot "
-                    f"express its delta as added rows; use the batch "
-                    f"CDC mode (read_iceberg_changes("
-                    f"include_deletes=True)) instead"
+                    f"snapshot {sid} is a {op!r} operation — a "
+                    f"streaming append feed cannot express its delta "
+                    f"as added rows; use the batch CDC mode "
+                    f"(read_iceberg_changes(include_deletes=True)) "
+                    f"instead"
                 )
-            ml, _ = read_avro_file(
-                _uri_path(str(snap["manifest-list"]))
-            )
+            ml, _ = read_avro_file(_uri_path(str(snap["manifest-list"])))
             for mf in ml:
-                mf_seq = int(mf.get("sequence_number") or 0)
-                added_by = mf.get("added_snapshot_id")
                 if (mf.get("content") or 0) == 1:
                     # a delete manifest ADDED by this snapshot means
                     # new delete files (manifest-list row metadata —
                     # no decode needed); carried ones can't affect
                     # this snapshot's adds under the sequence rule
-                    if mf_seq >= snap["sequence-number"]:
+                    if int(mf.get("sequence_number") or 0) >= snap[
+                        "sequence-number"
+                    ]:
                         raise ValueError(
-                            f"snapshot {snap['snapshot-id']} adds "
-                            f"delete files — use the batch CDC "
-                            f"mode for retractions"
+                            f"snapshot {sid} adds delete files — use "
+                            f"the batch CDC mode for retractions"
                         )
                     continue
                 # entries added by S can only live in manifests
                 # WRITTEN at S — skipping carried manifests before
                 # decoding keeps each micro-batch O(new manifests),
                 # not O(all manifests since table creation)
-                # (round-10 review)
-                if added_by is None or int(added_by) != snap[
-                    "snapshot-id"
-                ]:
+                added_by = mf.get("added_snapshot_id")
+                if added_by is None or int(added_by) != sid:
                     continue
                 entries, _m = read_avro_file(
                     _uri_path(str(mf["manifest_path"]))
                 )
-                spec_fields = specs.get(mf.get("partition_spec_id"), [])
                 for e in entries:
-                    if e.get("status") == 2:
-                        continue
-                    sid = e.get("snapshot_id")
-                    if sid is not None and int(sid) != snap[
-                        "snapshot-id"
-                    ]:
-                        continue  # older entry folded into this manifest
+                    esid = e.get("snapshot_id")
+                    if e.get("status") == 2 or (
+                        esid is not None and int(esid) != sid
+                    ):
+                        continue  # deleted, or an older entry folded in
                     dfr = e["data_file"]
-                    # the ONE shared projection site (typed values;
-                    # refuses unmappable identity types loudly)
-                    pvals = _interop()._entry_partition_values(
-                        None, dfr, spec_fields, ids_to_type
-                    )
+                    pvals = project(dfr, mf.get("partition_spec_id"))
                     slices.append(
-                        _IcebergSlice(
+                        Slice(
                             _uri_path(str(dfr["file_path"])),
-                            snap["snapshot-id"],
-                            pvals,
+                            {**pvals, "_snapshot_id": sid},
                         )
                     )
         return slices
 
-    def read(self, partition: _IcebergSlice):
-        # vectorized Arrow path (round-11, closes the round-10 weak
-        # flag): RecordBatches shaped like the declared schema.
-        # Columns added after this file was written are absent from
-        # its footer — NULL-filled (the schema-on-read rule the batch
-        # readers apply). Identity partition columns always come from
-        # the manifest, even when a foreign writer also materialized
-        # them in the file (the spec's Column Projection rule).
-        from interop_datalake_spark.streaming.arrow_yield import (
-            arrow_batches,
-        )
 
-        yield from arrow_batches(
-            partition.path,
-            self.schema_struct,
-            {
-                **partition.part_values,
-                "_snapshot_id": partition.snapshot_id,
-            },
-        )
-
-    def _read_rows(self, partition: _IcebergSlice):
-        """The pre-round-11 per-row tuple path, kept ONLY as the
-        equality witness for the vectorized path
-        (tests/test_stream_vectorized.py); production ``read()``
-        never calls it."""
-        import pyarrow.parquet as pq
-
-        data_cols = [
-            n
-            for n in self.field_names
-            if n not in partition.part_values and n != "_snapshot_id"
-        ]
-        avail = set(pq.read_schema(partition.path).names)
-        present = [n for n in data_cols if n in avail]
-        table = pq.read_table(partition.path, columns=present)
-        col_lists = {n: table.column(n).to_pylist() for n in present}
-        for i in range(table.num_rows):
-            # assemble in FIELD order — partition columns can sit
-            # anywhere in the Iceberg schema, not just at the end
-            yield tuple(
-                partition.snapshot_id
-                if name == "_snapshot_id"
-                else partition.part_values.get(name)
-                if name in partition.part_values
-                else (col_lists[name][i] if name in col_lists else None)
-                for name in self.field_names
-            )
-
-
-class IcebergAppendsDataSource(DataSource):
+class IcebergAppendsDataSource(FeedSource):
     """``spark.readStream.format("iceberg_appends").option("path",
     <table root>)`` — register with :func:`register_iceberg_source`.
     Schema = the current Iceberg schema's columns (identity-partition
     columns included — they inject from manifests) +
     ``_snapshot_id bigint``."""
 
-    @classmethod
-    def name(cls) -> str:
-        return FORMAT_NAME
+    format_name = FORMAT_NAME
+    reader = IcebergStreamReader
+    start_option = "starting_after_sequence"
+    cap_option = "max_snapshots_per_trigger"
+    tags = ("`_snapshot_id` bigint",)
 
-    def schema(self) -> str:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError(
-                "iceberg_appends source requires "
-                ".option('path', <table root>)"
-            )
-        meta = _load_meta(Path(path))
-        if int(meta.get("format-version") or 1) != 2:
+    def _columns(self) -> list[str]:
+        meta = _load_meta(Path(self._path()))
+        if int(meta.get("format-version") or 1) < 2:
             raise ValueError(
                 "this streaming source requires Iceberg format-version "
-                "2: v1 tables have no sequence numbers to use as "
-                "offsets (round-10 review: a v1 table would otherwise "
-                "stream as silently empty forever); read v1 tables "
-                "with the batch reader"
+                "2+: v1 tables have no sequence numbers to use as "
+                "offsets (a v1 table would otherwise stream as "
+                "silently empty forever); read v1 tables with the "
+                "batch reader"
             )
-        parts = []
+        cols = []
         for f in _schema_fields(meta):
             t = f["type"]
             if isinstance(t, dict):
@@ -345,20 +238,8 @@ class IcebergAppendsDataSource(DataSource):
                     f"primitive-only; read nested tables with "
                     f"read_iceberg"
                 )
-            parts.append(
-                f"`{f['name']}` {_interop()._spark_type_of(t)}"
-            )
-        parts.append("`_snapshot_id` bigint")
-        return ", ".join(parts)
-
-    def streamReader(self, schema) -> IcebergStreamReader:
-        mspt = self.options.get("max_snapshots_per_trigger")
-        return IcebergStreamReader(
-            str(self.options["path"]),
-            schema,
-            int(self.options.get("starting_after_sequence", 0)),
-            int(mspt) if mspt is not None else None,
-        )
+            cols.append(f"`{f['name']}` {_interop()._spark_type_of(t)}")
+        return cols
 
 
 def register_iceberg_source(spark) -> None:
@@ -366,26 +247,6 @@ def register_iceberg_source(spark) -> None:
     streaming formats."""
     spark.dataSource.register(IcebergAppendsDataSource)
     spark.dataSource.register(IcebergCdcDataSource)
-
-
-def _iceberg_stream_reader(
-    spark,
-    fmt: str,
-    path: str,
-    starting_after_sequence: int,
-    max_snapshots_per_trigger: int | None,
-):
-    register_iceberg_source(spark)
-    reader = (
-        spark.readStream.format(fmt)
-        .option("path", path)
-        .option("starting_after_sequence", starting_after_sequence)
-    )
-    if max_snapshots_per_trigger is not None:
-        reader = reader.option(
-            "max_snapshots_per_trigger", max_snapshots_per_trigger
-        )
-    return reader.load()
 
 
 def read_iceberg_stream(
@@ -402,43 +263,13 @@ def read_iceberg_stream(
     snapshots, so catch-up over a long history drains in bounded hops
     instead of one giant batch; use a processing-time trigger for
     throttled catch-up (streaming/pacing.py)."""
-    return _iceberg_stream_reader(
-        spark, FORMAT_NAME, path, starting_after_sequence,
+    return _stream(
+        spark, IcebergAppendsDataSource, path, starting_after_sequence,
         max_snapshots_per_trigger,
     )
 
 
 # -- iceberg_cdc: the changelog readStream -----------------------------------
-
-CDC_FORMAT_NAME = "iceberg_cdc"
-
-
-class _IcebergCdcSlice(InputPartition):
-    """One data file's contribution to one window snapshot's change
-    set. ``mode``: 'insert' (file added — ``drop_specs`` = deletes
-    already applying at the snapshot, so rows killed within their own
-    snapshot never surface), 'delete' (file dropped — ``drop_specs``
-    = the PARENT's deletes, so only parent-live rows emit), or 'diff'
-    (file live at both with a changed delete state — executor emits
-    positions(new) ∖ positions(old) as deletes and REFUSES a
-    shrinking set, the batch reader's cumulative rule). Delete-source
-    specs are ('parquet', path) — a v2 position-delete parquet the
-    executor filters to this file's URI — or ('puffin', path, offset,
-    size) — a v3 DV blob."""
-
-    def __init__(
-        self, path, uri, snapshot_id, seq, ts_ms, part_values, mode,
-        old_specs=(), new_specs=(),
-    ):
-        self.path = path
-        self.uri = uri
-        self.snapshot_id = snapshot_id
-        self.seq = seq
-        self.ts_ms = ts_ms
-        self.part_values = part_values
-        self.mode = mode
-        self.old_specs = tuple(old_specs)
-        self.new_specs = tuple(new_specs)
 
 
 def _live_state(meta: dict, snap: dict):
@@ -526,11 +357,13 @@ def _live_state(meta: dict, snap: dict):
 def _specs_for(dels: list[dict], uri: str, data_seq: int) -> tuple:
     """The delete-source specs applying to a data file: position
     deletes apply at delete_seq >= data_seq (the v2 rule); DV entries
-    only when they reference the file, path-keyed parquet always (the
-    executor filters by URI)."""
+    only when they reference the file, path-keyed parquet always —
+    carrying the file's URI, which the executor filters them by. A
+    spec is ('parquet', delete path, data file URI) or ('puffin',
+    path, offset, size) — a v3 DV blob."""
     return tuple(
         sorted(
-            d["spec"]
+            d["spec"] + ((uri,) if d["ref"] is None else ())
             for d in dels
             if d["seq"] >= data_seq
             and (d["ref"] is None or d["ref"] == uri)
@@ -538,67 +371,31 @@ def _specs_for(dels: list[dict], uri: str, data_seq: int) -> tuple:
     )
 
 
-class IcebergCdcStreamReader(DataSourceStreamReader):
+class IcebergCdcStreamReader(IcebergStreamReader):
     """The changelog twin of :class:`IcebergStreamReader` — per
     window snapshot, DIFF against its parent exactly like the batch
     ``read_iceberg_changes(include_deletes=True)`` (the two must
     never drift on identical histories): added files stream as
-    inserts (same-snapshot deletes folded out), dropped files stream
-    their PARENT-live rows as deletes, and a live file whose delete
-    state changed streams the position DIFF as deletes (a shrinking
-    set — a restore — refuses with the batch's cumulative rule).
-    Deletion positions resolve on EXECUTORS (parquet filter or
-    Puffin blob decode per slice); the planner stays
-    manifest-scale."""
+    inserts (deletes already applying at the snapshot dropped, so
+    rows killed within their own snapshot never surface), dropped
+    files stream their PARENT-live rows as deletes, and a live file
+    whose delete state changed streams the position DIFF as deletes
+    (a shrinking set — a restore — refuses with the batch's
+    cumulative rule). Deletion positions resolve on EXECUTORS
+    (parquet filter or Puffin blob decode per slice); the planner
+    stays manifest-scale."""
 
-    # offset/pacing machinery is identical to the appends reader
-    # (field_names is unused here but harmless)
-    __init__ = IcebergStreamReader.__init__
-    initialOffset = IcebergStreamReader.initialOffset
-    latestOffset = IcebergStreamReader.latestOffset
-    commit = IcebergStreamReader.commit
+    def _plan(self, start: int, end: int) -> list[Slice]:
+        from datetime import datetime, timezone
 
-    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        # restart replay reveals the checkpointed base BEFORE the
-        # first latestOffset (measured — streaming/pacing.py)
-        self._pacer.note(end["seq"])
-        meta = _load_meta(self.root)
-        fields = _schema_fields(meta)
-        ids_to_type = {f["id"]: f["type"] for f in fields}
-        specs = {
-            s["spec-id"]: s["fields"] for s in meta["partition-specs"]
-        }
+        meta, window = self._window(start, end)
+        project = _projector(meta)
         snaps = meta.get("snapshots") or []
-        if start["seq"] < end["seq"]:
-            retained = [s["sequence-number"] for s in snaps]
-            if not retained or start["seq"] + 1 < min(retained):
-                expired_evidence = json.loads(
-                    (meta.get("properties") or {}).get(
-                        "txn.expired-snapshot-ids", "[]"
-                    )
-                )
-                if start["seq"] != self.start_seq or expired_evidence:
-                    raise ValueError(
-                        f"offset window ({start['seq']}, "
-                        f"{end['seq']}] begins before the oldest "
-                        f"retained snapshot — history was expired; "
-                        f"restart the stream from a retained "
-                        f"sequence number"
-                    )
         by_id = {s["snapshot-id"]: s for s in snaps}
         order = [
             s["snapshot-id"]
             for s in sorted(snaps, key=lambda s: s["sequence-number"])
         ]
-        window = sorted(
-            (
-                s
-                for s in snaps
-                if start["seq"] < s["sequence-number"] <= end["seq"]
-            ),
-            key=lambda s: s["sequence-number"],
-        )
-        slices: list[InputPartition] = []
         state_cache: dict[int, tuple] = {}
 
         def state_of(sid):
@@ -606,149 +403,87 @@ class IcebergCdcStreamReader(DataSourceStreamReader):
                 state_cache[sid] = _live_state(meta, by_id[sid])
             return state_cache[sid]
 
+        slices = []
         for snap in window:
             sid = snap["snapshot-id"]
-            seq = int(snap["sequence-number"])
             parent_id = snap.get("parent-snapshot-id")
             if parent_id not in by_id:
                 idx = order.index(sid)
                 parent_id = order[idx - 1] if idx > 0 else None
             s_data, s_dels = state_of(sid)
-            if parent_id is not None:
-                p_data, p_dels = state_of(parent_id)
-            else:
-                p_data, p_dels = {}, []
-            ts_ms = int(snap.get("timestamp-ms") or 0)
+            p_data, p_dels = (
+                state_of(parent_id) if parent_id is not None else ({}, [])
+            )
+            tags = {
+                "_snapshot_id": sid,
+                "_sequence_number": int(snap["sequence-number"]),
+                "_commit_timestamp": datetime.fromtimestamp(
+                    int(snap.get("timestamp-ms") or 0) / 1000,
+                    tz=timezone.utc,
+                ),
+            }
 
-            def pv_of(info):
-                return _interop()._entry_partition_values(
-                    None,
-                    info["dfr"],
-                    specs.get(info["spec_id"], []),
-                    ids_to_type,
+            def change(uri, info, ctype, **deletes):
+                pvals = project(info["dfr"], info["spec_id"])
+                return Slice(
+                    _uri_path(uri),
+                    {**pvals, "_change_type": ctype, **tags},
+                    **deletes,
                 )
 
             for uri, info in s_data.items():
-                new_specs = _specs_for(s_dels, uri, info["seq"])
+                new = _specs_for(s_dels, uri, info["seq"])
                 if uri not in p_data:
-                    slices.append(
-                        _IcebergCdcSlice(
-                            _uri_path(uri), uri, sid, seq, ts_ms,
-                            pv_of(info), "insert",
-                            new_specs=new_specs,
-                        )
-                    )
+                    slices.append(change(uri, info, "insert", drop=new))
                     continue
-                old_specs = _specs_for(
-                    p_dels, uri, p_data[uri]["seq"]
-                )
-                if old_specs != new_specs:
+                old = _specs_for(p_dels, uri, p_data[uri]["seq"])
+                if old != new:
                     slices.append(
-                        _IcebergCdcSlice(
-                            _uri_path(uri), uri, sid, seq, ts_ms,
-                            pv_of(info), "diff",
-                            old_specs=old_specs,
-                            new_specs=new_specs,
-                        )
+                        change(uri, info, "delete", diff=(old, new))
                     )
             for uri, info in p_data.items():
-                if uri in s_data:
-                    continue
-                slices.append(
-                    _IcebergCdcSlice(
-                        _uri_path(uri), uri, sid, seq, ts_ms,
-                        pv_of(info), "delete",
-                        old_specs=_specs_for(p_dels, uri, info["seq"]),
-                    )
-                )
+                if uri not in s_data:
+                    old = _specs_for(p_dels, uri, info["seq"])
+                    slices.append(change(uri, info, "delete", drop=old))
         return slices
 
-    def read(self, partition: _IcebergCdcSlice):
-        from datetime import datetime, timezone
-
+    def _positions(self, specs):
         import numpy as np
 
-        from interop_datalake_spark.streaming.arrow_yield import (
-            arrow_batches,
-        )
-
-        s = partition
-
-        def positions(spec_set) -> "np.ndarray":
-            out = []
-            for spec in spec_set:
-                if spec[0] == "puffin":
-                    from interop_datalake_spark.lake.puffin import (
-                        read_puffin_dv,
-                    )
-
-                    out.append(
-                        np.asarray(
-                            read_puffin_dv(spec[1], spec[2], spec[3]),
-                            dtype=np.int64,
-                        )
-                    )
-                else:
-                    import pyarrow.compute as pc
-                    import pyarrow.parquet as pq
-
-                    t = pq.read_table(
-                        spec[1], columns=["file_path", "pos"]
-                    )
-                    t = t.filter(
-                        pc.equal(t.column("file_path"), s.uri)
-                    )
-                    out.append(
-                        np.asarray(
-                            t.column("pos").to_pylist(),
-                            dtype=np.int64,
-                        )
-                    )
-            if not out:
-                return np.empty(0, dtype=np.int64)
-            return np.unique(np.concatenate(out))
-
-        keep = drop = None
-        ctype = s.mode
-        if s.mode == "diff":
-            old, new = positions(s.old_specs), positions(s.new_specs)
-            restored = np.setdiff1d(old, new)
-            if len(restored):
-                raise ValueError(
-                    f"delete state for {s.uri} SHRANK at snapshot "
-                    f"{s.snapshot_id} ({len(restored)} positions "
-                    f"restored) — a changelog requires cumulative "
-                    f"per-file deletes (the batch reader refuses the "
-                    f"same shape); read full snapshots instead"
+        out = [np.empty(0, dtype=np.int64)]
+        for spec in specs:
+            if spec[0] == "puffin":
+                from interop_datalake_spark.lake.puffin import (
+                    read_puffin_dv,
                 )
-            keep = np.setdiff1d(new, old)
-            ctype = "delete"
-            if len(keep) == 0:
-                return
-        elif s.mode == "insert":
-            drop = positions(s.new_specs)
-            drop = drop if len(drop) else None
-        else:  # dropped file: parent-live rows emit as deletes
-            drop = positions(s.old_specs)
-            drop = drop if len(drop) else None
-        yield from arrow_batches(
-            s.path,
-            self.schema_struct,
-            {
-                **s.part_values,
-                "_change_type": ctype,
-                "_snapshot_id": s.snapshot_id,
-                "_sequence_number": s.seq,
-                "_commit_timestamp": datetime.fromtimestamp(
-                    s.ts_ms / 1000, tz=timezone.utc
-                ),
-            },
-            keep_positions=keep,
-            drop_positions=drop,
-        )
+
+                pos = read_puffin_dv(spec[1], spec[2], spec[3])
+            else:
+                import pyarrow.compute as pc
+                import pyarrow.parquet as pq
+
+                t = pq.read_table(spec[1], columns=["file_path", "pos"])
+                t = t.filter(pc.equal(t.column("file_path"), spec[2]))
+                pos = t.column("pos").to_pylist()
+            out.append(np.asarray(pos, dtype=np.int64))
+        return np.unique(np.concatenate(out))
+
+    def _diff(self, s: Slice, old, new):
+        import numpy as np
+
+        restored = np.setdiff1d(old, new)
+        if len(restored):
+            raise ValueError(
+                f"delete state for {s.path} SHRANK at snapshot "
+                f"{s.constants['_snapshot_id']} ({len(restored)} "
+                f"positions restored) — a changelog requires "
+                f"cumulative per-file deletes (the batch reader "
+                f"refuses the same shape); read full snapshots instead"
+            )
+        return super()._diff(s, old, new)
 
 
-class IcebergCdcDataSource(DataSource):
+class IcebergCdcDataSource(IcebergAppendsDataSource):
     """``spark.readStream.format("iceberg_cdc").option("path", <table
     root>)`` — register with :func:`register_iceberg_source`. Schema
     = the current Iceberg schema's columns + ``_change_type string``
@@ -756,57 +491,17 @@ class IcebergCdcDataSource(DataSource):
     monotone fold key — snapshot ids are random) +
     ``_commit_timestamp timestamp``."""
 
-    @classmethod
-    def name(cls) -> str:
-        return CDC_FORMAT_NAME
-
-    def schema(self) -> str:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError(
-                "iceberg_cdc source requires "
-                ".option('path', <table root>)"
-            )
-        meta = _load_meta(Path(path))
-        if int(meta.get("format-version") or 1) < 2:
-            raise ValueError(
-                "this streaming source requires Iceberg "
-                "format-version 2+: v1 tables have no sequence "
-                "numbers to use as offsets; read v1 tables with the "
-                "batch reader"
-            )
-        parts = []
-        for f in _schema_fields(meta):
-            t = f["type"]
-            if isinstance(t, dict):
-                raise ValueError(
-                    f"column {f['name']!r} is nested ({t['type']}) — "
-                    f"the streaming source's row feed is "
-                    f"primitive-only; read nested tables with "
-                    f"read_iceberg"
-                )
-            parts.append(
-                f"`{f['name']}` {_interop()._spark_type_of(t)}"
-            )
-        parts += [
-            "`_change_type` string",
-            "`_snapshot_id` bigint",
-            # the MONOTONE ordering column (snapshot ids are random):
-            # apply_changes_into / scd2_apply_changes consumers fold
-            # on it — sequence_col="_sequence_number"
-            "`_sequence_number` bigint",
-            "`_commit_timestamp` timestamp",
-        ]
-        return ", ".join(parts)
-
-    def streamReader(self, schema) -> IcebergCdcStreamReader:
-        mspt = self.options.get("max_snapshots_per_trigger")
-        return IcebergCdcStreamReader(
-            str(self.options["path"]),
-            schema,
-            int(self.options.get("starting_after_sequence", 0)),
-            int(mspt) if mspt is not None else None,
-        )
+    format_name = CDC_FORMAT_NAME
+    reader = IcebergCdcStreamReader
+    tags = (
+        "`_change_type` string",
+        "`_snapshot_id` bigint",
+        # the MONOTONE ordering column (snapshot ids are random):
+        # apply_changes_into / scd2_apply_changes consumers fold on
+        # it — sequence_col="_sequence_number"
+        "`_sequence_number` bigint",
+        "`_commit_timestamp` timestamp",
+    )
 
 
 def read_iceberg_cdc_stream(
@@ -822,7 +517,7 @@ def read_iceberg_cdc_stream(
     ``read_iceberg_changes(include_deletes=True)`` row for row).
     ``max_snapshots_per_trigger`` bounds every micro-batch's snapshot
     span, exactly as in :func:`read_iceberg_stream`."""
-    return _iceberg_stream_reader(
-        spark, CDC_FORMAT_NAME, path, starting_after_sequence,
+    return _stream(
+        spark, IcebergCdcDataSource, path, starting_after_sequence,
         max_snapshots_per_trigger,
     )

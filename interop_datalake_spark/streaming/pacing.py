@@ -1,7 +1,7 @@
 """Monotone, rate-limited offset advance for the version/sequence
-offsets of this package's streaming sources (txn_source / delta_source
-/ iceberg_source) — the ``maxFilesPerTrigger`` analog at per-commit
-granularity, WITHOUT the first-batch-unthrottled caveat.
+offsets of this package's streaming sources (all five share it through
+``FeedReader``, streaming/feed.py) — the ``maxFilesPerTrigger`` analog
+at per-commit granularity, WITHOUT the first-batch-unthrottled caveat.
 
 The Python DataSource API exposes no ``ReadLimit`` and its
 ``latestOffset()`` takes no start offset, so a throttled advance needs

@@ -26,15 +26,15 @@ rows; see ``TxnTable.read_changes``).
 from __future__ import annotations
 
 import json
-from datetime import date, datetime
-from decimal import Decimal
 from pathlib import Path
 from urllib.parse import unquote
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
+from interop_datalake_spark.streaming.feed import (
+    FeedReader,
+    FeedSource,
+    Slice,
+    _stream,
+    typed_partition_value,
 )
 
 FORMAT_NAME = "txntable"
@@ -81,41 +81,7 @@ def _latest_version(manifest_dir: Path) -> int:
     return max(versions, default=0)
 
 
-def _typed_partition_value(raw: str | None, ddl: str):
-    """Convert a Hive path-encoded partition value to the Python value
-    matching its recorded Spark DDL type."""
-    if raw is None or raw == "__HIVE_DEFAULT_PARTITION__":
-        return None
-    v = unquote(raw)
-    if ddl in ("int", "bigint", "smallint", "tinyint"):
-        return int(v)
-    if ddl in ("float", "double"):
-        return float(v)
-    if ddl == "date":
-        return date.fromisoformat(v)
-    if ddl == "timestamp":
-        return datetime.fromisoformat(v)
-    if ddl.startswith("decimal"):
-        return Decimal(v)
-    return v
-
-
-class _FileSlice(InputPartition):
-    """One added data file of one commit — the unit of read
-    parallelism. Carries everything an executor needs: absolute path,
-    the partition-column values/types to inject, and the commit
-    version tag."""
-
-    def __init__(self, path, version, part_values, data_cols, pcols, ptypes):
-        self.path = path
-        self.version = version
-        self.part_values = part_values
-        self.data_cols = data_cols
-        self.pcols = pcols
-        self.ptypes = ptypes
-
-
-class TxnTableStreamReader(DataSourceStreamReader):
+class TxnTableStreamReader(FeedReader):
     def __init__(
         self,
         root: str,
@@ -123,156 +89,51 @@ class TxnTableStreamReader(DataSourceStreamReader):
         schema,
         max_versions_per_trigger: int | None = None,
     ):
-        self.root = Path(root)
+        super().__init__(
+            root, schema, starting_version, max_versions_per_trigger
+        )
         self.manifest_dir = self.root / "_manifests"
-        self.starting_version = starting_version
-        self.schema_struct = schema  # declared StructType (picklable)
-        self.field_names = [f.name for f in schema.fields]
-        #: rate limit: each micro-batch — INCLUDING the first of a
-        #: fresh or restarted run — covers at most this many commits
-        #: (Delta's maxFilesPerTrigger analog; per-commit granularity
-        #: because offsets ARE versions). The base seeds from the
-        #: configured starting_version on fresh runs and from the
-        #: partitions() replay of the checkpointed window on restarts
-        #: — streaming/pacing.py documents the measured call order
-        #: that makes both safe.
-        self.max_versions_per_trigger = max_versions_per_trigger
-        from interop_datalake_spark.streaming.pacing import Pacer
 
-        self._pacer = Pacer(starting_version)
+    def _head(self) -> int:
+        return _latest_version(self.manifest_dir)
 
-    # -- offsets ------------------------------------------------------------
-
-    def initialOffset(self) -> dict:
-        self._pacer.note(self.starting_version)
-        return {"version": self.starting_version}
-
-    def latestOffset(self) -> dict:
-        latest = _latest_version(self.manifest_dir)
-        n = self.max_versions_per_trigger
-        return {
-            "version": self._pacer.advance(
-                latest, None if n is None else (lambda base: base + n)
-            )
-        }
-
-    def commit(self, end: dict) -> None:
-        # progress is tracked by Spark's streaming checkpoint; manifests
-        # are immutable, nothing to release on our side
-        pass
-
-    # -- planning (driver): manifests only, never data ----------------------
-
-    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        # authoritative progress: on a restart Spark re-plans the
-        # checkpointed window through here BEFORE the first
-        # latestOffset (measured — streaming/pacing.py), so this
-        # note() is what keeps the throttled advance monotone
-        self._pacer.note(end["version"])
-        slices: list[InputPartition] = []
-        for v in range(start["version"] + 1, end["version"] + 1):
+    def _plan(self, start: int, end: int) -> list[Slice]:
+        # one slice per added file; partition values decode from the
+        # Hive path encoding and type through the log's recorded DDL
+        slices = []
+        for v in range(start + 1, end + 1):
             rec = json.loads((self.manifest_dir / f"v{v}.json").read_text())
-            pcols = rec.get("partition_cols", [])
             ptypes = rec.get("partition_types", {})
             for rel in rec.get("added", []):
-                part_values = rec.get("partitions", {}).get(rel, {})
-                slices.append(
-                    _FileSlice(
-                        str(self.root / rel),
-                        v,
-                        part_values,
-                        None,
-                        pcols,
-                        ptypes,
+                raw = rec.get("partitions", {}).get(rel, {})
+                constants = {
+                    c: typed_partition_value(
+                        None
+                        if raw.get(c) in (None, "__HIVE_DEFAULT_PARTITION__")
+                        else unquote(raw[c]),
+                        ptypes.get(c, "string"),
                     )
-                )
+                    for c in rec.get("partition_cols", [])
+                }
+                constants["_commit_version"] = v
+                slices.append(Slice(str(self.root / rel), constants))
         return slices
 
-    # -- execution (executors): one pyarrow read per file slice -------------
 
-    def _slice_constants(self, partition: _FileSlice) -> dict:
-        """Per-slice injected columns: typed partition values (from the
-        Hive path, via the log's recorded DDL types) + the commit tag."""
-        constants = {
-            c: _typed_partition_value(
-                partition.part_values.get(c),
-                partition.ptypes.get(c, "string"),
-            )
-            for c in partition.pcols
-        }
-        constants["_commit_version"] = partition.version
-        return constants
-
-    def read(self, partition: _FileSlice):
-        # vectorized Arrow path (round-11, closes the round-10 weak
-        # flag): yield RecordBatches shaped like the declared schema —
-        # no per-row Python tuple assembly in the scan hot path
-        from interop_datalake_spark.streaming.arrow_yield import (
-            arrow_batches,
-        )
-
-        yield from arrow_batches(
-            partition.path,
-            self.schema_struct,
-            self._slice_constants(partition),
-        )
-
-    def _read_rows(self, partition: _FileSlice):
-        """The pre-round-11 per-row tuple path, kept ONLY as the
-        equality witness for the vectorized path
-        (tests/test_stream_vectorized.py pins the two byte-equal);
-        production ``read()`` never calls it."""
-        import pyarrow.parquet as pq
-
-        # resolve data columns BY NAME in output-schema order, so files
-        # written with different column orders still line up
-        data_cols = [
-            n
-            for n in self.field_names
-            if n not in partition.pcols and n != "_commit_version"
-        ]
-        avail = set(pq.read_schema(partition.path).names)
-        present = [n for n in data_cols if n in avail]
-        table = pq.read_table(partition.path, columns=present)
-        col_lists = {n: table.column(n).to_pylist() for n in present}
-        pvals = {
-            c: _typed_partition_value(
-                partition.part_values.get(c),
-                partition.ptypes.get(c, "string"),
-            )
-            for c in partition.pcols
-        }
-        for i in range(table.num_rows):
-            yield tuple(
-                partition.version
-                if name == "_commit_version"
-                else pvals[name]
-                if name in pvals
-                else (col_lists[name][i] if name in col_lists else None)
-                for name in self.field_names
-            )
-
-
-class TxnTableDataSource(DataSource):
+class TxnTableDataSource(FeedSource):
     """``spark.readStream.format("txntable").option("path", root)`` —
     register with :func:`register_txn_source`. Schema = the table's
     data columns (from one data file's parquet footer) + its partition
     columns (typed from the log) + ``_commit_version int``."""
 
-    @classmethod
-    def name(cls) -> str:
-        return FORMAT_NAME
+    format_name = FORMAT_NAME
+    reader = TxnTableStreamReader
+    tags = ("_commit_version int",)
 
-    def _root(self) -> Path:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("txntable source requires .option('path', <table root>)")
-        return Path(path)
-
-    def schema(self) -> str:
+    def _columns(self) -> list[str]:
         import pyarrow.parquet as pq
 
-        root = self._root()
+        root = Path(self._path())
         manifest_dir = root / "_manifests"
         latest = _latest_version(manifest_dir)
         if latest == 0:
@@ -312,18 +173,10 @@ class TxnTableDataSource(DataSource):
             for f in schema
             if f.name not in pcols
         ]
-        parts += [f"{c} {ptypes.get(c, 'string')}" for c in pcols]
-        parts.append("_commit_version int")
-        return ", ".join(parts)
+        return parts + [f"{c} {ptypes.get(c, 'string')}" for c in pcols]
 
-    def streamReader(self, schema) -> TxnTableStreamReader:
-        mvpt = self.options.get("max_versions_per_trigger")
-        return TxnTableStreamReader(
-            str(self._root()),
-            int(self.options.get("starting_version", 0)),
-            schema,
-            int(mvpt) if mvpt is not None else None,
-        )
+    def _reader(self, path, schema, start, cap) -> TxnTableStreamReader:
+        return self.reader(path, start, schema, cap)
 
 
 def register_txn_source(spark) -> None:
@@ -345,14 +198,10 @@ def read_txn_stream(
     processing-time trigger for throttled catch-up: AvailableNow
     captures one latestOffset and would stop after a single bounded
     hop (streaming/pacing.py)."""
-    register_txn_source(session.spark)
-    reader = (
-        session.spark.readStream.format(FORMAT_NAME)
-        .option("path", session.table_path(table))
-        .option("starting_version", starting_version)
+    return _stream(
+        session.spark,
+        TxnTableDataSource,
+        session.table_path(table),
+        starting_version,
+        max_versions_per_trigger,
     )
-    if max_versions_per_trigger is not None:
-        reader = reader.option(
-            "max_versions_per_trigger", max_versions_per_trigger
-        )
-    return reader.load()

@@ -139,6 +139,28 @@ class TestDeltaStream:
 
         assert read_delta(spark, str(t.root)).count() == 4
 
+    def test_typed_partition_columns_stream(self, spark, lake, tmp_path):
+        """Non-string partition columns inject typed: the Delta log
+        spells their types ``integer``/``date``, the declared schema
+        ``int``/``date``."""
+        from datetime import date
+
+        t = TxnTable(
+            lake, "ds9", stats_cols=["k"], partition_cols=["bucket", "d"]
+        )
+        t.append(
+            spark.createDataFrame(
+                [(1, 7, date(2024, 3, 1)), (2, 9, date(2024, 3, 2))],
+                "k INT, bucket INT, d DATE",
+            )
+        )
+        export_delta_log(t, mode="mirror")
+        got: list = []
+        _drain(spark, str(t.root), str(tmp_path / "ck9"), got)
+        assert sorted((r.k, r.bucket, r.d) for r in got) == [
+            (1, 7, date(2024, 3, 1)), (2, 9, date(2024, 3, 2)),
+        ]
+
     def test_retraction_and_dv_adds_refused(self, spark, lake, tmp_path):
         from pyspark.errors.exceptions.captured import (
             StreamingQueryException,

@@ -174,6 +174,27 @@ class TestPartitioned:
         ]
         assert dict(back.dtypes)["bucket"] == "int"
 
+    def test_unmatched_file_path_raises(self, spark, lake, monkeypatch):
+        """The consolidated read attaches partition values by file
+        path; a file whose path matches no manifest entry must raise
+        instead of reading its partition columns as NULL."""
+        from interop_datalake_spark.lake import iceberg_interop as ii
+
+        t = TxnTable(lake, "ip4", partition_cols=["tenant"])
+        t.append(
+            spark.createDataFrame([(1, "A"), (2, "B")], "k INT, tenant STRING")
+        )
+        export_iceberg_metadata(t)
+        assert sorted(
+            (r.k, r.tenant) for r in read_iceberg(spark, str(t.root)).collect()
+        ) == [(1, "A"), (2, "B")]
+        canon = ii._canon_path_expr
+        monkeypatch.setattr(
+            ii, "_canon_path_expr", lambda c: F.concat(canon(c), F.lit("#"))
+        )
+        with pytest.raises(Exception, match="no tenant value for file"):
+            read_iceberg(spark, str(t.root)).collect()
+
 
 class TestBoundsPruning:
     def test_key_range_prunes_by_binary_bounds(self, spark, lake):

@@ -252,6 +252,47 @@ class TestIcebergStream:
             )
             q.awaitTermination(120)
 
+    def test_v3_append_only_table_streams(self, spark, lake, tmp_path):
+        """format-version 3 carries sequence numbers like v2: an
+        append-only v3 table streams every row exactly once, and a v3
+        snapshot that adds delete files still refuses."""
+        from pyspark.sql.types import StructType
+
+        from interop_datalake_spark.streaming.iceberg_source import (
+            IcebergAppendsDataSource,
+            IcebergStreamReader,
+        )
+
+        t = TxnTable(lake, "is5", stats_cols=["k"])
+        t.append(spark.range(0, 3).selectExpr("id as k").coalesce(1))
+        export_iceberg_metadata(t, format_version=3)
+        t.append(spark.range(3, 5).selectExpr("id as k").coalesce(1))
+        export_iceberg_metadata(t)
+        got: list = []
+        _drain(spark, str(t.root), str(tmp_path / "ck5"), got)
+        assert sorted(r.k for r in got) == [0, 1, 2, 3, 4]
+        assert {r.k: r._snapshot_id for r in got} == {
+            0: 1, 1: 1, 2: 1, 3: 2, 4: 2,
+        }
+        # a Puffin-DV delete snapshot, relabelled "append" the way a
+        # foreign writer might: the delete-manifest check refuses it
+        t.delete_where(F.col("k") == 1, merge_on_read=True)
+        export_iceberg_metadata(t)
+        meta_dir = t.root / "metadata"
+        n = int((meta_dir / "version-hint.text").read_text())
+        mp = meta_dir / f"v{n}.metadata.json"
+        meta = json.loads(mp.read_text())
+        assert meta["format-version"] == 3
+        for snap in meta["snapshots"]:
+            snap["summary"]["operation"] = "append"
+        mp.write_text(json.dumps(meta))
+        ds = IcebergAppendsDataSource({"path": str(t.root)})
+        rdr = IcebergStreamReader(
+            str(t.root), StructType.fromDDL(ds.schema()), 0
+        )
+        with pytest.raises(ValueError, match="adds delete files"):
+            rdr.partitions({"seq": 0}, rdr.latestOffset())
+
     def test_nested_schema_refused_at_plan_time(self, spark, lake):
         t = TxnTable(lake, "is4", stats_cols=["k"])
         t.append(

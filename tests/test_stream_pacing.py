@@ -32,6 +32,7 @@ from interop_datalake_spark.streaming.iceberg_source import (
     read_iceberg_stream,
 )
 from interop_datalake_spark.streaming.pacing import Pacer
+from interop_datalake_spark.streaming.txn_source import read_txn_stream
 
 pytestmark = pytest.mark.filterwarnings("ignore")
 
@@ -181,6 +182,19 @@ class TestForeignStreamCatchup:
             set(range(1, 6)),
             cap=2,
         )
+
+    def test_txntable(self, spark, lake, tmp_path):
+        """The native source paces through the same shared offset
+        code as the four foreign formats."""
+        _build_history(spark, lake, "pt1", 5, lambda t: None)
+        batches = _drain_throttled(
+            read_txn_stream(lake, "pt1", max_versions_per_trigger=2),
+            str(tmp_path / "ck"),
+            "_commit_version",
+            {1, 2, 3, 4, 5},  # TxnTable versions start at 1
+            cap=2,
+        )
+        assert batches[0] == {1, 2}, batches
 
 
 class TestRestartThrottled:
