@@ -207,9 +207,13 @@ def overwrite_tenant_partition(
     partitions is ONE atomic manifest commit
     (``TxnTable.overwrite_partitions``) — on a table with no commits
     yet too. The partition columns are the table's layout
-    (``TXN_LAYOUT``) or, for another table, the ones its log records.
+    (``TXN_LAYOUT``) or, for another table, the ones its log records;
+    another table with no commits yet is partitioned by the
+    ``fhir_tenant_id`` column stamped here.
     """
     t = txn_table(session, table)
+    if not t.partition_cols and t.current_version() == 0:
+        t.partition_cols = ["fhir_tenant_id"]
     v = t.overwrite_partitions(
         replacement.withColumn("fhir_tenant_id", F.lit(tenant_id))
     )

@@ -58,7 +58,6 @@ import json
 import os
 import re
 import shutil
-import threading
 import uuid
 from datetime import date, datetime, timezone
 from decimal import Decimal
@@ -130,87 +129,120 @@ def _decode_range(rng):
     return None if rng is None else [_stats_decode(rng[0]), _stats_decode(rng[1])]
 
 
-#: dtypes whose parquet FOOTER statistics are proven equivalent to the
-#: Spark min/max agg (probed on this build): integers and dates are
-#: exact logical values; strings compare identically (python code-point
-#: order == UTF-8 byte order == parquet's UNSIGNED column order == the
-#: UTF8String order Spark aggregates with, and parquet-mr stores them
-#: untruncated). NOT here, each for a measured reason: timestamps
-#: (Spark writes INT96 — footers carry no stats), float/double (a NaN
-#: max poisons the bound: parquet max=NaN vs Spark's NaN-greatest
-#: semantics), decimal (pyarrow raises extracting FLBA decimal stats),
-#: boolean (pointless to stat).
-_FOOTER_STAT_TYPES = {"tinyint", "smallint", "int", "bigint", "date", "string"}
+def typed_partition_value(s: str | None, ddl: str):
+    """A partition value in its canonical (unescaped) string form →
+    the Python value of Spark type ``ddl`` (``int``, ``bigint``,
+    ``decimal(10,2)``, ``timestamp_ntz``, …) — what a Spark cast of
+    the string collects as. ``None`` and the Hive null sentinel are
+    NULL. The one converter for the writer's path-encoded stats and
+    the stream readers' injected partition columns."""
+    if s is None or s == _HIVE_NULL:
+        return None
+    if ddl in ("int", "bigint", "smallint", "tinyint"):
+        return int(s)
+    if ddl in ("float", "double"):
+        return float(s)
+    if ddl == "boolean":
+        return s == "true"
+    if ddl == "date":
+        return date.fromisoformat(s)
+    if ddl.startswith("timestamp"):
+        return datetime.fromisoformat(s)
+    if ddl.startswith("decimal"):
+        return Decimal(s)
+    return s
 
 
-def _footer_stats(
-    root: Path, rel_files: list[str], stat_cols: list[str]
-) -> tuple[dict, int] | None:
-    """Per-file (min/max stats, row counts) read from the parquet
-    FOOTERS just written — O(files) driver-side metadata reads in
-    place of a SECOND Spark job re-scanning the data (the stats agg
-    was ~40% of a steady-state append commit's wall). Only called for
-    _FOOTER_STAT_TYPES columns; any surprise (missing footer, chunk
-    without bounds while non-null values exist) degrades per-column
-    to recorded-nothing (pruning treats absent stats as always-scan —
-    a WIDER bound is always safe) or, on real errors, returns None so
-    the caller falls back to the agg path."""
+def _footer_bounds(st, col) -> tuple:
+    """(min, max) of one column chunk's footer statistics ``st`` as a
+    Spark ``collect`` returns them. Integer-backed decimals (Spark
+    writes DECIMAL(p<=18) as INT32/INT64) carry raw unscaled ints that
+    pyarrow will not decode — apply the column's scale. UTC-adjusted
+    timestamps come back tz-aware; Spark collects naive local time
+    (``TimestampType.fromInternal``), so convert the same way — an
+    aware bound would not compare with a naive probe."""
+    if col.logical_type.type == "DECIMAL" and col.physical_type in (
+        "INT32",
+        "INT64",
+    ):
+        return tuple(
+            Decimal(v).scaleb(-col.scale) for v in (st.min_raw, st.max_raw)
+        )
+    return tuple(
+        v.astimezone().replace(tzinfo=None)
+        if isinstance(v, datetime) and v.tzinfo is not None
+        else v
+        for v in (st.min, st.max)
+    )
+
+
+def _footer_stats(path: Path, stat_cols: list[str]) -> dict:
+    """One written data file's manifest stats entry — ``{"rows": n,
+    <col>: [min, max], ...}`` — read from its parquet FOOTER: the one
+    stats source for both writers, O(files) driver metadata reads and
+    no second scan of the data. Strings compare identically (python
+    code-point order == UTF-8 byte order == parquet's unsigned order
+    == Spark's UTF8String order). A column whose footer withholds
+    bounds while it holds non-null values (an INT96 timestamp from a
+    foreign session, an oversized string) records nothing, so pruning
+    always scans the file — a wider bound is always safe; an all-null
+    column records ``[None, None]``. Callers keep float/double columns
+    out: a NaN bound cannot be compared safely."""
     import pyarrow.parquet as pq
 
-    try:
-        stats: dict[str, dict] = {}
-        total = 0
-        want = set(stat_cols)
-        for rel in rel_files:
-            md = pq.read_metadata(root / rel)
-            n = md.num_rows
-            total += n
-            entry: dict = {"rows": n}
-            if n and want:
-                mins: dict = {}
-                maxs: dict = {}
-                bad: set = set()
-                for rgi in range(md.num_row_groups):
-                    rg = md.row_group(rgi)
-                    for ci in range(rg.num_columns):
-                        col = rg.column(ci)
-                        name = col.path_in_schema
-                        if name not in want or name in bad:
-                            continue
-                        st = col.statistics
-                        if st is None:
-                            bad.add(name)
-                            continue
-                        if not st.has_min_max:
-                            # an all-null chunk legitimately has no
-                            # bounds and cannot move min/max; bounds
-                            # missing with non-null values present
-                            # means the writer withheld them — record
-                            # nothing (always-scan) for the column
-                            if st.num_values:
-                                bad.add(name)
-                            continue
-                        lo, hi = st.min, st.max
-                        if name not in mins or lo < mins[name]:
-                            mins[name] = lo
-                        if name not in maxs or hi > maxs[name]:
-                            maxs[name] = hi
-                for c in stat_cols:
-                    if c in bad:
-                        continue
-                    if c in mins:
-                        entry[c] = [
-                            _stats_encode(mins[c]),
-                            _stats_encode(maxs[c]),
-                        ]
-                    else:
-                        # present but all-null: the agg path records
-                        # [null, null] — match it exactly
-                        entry[c] = [None, None]
-            stats[rel] = entry
-        return stats, total
-    except Exception:
-        return None  # any surprise: the Spark agg is the slow truth
+    md = pq.read_metadata(path)
+    entry: dict = {"rows": md.num_rows}
+    if not md.num_rows:
+        return entry
+    mins: dict = {}
+    maxs: dict = {}
+    bad: set = set()
+    for rgi in range(md.num_row_groups):
+        rg = md.row_group(rgi)
+        for ci in range(rg.num_columns):
+            name = rg.column(ci).path_in_schema
+            if name not in stat_cols or name in bad:
+                continue
+            st = rg.column(ci).statistics
+            if st is None or (not st.has_min_max and st.num_values):
+                bad.add(name)  # bounds withheld for non-null values
+                continue
+            if not st.has_min_max:
+                continue  # an all-null chunk cannot move min/max
+            try:
+                lo, hi = _footer_bounds(st, md.schema.column(ci))
+            except (NotImplementedError, ValueError, OverflowError):
+                bad.add(name)  # pyarrow cannot decode them (INT96, …)
+                continue
+            if name not in mins or lo < mins[name]:
+                mins[name] = lo
+            if name not in maxs or hi > maxs[name]:
+                maxs[name] = hi
+    for c in stat_cols:
+        if c not in bad:
+            entry[c] = [_stats_encode(mins.get(c)), _stats_encode(maxs.get(c))]
+    return entry
+
+
+def _run_starts(keys) -> list[int]:
+    """Start offsets of the runs of equal rows in a sorted Arrow
+    table (NULL equals NULL) — native compares, no per-row Python."""
+    import pyarrow.compute as pc
+
+    n = keys.num_rows
+    if n < 2:
+        return [0]
+    cuts = None
+    for col in keys.itercolumns():
+        a, b = col.slice(1), col.slice(0, n - 1)
+        ne = pc.fill_null(
+            pc.or_kleene(
+                pc.not_equal(a, b), pc.xor(pc.is_null(a), pc.is_null(b))
+            ),
+            False,
+        )
+        cuts = ne if cuts is None else pc.or_(cuts, ne)
+    return [0] + [i + 1 for i in pc.indices_nonzero(cuts).to_pylist()]
 
 
 # -- bounded-commit driver write (round-15 optimization) -------------------
@@ -220,10 +252,11 @@ def _footer_stats(
 # commit frame pays ~125 ms of FileFormatWriter/commit-protocol/parquet
 # -writer setup where the same plan through the noop sink costs ~34 ms
 # (round-14 calibration). For a BOUNDED commit frame the cheapest
-# correct execution is: run the plan once (one Arrow collect), write
-# the parquet files on the driver with pyarrow, and compute the
-# per-file stats from the in-memory Arrow data — one Spark job instead
-# of a write job (+ footer metadata reads), identical on-disk layout.
+# correct execution is: run the plan once (one Arrow collect) and
+# write the parquet files on the driver with pyarrow — one Spark job
+# instead of a write job, identical on-disk layout. Stats are not a
+# second path: both writers' files get their per-file stats and row
+# counts from their parquet footers (_footer_stats).
 #
 # Scale discipline (guide §5: the driver does no DATA work): the path
 # is bounded by ``spark.interop.datalake.driverCommit.maxBytes``
@@ -248,9 +281,10 @@ def _footer_stats(
 # metadata-sized commit traffic (publish batches, IVM refresh deltas,
 # stream micro-batches, witness fixtures) that was paying a cluster
 # job per handful of rows. File-splitting semantics are
-# preserved exactly: rows are grouped by ``spark_partition_id()`` (+
-# layout values), one file per group, so file counts/contents match
-# what the distributed writer produces for the same execution.
+# preserved exactly: one stable sort on ``spark_partition_id()`` (+
+# layout values) and one file per run of equal keys, rows in input
+# order, so file counts/contents match what the distributed writer
+# produces for the same execution.
 
 _DRIVER_COMMIT_MAX_BYTES_KEY = "spark.interop.datalake.driverCommit.maxBytes"
 _DRIVER_COMMIT_MAX_BYTES_DEFAULT = str(32 * 1024 * 1024)
@@ -384,12 +418,6 @@ def _part_dir_value(v) -> str | None:
 #: ones range predicates can prune through. bucket() is intentionally
 #: absent: it only prunes point lookups (lo == hi).
 _ORDER_PRESERVING = {"identity", "truncate", "days", "months", "years", "hours"}
-
-#: serializes every writer's partition-type-inference toggle window
-#: (the conf is session-global; see the read-back block in
-#: _write_data). Process-wide, not per-table: two tables written
-#: through the same SparkSession share the same conf.
-_PARTITION_INFERENCE_LOCK = threading.Lock()
 
 _TIME_FORMATS = {
     "days": "yyyy-MM-dd",
@@ -1362,8 +1390,8 @@ class TxnTable:
         skipping instead of trusting it."""
         m = self.manifest(version)
         fs = m["files"]
+        parts = m.get("partitions", {})
         if partition_filter:
-            parts = m.get("partitions", {})
             for col, want in partition_filter.items():
                 wants = {
                     str(w)
@@ -1400,7 +1428,6 @@ class TxnTable:
                 if s[-1] == col
             }
             if tmatch:
-                parts = m.get("partitions", {})
                 tvals = self._transform_literals(tmatch, [lo, hi], m)
                 for tname, spec in tmatch.items():
                     tlo = _canon_transform_bound(tvals[tname][0])
@@ -1434,6 +1461,28 @@ class TxnTable:
         if bloom_eq:
             stats = m.get("stats", {})
             for col, value in bloom_eq.items():
+                if any(col in parts.get(f, {}) for f in fs):
+                    # a path-encoded column records no bloom: match the
+                    # files' partition values against the literal cast
+                    # to the column's type by Spark (an identity
+                    # transform), so 5.0 or '05' still finds INT 5
+                    tv = self._transform_literals(
+                        {col: ["identity", col]}, [value], m
+                    )[col][0]
+                    # a timestamp has no exact path-string form; a NULL
+                    # partition never equals a literal
+                    if not isinstance(tv, datetime):
+                        tv = _canon_transform_bound(tv)
+                    if isinstance(tv, (int, str)):
+                        fs = [
+                            f
+                            for f in fs
+                            if (raw := parts.get(f, {}).get(col)) is None
+                            or (
+                                raw != _HIVE_NULL
+                                and _part_value_matches(raw, tv) in (None, tv)
+                            )
+                        ]
                 blooms = {
                     f: b
                     for f in fs
@@ -1567,20 +1616,17 @@ class TxnTable:
         out: Path,
         layout: list[str],
         stat_cols: list[str],
-        pcols: list[str],
-        transforms: dict,
-    ) -> tuple[list[str], int, dict, dict] | None:
+    ) -> list[str] | None:
         """Bounded-commit fast path: ONE Arrow collect + driver-side
         pyarrow parquet writes in place of the distributed write job
         (module comment above ``_DRIVER_COMMIT_MAX_BYTES_KEY`` has the
-        full scale rationale). Returns (rel_files, rows, stats,
-        partitions) with content IDENTICAL to the distributed path —
-        same per-``spark_partition_id`` file splitting, same Hive
-        ``key=value`` layout dirs, same per-file min/max stats the
-        footer path records — or None to fall back. Only called under
-        the footer-fast-path eligibility (parquet, no bloom columns,
-        footer-safe stats types), so the stats computed here from the
-        Arrow data equal what either existing stats path records."""
+        full scale rationale). Returns the sorted root-relative files
+        written — the same per-``spark_partition_id`` file splitting
+        and Hive ``key=value`` layout dirs as the distributed writer —
+        or None to fall back. Footer min/max is written for
+        ``stat_cols`` only; :meth:`_write_data` reads the stats back
+        from the footers exactly as it does for the distributed
+        writer's files."""
         spark = self.spark
         try:
             max_bytes = int(
@@ -1611,69 +1657,51 @@ class TxnTable:
             tbl = wdf.withColumn(pid, F.spark_partition_id()).toArrow()
         except Exception:
             return None  # unsupported type / result too large: fall back
-        if tbl.nbytes > max_bytes:
-            return None  # post-collect cap: the frame outgrew its bound
         if tbl.num_rows == 0:
             # the distributed writer's empty part files are dropped
             # from the commit anyway — the visible end state is the
             # same empty add
-            return [], 0, {}, {}
+            return []
+        if tbl.nbytes > max_bytes:
+            return None  # post-collect cap: the frame outgrew its bound
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         key_cols = [pid] + list(layout)
-        keys = list(zip(*[tbl.column(c).to_pylist() for c in key_cols]))
-        groups: dict[tuple, list[int]] = {}
-        for i, k in enumerate(keys):
-            groups.setdefault(k, []).append(i)
-        encoded: dict[tuple, list[str]] = {}
-        for k in groups:
-            segs = []
-            for c, v in zip(layout, k[1:]):
-                s = _part_dir_value(v)
-                if s is None:
-                    return None  # value needs Spark's escaper: fall back
-                segs.append(f"{c}={s}")
-            encoded[k] = segs
+        # one stable sort: each run of equal keys is one file, its rows
+        # in input order
+        order = pc.sort_indices(
+            tbl, sort_keys=[(c, "ascending") for c in key_cols]
+        )
+        keys = tbl.select(key_cols).take(order).combine_chunks()
+        starts = _run_starts(keys)
+        runs = []
+        for lo, hi in zip(starts, starts[1:] + [tbl.num_rows]):
+            k = keys.slice(lo, 1).to_pylist()[0]
+            dirs = [_part_dir_value(k[c]) for c in layout]
+            if None in dirs:
+                return None  # value needs Spark's escaper: fall back
+            segs = [f"{c}={v}" for c, v in zip(layout, dirs)]
+            runs.append((k[pid], segs, order.slice(lo, hi - lo)))
         data = tbl.drop_columns(key_cols)  # layout cols live in the path
         rel_files: list[str] = []
-        stats: dict[str, dict] = {}
-        partitions: dict[str, dict] = {}
-        for k, idx in groups.items():
-            g = data.take(idx)  # ascending: preserves partition order
-            segs = encoded[k]
-            d = out.joinpath(*segs) if segs else out
+        for part, segs, idx in runs:
+            d = out.joinpath(*segs)
             d.mkdir(parents=True, exist_ok=True)
-            fpath = d / f"part-{k[0]:05d}-{uuid.uuid4().hex}.snappy.parquet"
+            fpath = d / f"part-{part:05d}-{uuid.uuid4().hex}.snappy.parquet"
             # parquet min/max only for the stats columns (the ones
             # point reads filter on): pyarrow otherwise writes full
             # min/max of every column into the footer AND every page
             # header, which for wide text columns nearly doubles a
             # small file; Spark's writer keeps no page-header stats
             pq.write_table(
-                g, fpath, compression="snappy", write_statistics=stat_cols
+                data.take(idx),
+                fpath,
+                compression="snappy",
+                write_statistics=stat_cols,
             )
-            rel = str(fpath.relative_to(self.root))
-            rel_files.append(rel)
-            entry: dict = {"rows": g.num_rows}
-            for c in stat_cols:
-                try:
-                    mm = pc.min_max(g.column(c))
-                    lo, hi = mm["min"].as_py(), mm["max"].as_py()
-                except Exception:
-                    vals = [v for v in g.column(c).to_pylist() if v is not None]
-                    lo = min(vals) if vals else None
-                    hi = max(vals) if vals else None
-                entry[c] = [_stats_encode(lo), _stats_encode(hi)]
-            stats[rel] = entry
-            if pcols or transforms:
-                partitions[rel] = {
-                    c: unquote(s.split("=", 1)[1])
-                    for c, s in zip(layout, segs)
-                    if c in pcols or c in transforms
-                }
-        rel_files.sort()
-        return rel_files, tbl.num_rows, stats, partitions
+            rel_files.append(str(fpath.relative_to(self.root)))
+        return sorted(rel_files)
 
     def _write_data(
         self,
@@ -1681,18 +1709,20 @@ class TxnTable:
         layout_partition_by: list[str] | None = None,
         commit_dir: str | None = None,
     ) -> tuple[list[str], int, dict[str, dict], dict[str, dict], dict[str, str]]:
-        """Distributed write into a fresh per-commit subdir; returns
+        """Write ``df`` into a fresh per-commit subdir; returns
         (root-relative file paths, row count, per-file stats, per-file
         partition values, partition column types). The subdir is
         invisible to readers until a commit record references it.
 
-        Stats are one extra aggregation over the just-written files
-        (grouped by ``input_file_name`` — min/max of each stats col +
-        row count), the same pass Delta's stats collection makes.
-        Partition values are parsed from the Hive ``key=value`` path
-        segments — no extra scan."""
-        from pyspark.sql import functions as F
-
+        Frames under the driver-commit bound are written on the driver
+        (:meth:`_driver_commit_write`), the rest by the distributed
+        writer. Either way the per-file stats and row counts come from
+        the footers of the files just written (:func:`_footer_stats`):
+        a stats column the layout encodes in the path records its typed
+        path value, float/double stats columns record no bounds (a NaN
+        bound cannot be compared safely), and bloom columns cost one
+        bloom-only job (:meth:`_bloom_stats`). Partition values are
+        parsed from the Hive ``key=value`` path segments."""
         pcols = self._effective_partition_cols()
         ptypes = {
             c: t for c, t in df.dtypes if c in pcols
@@ -1732,210 +1762,120 @@ class TxnTable:
                 if c not in pcols and c not in transforms
             ]
         )
-        # stats/bloom eligibility is shared by the footer fast path
-        # below AND the bounded-commit driver write: both require
-        # footer-safe stats types living IN the data files
-        in_types_all = dict(df.dtypes)
-        layout_set = set(
-            list(pcols)
-            + list(transforms)
-            + list(layout_partition_by or [])
-        )
-        eff_stat_cols = [c for c in self.stats_cols if c in df.columns]
-        stats_eligible = not self.bloom_cols and all(
-            in_types_all.get(c) in _FOOTER_STAT_TYPES and c not in layout_set
-            for c in eff_stat_cols
-        )
-        if stats_eligible:
-            got = self._driver_commit_write(
-                wdf,
-                out,
-                layout,
-                eff_stat_cols,
-                pcols,
-                transforms,
+        stat_cols = [
+            c
+            for c in self.stats_cols
+            if in_dtypes.get(c) not in (None, "float", "double")
+        ]
+        file_stats = [c for c in stat_cols if c not in layout]
+        rel_files = self._driver_commit_write(wdf, out, layout, file_stats)
+        if rel_files is None:
+            writer = wdf.write.mode("overwrite").format("parquet")
+            if layout:
+                # layout_partition_by groups rows into per-value files
+                # EXACTLY (the writer splits by value — no range-
+                # sampling approximation) without becoming a table
+                # partition column; the clustered-compact path uses it
+                # for chunk-exact files
+                writer = writer.partitionBy(*layout)
+            writer.save(str(out))
+            rel_files = sorted(
+                str(p.relative_to(self.root))
+                for p in out.rglob("*")
+                if p.is_file() and not p.name.startswith(("_", "."))
             )
-            if got is not None:
-                rel_files, rows, stats, partitions = got
-                return rel_files, rows, stats, partitions, ptypes
-        writer = wdf.write.mode("overwrite").format("parquet")
-        if layout:
-            # layout_partition_by groups rows into per-value files
-            # EXACTLY (the writer splits by value — no range-sampling
-            # approximation) without becoming a table partition column;
-            # the clustered-compact path uses it for chunk-exact files
-            writer = writer.partitionBy(*layout)
-        writer.save(str(out))
-        rel_files = sorted(
-            str(p.relative_to(self.root))
-            for p in out.rglob("*")
-            if p.is_file() and not p.name.startswith(("_", "."))
-        )
-        if not rel_files:
-            return [], 0, {}, {}, ptypes
-        partitions: dict[str, dict] = {}
-        if pcols or transforms:
-            for rel in rel_files:
-                vals = {}
-                for seg in Path(rel).parts[2:-1]:
-                    if "=" in seg:
-                        k, _, raw = seg.partition("=")
-                        # layout-only dirs are not table partitions;
-                        # transform dirs ARE (they drive hidden-
-                        # partition pruning) but stay out of the schema
-                        if k in pcols or k in transforms:
-                            vals[k] = unquote(raw)
-                partitions[rel] = vals
-        # FOOTER FAST PATH: when every effective stats column is a
-        # type whose parquet footer statistics are proven equivalent
-        # to the Spark agg (_FOOTER_STAT_TYPES) and lives IN the data
-        # files (not path-encoded by the layout), and no bloom columns
-        # are declared, the per-file stats come straight from the
-        # footers just written — O(files) driver metadata reads
-        # instead of a SECOND Spark job re-scanning the data (~40% of
-        # a steady-state append commit, measured round 14). Anything
-        # else falls through to the agg below, the slow truth.
-        if stats_eligible:
-            got = _footer_stats(self.root, rel_files, eff_stat_cols)
-            if got is not None:
-                stats, rows = got
-                empty = {
-                    f for f in rel_files if stats[f]["rows"] == 0
-                }
-                # same empty-part-file drop as the agg path below:
-                # zero-row parts pollute manifests and refuse exports
-                for f in empty:
-                    (self.root / f).unlink(missing_ok=True)
-                    partitions.pop(f, None)
-                    stats.pop(f, None)
-                rel_files = [f for f in rel_files if f not in empty]
-                return rel_files, rows, stats, partitions, ptypes
-
-        # Partition TYPE INFERENCE on the stats read-back is disabled:
-        # inference is LOSSY for numeric-looking strings (path value
-        # '0103' → INT 103 → cast back to STRING gives '103'), so a
-        # bloom position hashed from the inferred value would differ
-        # from the read probe's hash of the true value '0103' — a
-        # FALSE NEGATIVE that silently drops existing rows. With
-        # inference off, path-encoded columns come back as the exact
-        # on-disk string; the cast below then converts to the
-        # incoming frame's type (the same cast the read probes apply),
-        # so positions match for string AND genuinely-typed columns.
-        # CONCURRENCY (ADVICE round 5 / round-7 verdict item 7): this
-        # toggle is session-GLOBAL, so two threads writing through the
-        # same SparkSession could interleave set/restore — writer A
-        # restores "true" while writer B's load() is still resolving,
-        # and B's stats read back type-INFERRED values ('0103' → 103),
-        # silently corrupting bloom positions. The process-wide lock
-        # serializes the set→load→restore window (partition-schema
-        # resolution happens eagerly AT load(), so nothing after the
-        # restore depends on the conf). TxnTable reads never rely on
-        # inference (partition values inject via path regexp), so
-        # readers need no lock.
-        _INF_KEY = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        with _PARTITION_INFERENCE_LOCK:
-            _old_inf = self.spark.conf.get(_INF_KEY, "true")
-            self.spark.conf.set(_INF_KEY, "false")
-            try:
-                back = self.spark.read.parquet(str(out))
-            finally:
-                self.spark.conf.set(_INF_KEY, _old_inf)
-        stat_cols = [c for c in self.stats_cols if c in back.columns]
-        bloom_cols = [c for c in self.bloom_cols if c in back.columns]
-        in_types = dict(df.dtypes)
-        aggs = [F.count(F.lit(1)).alias("_rows")]
-        for c in stat_cols:
-            # cast path-encoded stats columns to the incoming type too
-            # (inference-off leaves them STRING; min/max must compare
-            # in the log-schema's type system, not lexicographically)
-            scol = F.col(c)
-            if c in in_types:
-                scol = scol.cast(in_types[c])
-            aggs += [
-                F.min(scol).alias(f"_min_{c}"),
-                F.max(scol).alias(f"_max_{c}"),
-            ]
-        for c in bloom_cols:
-            # the two k-probe position sets aggregate as collect_set —
-            # map-side-combined, bounded by bloom_bits per file
-            bcol = F.col(c)
-            if c in in_types:
-                bcol = bcol.cast(in_types[c])
-            aggs += [
-                F.collect_set(self._bloom_pos(bcol, probe)).alias(
-                    f"_bloom{probe}_{c}"
-                )
-                for probe in (0, 1)
-            ]
-        per_file = (
-            back.withColumn("_file", F.input_file_name())
-            .groupBy("_file")
-            .agg(*aggs)
-            .collect()  # one row per data file — bounded, driver-side
-        )
         stats: dict[str, dict] = {}
-        rows = 0
-        # past half occupancy a k=2 bloom's false-positive rate is ≥25%
-        # and climbing — record the degenerate marker instead of a list
-        # that mostly fails to prune (also bounds manifest growth)
-        cap = self.bloom_bits // 2
-        for r in per_file:
-            rel = next(
-                (f for f in rel_files if _uri_endswith(r["_file"], f)), None
-            )
-            rows += r["_rows"]
-            if rel is not None:
-                stats[rel] = {
-                    "rows": r["_rows"],
-                    **{
-                        c: [
-                            _stats_encode(r[f"_min_{c}"]),
-                            _stats_encode(r[f"_max_{c}"]),
-                        ]
-                        for c in stat_cols
-                    },
+        partitions: dict[str, dict] = {}
+        for rel in rel_files:
+            entry = _footer_stats(self.root / rel, file_stats)
+            if not entry["rows"]:
+                # Spark's writer emits EMPTY part files when input
+                # partitions hold no rows (tiny frames, skewed layout
+                # splits); recording them would add manifest entries
+                # every scan lists forever and the Iceberg export
+                # refuses. Drop them from the commit and from disk.
+                (self.root / rel).unlink(missing_ok=True)
+                continue
+            path_vals = {
+                k: unquote(v)
+                for k, _, v in (
+                    seg.partition("=")
+                    for seg in Path(rel).relative_to(commit_dir).parts[:-1]
+                )
+            }
+            for c in stat_cols:
+                if c in layout:
+                    v = typed_partition_value(path_vals[c], in_dtypes[c])
+                    entry[c] = [_stats_encode(v), _stats_encode(v)]
+            stats[rel] = entry
+            if pcols or transforms:
+                # layout-only dirs are not table partitions; transform
+                # dirs ARE (they drive hidden-partition pruning) but
+                # stay out of the schema
+                partitions[rel] = {
+                    k: v
+                    for k, v in path_vals.items()
+                    if k in pcols or k in transforms
                 }
-                for c in bloom_cols:
-                    pos = sorted(
-                        set(r[f"_bloom0_{c}"]) | set(r[f"_bloom1_{c}"])
-                    )
-                    # an over-occupied filter prunes nothing — record
-                    # the degenerate marker instead of a huge list.
-                    # The filter is SELF-DESCRIBING: bits ride with the
-                    # positions, so a handle opened with different
-                    # bloom_bits (or a clone) still probes mod the bits
-                    # each file was WRITTEN with — never a drifted mod.
-                    stats[rel][f"bloom:{c}"] = (
-                        "FULL"
-                        if len(pos) > cap
-                        else {"bits": self.bloom_bits, "pos": pos}
-                    )
-        # Spark's writer emits EMPTY part files when input partitions
-        # hold no rows (tiny frames, skewed layout splits). They never
-        # appear in the stats agg (no rows → no group), so recording
-        # them would add statless manifest entries that every snapshot
-        # scan lists forever and the Iceberg export refuses. Drop them
-        # from the commit — and from disk (the per-commit subdir is
-        # invisible until the manifest references it). Footer-verified
-        # before unlinking: a file the stats agg missed for any OTHER
-        # reason (URI-match drift) stays recorded rather than deleted.
-        statless = [f for f in rel_files if f not in stats]
-        if statless:
-            import pyarrow.parquet as _pq
+        bloom_cols = [
+            c for c in self.bloom_cols if c in in_dtypes and c not in layout
+        ]
+        if bloom_cols and stats:
+            self._bloom_stats(stats, [df.schema[c] for c in bloom_cols])
+        rows = sum(e["rows"] for e in stats.values())
+        return list(stats), rows, stats, partitions, ptypes
 
-            empty = set()
-            for f in statless:
-                try:
-                    if _pq.read_metadata(self.root / f).num_rows == 0:
-                        empty.add(f)
-                except Exception:
-                    pass  # unreadable → keep the entry, refuse later
-            if empty:
-                rel_files = [f for f in rel_files if f not in empty]
-                for f in empty:
-                    (self.root / f).unlink(missing_ok=True)
-                    partitions.pop(f, None)
-        return rel_files, rows, stats, partitions, ptypes
+    def _bloom_stats(self, stats: dict[str, dict], fields: list) -> None:
+        """Add each file's ``bloom:<col>`` filter to its stats entry —
+        the one Spark job a commit runs after its data write, and only
+        for tables with bloom columns. It reads the bloom columns of the
+        just-written files by explicit file list (no directory
+        partition discovery, so nothing path-encoded is re-typed; a
+        path-encoded bloom column records no bloom and
+        :meth:`resolve_files` matches its partition value instead),
+        hashes them with :meth:`_bloom_pos` — the JVM hash the read
+        probes use — and gathers the (file, position) sets with an
+        Observation on a no-op write: per-task partial sets merged on
+        the driver, no shuffle. A filter past half occupancy prunes
+        little (k=2 false-positive rate ≥25%) and records the ``FULL``
+        marker instead of a list. The filter is SELF-DESCRIBING: bits
+        ride with the positions, so a handle opened with different
+        ``bloom_bits`` (or a clone) still probes mod the bits each file
+        was written with."""
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+        from pyspark.sql.types import StructType
+
+        obs = Observation()
+        path = F.col("_metadata.file_path")
+        self.spark.read.schema(StructType(fields)).parquet(
+            *(str(self.root / rel) for rel in stats)
+        ).observe(
+            obs,
+            *(
+                F.collect_set(
+                    F.struct(path, self._bloom_pos(F.col(f.name), probe))
+                ).alias(f"p{probe}_{f.name}")
+                for f in fields
+                for probe in (0, 1)
+            ),
+        ).write.format("noop").mode("overwrite").save()
+        got, rel_of = obs.get, {}
+        for f in fields:
+            pos: dict[str, set] = {rel: set() for rel in stats}
+            for probe in (0, 1):
+                for uri, p in got[f"p{probe}_{f.name}"]:
+                    if uri not in rel_of:
+                        rel_of[uri] = next(
+                            r for r in stats if _uri_endswith(uri, r)
+                        )
+                    pos[rel_of[uri]].add(p)
+            for rel, ps in pos.items():
+                stats[rel][f"bloom:{f.name}"] = (
+                    "FULL"
+                    if len(ps) > self.bloom_bits // 2
+                    else {"bits": self.bloom_bits, "pos": sorted(ps)}
+                )
 
     def _bloom_pos(self, col, probe: int, bits: int | None = None):
         """Probe ``probe``'s bit position for a value: xxhash64 of the

@@ -5,20 +5,12 @@ from interop_datalake_spark.operators.pandas_ops import (
     make_clip_scale_udf,
     make_weighted_mean_udf,
 )
-from interop_datalake_spark.operators.skew import (
-    salted_agg,
-    salted_join,
-    write_bucketed,
-)
 from interop_datalake_spark.operators.topk import top_k_per_group
 
 __all__ = [
     "asof_join",
     "range_join",
     "top_k_per_group",
-    "salted_join",
-    "salted_agg",
-    "write_bucketed",
     "demean_per_group",
     "batch_augment",
     "make_clip_scale_udf",

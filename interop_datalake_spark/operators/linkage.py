@@ -20,8 +20,7 @@ equi-join; scores are rounded to 6 dp so the DuckDB oracle replays
 every candidate's score bit-for-bit. Skewed blocks (a too-common
 blocking key) are the operational hazard — at 100 TB use two
 independent blocking passes (name-prefix OR phone-suffix) and union
-the candidates, the standard multi-pass blocking recipe; the hot-key
-diagnosis tools from operators/skew.py apply unchanged.
+the candidates, the standard multi-pass blocking recipe.
 """
 
 from __future__ import annotations

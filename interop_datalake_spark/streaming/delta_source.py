@@ -63,12 +63,12 @@ from __future__ import annotations
 import json
 from urllib.parse import unquote
 
+from interop_datalake_spark.lake.txn import typed_partition_value
 from interop_datalake_spark.streaming.feed import (
     FeedReader,
     FeedSource,
     Slice,
     _stream,
-    typed_partition_value,
 )
 
 FORMAT_NAME = "delta_appends"

@@ -28,8 +28,6 @@ build; :func:`_stream` is the one ``readStream`` builder.
 
 from __future__ import annotations
 
-from datetime import date, datetime
-from decimal import Decimal
 from pathlib import Path
 
 from pyspark.sql.datasource import (
@@ -37,28 +35,6 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
-
-
-def typed_partition_value(s: str | None, ddl: str):
-    """A partition value in its canonical string form → the Python
-    value ``arrow_yield`` types as the declared arrow scalar. ``ddl``
-    is the column's Spark simple type string (``int``, ``bigint``,
-    ``decimal(10,2)``, ``timestamp_ntz``, …)."""
-    if s is None:
-        return None
-    if ddl in ("int", "bigint", "smallint", "tinyint"):
-        return int(s)
-    if ddl in ("float", "double"):
-        return float(s)
-    if ddl == "boolean":
-        return s == "true"
-    if ddl == "date":
-        return date.fromisoformat(s)
-    if ddl.startswith("timestamp"):
-        return datetime.fromisoformat(s)
-    if ddl.startswith("decimal"):
-        return Decimal(s)
-    return s
 
 
 class Slice(InputPartition):

@@ -27,14 +27,13 @@ from __future__ import annotations
 
 import json
 from pathlib import Path
-from urllib.parse import unquote
 
+from interop_datalake_spark.lake.txn import typed_partition_value
 from interop_datalake_spark.streaming.feed import (
     FeedReader,
     FeedSource,
     Slice,
     _stream,
-    typed_partition_value,
 )
 
 FORMAT_NAME = "txntable"
@@ -98,8 +97,8 @@ class TxnTableStreamReader(FeedReader):
         return _latest_version(self.manifest_dir)
 
     def _plan(self, start: int, end: int) -> list[Slice]:
-        # one slice per added file; partition values decode from the
-        # Hive path encoding and type through the log's recorded DDL
+        # one slice per added file; partition values are the log's
+        # (already unescaped) strings, typed through its recorded DDL
         slices = []
         for v in range(start + 1, end + 1):
             rec = json.loads((self.manifest_dir / f"v{v}.json").read_text())
@@ -108,10 +107,7 @@ class TxnTableStreamReader(FeedReader):
                 raw = rec.get("partitions", {}).get(rel, {})
                 constants = {
                     c: typed_partition_value(
-                        None
-                        if raw.get(c) in (None, "__HIVE_DEFAULT_PARTITION__")
-                        else unquote(raw[c]),
-                        ptypes.get(c, "string"),
+                        raw.get(c), ptypes.get(c, "string")
                     )
                     for c in rec.get("partition_cols", [])
                 }

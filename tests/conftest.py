@@ -143,8 +143,8 @@ _SLOW_TESTS = {
     "test_txn.py::test_checkpoint_bounds_log_replay",
     "test_txn.py::test_clustered_compact_enables_data_skipping",
     "test_txn.py::test_delete_carries_untouched_files_by_reference",
-    "test_txn.py::test_footer_stats_equivalent_to_agg",
-    "test_txn.py::test_footer_stats_fallback_types_still_pruned",
+    "test_txn.py::test_footer_stats_equal_spark_oracle",
+    "test_txn.py::test_timestamp_stats_prune",
     "test_txn.py::test_footer_stats_property_random_frames",
     "test_txn.py::test_merge_file_pruning_carries_untouched_files",
     "test_txn.py::test_read_changes_feed",

@@ -6,6 +6,7 @@ transform-literal evaluation must equal the per-literal build."""
 import os
 import shutil
 import tempfile
+import uuid
 from datetime import date
 
 import pytest
@@ -26,7 +27,7 @@ def lake(tmp_path, spark):
     return DatalakeSession(lake_root=str(tmp_path / "lake"), spark=spark)
 
 
-def _lifecycle(session, spark, sf_dir, driver_on: bool):
+def _lifecycle(session, spark, sf_dir, driver_on: bool, **table_kw):
     spark.conf.set(_KEY, str(32 * 1024 * 1024) if driver_on else "0")
     try:
         orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
@@ -34,12 +35,17 @@ def _lifecycle(session, spark, sf_dir, driver_on: bool):
             F.col("o_custkey").alias("custkey"),
             F.col("o_totalprice").alias("price"),
             F.col("o_orderpriority").alias("prio"),  # values with spaces
+            F.col("o_orderdate").cast("timestamp").alias("ts"),
+            F.col("o_totalprice").cast("decimal(10,2)").alias("amt"),
         )
         t = TxnTable(
             session,
-            f"t_{'on' if driver_on else 'off'}",
-            stats_cols=["o_orderkey"],
-            partition_cols=["prio"],
+            f"t_{'on' if driver_on else 'off'}_{len(table_kw)}",
+            **{
+                "stats_cols": ["o_orderkey"],
+                "partition_cols": ["prio"],
+                **table_kw,
+            },
         )
         t.append(orders.filter(F.col("o_orderkey") < 300).repartition(3))
         t.merge(
@@ -84,9 +90,35 @@ def _lifecycle(session, spark, sf_dir, driver_on: bool):
 
 
 def test_driver_commit_state_identical_to_distributed(lake, spark, sf_dir):
+    """Both writers leave identical state through an append, a merge
+    and a vector delete: files per commit, partition values, per-file
+    stats and every read."""
     a = _lifecycle(lake, spark, sf_dir, driver_on=False)
     b = _lifecycle(lake, spark, sf_dir, driver_on=True)
     assert a == b
+
+
+@pytest.mark.parametrize(
+    "table_kw",
+    [
+        {"stats_cols": ["o_orderkey", "ts", "amt", "prio"]},
+        {"bloom_cols": ["custkey", "prio"]},
+    ],
+    ids=["typed_stats", "bloom"],
+)
+def test_driver_commit_stats_and_blooms_identical_to_distributed(
+    lake, spark, sf_dir, table_kw
+):
+    """The same lifecycle with timestamp, decimal and path-encoded
+    stats columns, and with blooms on a data column and on a
+    path-encoded one (which records none): both writers agree."""
+    a = _lifecycle(lake, spark, sf_dir, driver_on=False, **table_kw)
+    b = _lifecycle(lake, spark, sf_dir, driver_on=True, **table_kw)
+    assert a == b
+    if "bloom_cols" in table_kw:
+        stats = list(a["stats_set"])
+        assert all(any(k == "bloom:custkey" for k, _ in st) for st in stats)
+        assert not any(k == "bloom:prio" for st in stats for k, _ in st)
 
 
 def test_part_dir_value_matches_spark_escaper(spark, tmp_path):
@@ -114,6 +146,41 @@ def test_part_dir_value_matches_spark_escaper(spark, tmp_path):
     # refused types fall back to the distributed writer
     assert _part_dir_value(True) is None
     assert _part_dir_value(1.5) is None
+
+
+def test_run_starts_matches_python_grouping():
+    """The driver write's native run split equals the per-row Python
+    grouping it replaced: after one stable sort, each run of equal
+    key tuples (NULL equal to NULL) holds exactly one group's rows,
+    in input order."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from interop_datalake_spark.lake.txn import _run_starts
+
+    rng = random.Random(8)
+    for n in (1, 2, 7, 200):
+        tbl = pa.table(
+            {
+                "pid": pa.array([rng.randint(0, 3) for _ in range(n)], pa.int32()),
+                "s": [rng.choice(["a", "b", None]) for _ in range(n)],
+                "d": [rng.choice([date(2024, 1, 1), None]) for _ in range(n)],
+            }
+        )
+        groups: dict[tuple, list[int]] = {}
+        for i, k in enumerate(zip(*(tbl.column(c).to_pylist() for c in tbl.column_names))):
+            groups.setdefault(k, []).append(i)
+        order = pc.sort_indices(
+            tbl, sort_keys=[(c, "ascending") for c in tbl.column_names]
+        )
+        starts = _run_starts(tbl.take(order))
+        runs = [
+            order.slice(lo, hi - lo).to_pylist()
+            for lo, hi in zip(starts, starts[1:] + [n])
+        ]
+        assert sorted(runs) == sorted(groups.values())
 
 
 def test_leaf_estimate_gates_like_broadcast(spark, sf_dir):
@@ -242,35 +309,78 @@ def _commit_shape(t):
     return files, rows
 
 
-def _append_python_rows(lake, spark, name, max_bytes=None):
+def _append_python_rows(lake, spark, name, max_bytes=None, **table_kw):
     if max_bytes is not None:
         spark.conf.set(_KEY, str(max_bytes))
     try:
-        t = TxnTable(lake, name, stats_cols=["id"], partition_cols=["tenant"])
+        t = TxnTable(
+            lake,
+            name,
+            stats_cols=["id", "ts", "amt", "price"],
+            partition_cols=["tenant"],
+            **table_kw,
+        )
         t.append(_python_rows(spark))
         return t
     finally:
         spark.conf.unset(_KEY)
 
 
-def test_python_rows_commit_in_one_job(lake, spark, monkeypatch):
-    """A ``createDataFrame(list)`` frame is driver-resident: its commit
-    runs exactly one Spark job (the Arrow collect) and leaves the same
-    state as the distributed writer — files per partition, rows, stats
-    — including timestamp, decimal and NaN data columns."""
-    took = _spy_path(monkeypatch)
+def _jobs_of(spark, fn):
+    """Run ``fn`` and return (its result, the Spark jobs it ran)."""
     sc = spark.sparkContext
-    sc.setJobGroup("driver-commit-one-job", "one job")
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
     try:
-        on = _append_python_rows(lake, spark, "py_on")
-        jobs = sc.statusTracker().getJobIdsForGroup("driver-commit-one-job")
+        got = fn()
+        return got, sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc.setJobGroup("", "")
+
+
+def test_python_rows_commit_in_one_job(lake, spark, monkeypatch):
+    """A ``createDataFrame(list)`` frame is driver-resident: its commit
+    runs exactly one Spark job (the Arrow collect) — timestamp and
+    decimal stats columns included, since their stats come from the
+    footers — and leaves the same state as the distributed writer:
+    files per partition, rows, stats. The NaN-holding DOUBLE stats
+    column records no bounds on either path."""
+    took = _spy_path(monkeypatch)
+    on, jobs = _jobs_of(spark, lambda: _append_python_rows(lake, spark, "py_on"))
     assert took == [True]
     assert len(jobs) == 1
+    st = on.manifest()["stats"]
+    assert all(s["ts"][0] is not None and s["amt"][0] is not None for s in st.values())
+    assert not any("price" in s for s in st.values())
     off = _append_python_rows(lake, spark, "py_off", max_bytes=0)
     assert took == [True, False]  # maxBytes=0 disables the driver write
     assert _commit_shape(on) == _commit_shape(off)
+
+
+def test_bloom_commit_runs_one_bloom_job(lake, spark, monkeypatch):
+    """After the data write, a commit runs a Spark job only for bloom
+    columns, and then exactly one: the collect plus the bloom job on
+    the driver path, the write plus the bloom job on the distributed
+    path — each leaving the same blooms."""
+    took = _spy_path(monkeypatch)
+    on, jobs_on = _jobs_of(
+        spark,
+        lambda: _append_python_rows(lake, spark, "bl_on", bloom_cols=["body"]),
+    )
+    off, jobs_off = _jobs_of(
+        spark,
+        lambda: _append_python_rows(
+            lake, spark, "bl_off", max_bytes=0, bloom_cols=["body"]
+        ),
+    )
+    assert took == [True, False]
+    assert (len(jobs_on), len(jobs_off)) == (2, 2)
+    assert _commit_shape(on) == _commit_shape(off)
+    assert all(
+        isinstance(s.get("bloom:body"), dict)
+        for s in on.manifest()["stats"].values()
+    )
+    assert on.read(bloom_eq={"body": "x" * 7}).count() == 3
 
 
 def test_python_rows_over_cap_fall_back(lake, spark, monkeypatch):

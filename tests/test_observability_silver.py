@@ -1,4 +1,4 @@
-"""R18 observability analogs + silver-layer FHIR extraction + salted agg."""
+"""R18 observability analogs + silver-layer FHIR extraction."""
 
 import logging
 
@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from interop_datalake_spark.lake.silver import extract_fields, to_silver
 from interop_datalake_spark.observability import traced, with_metrics
-from interop_datalake_spark.operators.skew import salted_agg
 from interop_datalake_spark.sources.tables import load_table
 
 BRONZE = [
@@ -57,24 +56,3 @@ def test_with_metrics_single_pass(spark, sf_dir):
     n = observed.count()
     assert obs.get["rows"] == n
     assert obs.get["qty"] > 0
-
-
-def test_salted_agg_matches_plain(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    aggs = {
-        "cnt": F.count(F.lit(1)),
-        "total_qty": F.sum("l_quantity"),
-        "min_price": F.min("l_extendedprice"),
-        "max_price": F.max("l_extendedprice"),
-    }
-    salted = {
-        r["l_returnflag"]: (r["cnt"], round(r["total_qty"], 2), r["min_price"], r["max_price"])
-        for r in salted_agg(li, "l_returnflag", aggs, n_salts=16).collect()
-    }
-    plain = {
-        r["l_returnflag"]: (r["cnt"], round(r["total_qty"], 2), r["min_price"], r["max_price"])
-        for r in li.groupBy("l_returnflag")
-        .agg(*[c.alias(n) for n, c in aggs.items()])
-        .collect()
-    }
-    assert salted == plain

@@ -9,6 +9,7 @@ from interop_datalake_spark.lake.publish import (
     publish_binary,
 )
 from interop_datalake_spark.lake.retrieve import retrieve_binary_batch
+from interop_datalake_spark.lake.txn import TxnTable
 from interop_datalake_spark.session import DatalakeSession
 from interop_datalake_spark.sources.tables import load_table, read_json_documents
 
@@ -50,6 +51,28 @@ def test_overwrite_partition_on_empty_table_survives_publish(spark, tmp_path):
     assert [r["resource_id"] for r in a.collect()] == ["a9"]
     b = retrieve_binary_batch(session, "tenantB", ["b1"])
     assert [r["resource_id"] for r in b.collect()] == ["b1"]
+
+
+def test_overwrite_partition_on_fresh_table_outside_layout(spark, tmp_path):
+    """A table outside TXN_LAYOUT with no commits is partitioned by
+    the ``fhir_tenant_id`` column the overwrite stamps: each call
+    replaces only its own tenant's rows."""
+    session = DatalakeSession(lake_root=str(tmp_path / "lake"), spark=spark)
+    ddl = "resource_id STRING, body STRING"
+    for tenant, rows in (
+        ("tA", [("r1", "x")]),
+        ("tB", [("r2", "y"), ("r3", "z")]),
+        ("tA", [("r4", "w")]),
+    ):
+        got = overwrite_tenant_partition(
+            session, "other", tenant, spark.createDataFrame(rows, ddl)
+        )
+        assert got == len(rows)
+    t = TxnTable(session, "other")
+    assert t._effective_partition_cols() == ["fhir_tenant_id"]
+    assert sorted(
+        (r["fhir_tenant_id"], r["resource_id"]) for r in t.read().collect()
+    ) == [("tA", "r4"), ("tB", "r2"), ("tB", "r3")]
 
 
 def test_json_scan_bronze_fidelity(spark, tmp_path):

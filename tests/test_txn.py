@@ -1018,70 +1018,95 @@ def test_append_drops_empty_part_files(table, spark):
     assert _snapshot(table) == {(1, "solo")}
 
 
-def test_footer_stats_equivalent_to_agg(session, spark):
-    """The round-14 footer fast path (stats from parquet footers, no
-    second Spark job) must record EXACTLY what the Spark agg records
-    for every _FOOTER_STAT_TYPES shape — ints, strings (non-ASCII),
-    dates, all-null columns — including the rows count the Iceberg
-    export requires. Pinned by running BOTH paths on the same frame."""
-    import json as _json
+_MAX_BYTES = "spark.interop.datalake.driverCommit.maxBytes"
 
-    from datetime import date as _date
 
-    from interop_datalake_spark.lake import txn as _txn
+def _append_on(spark, t, df, max_bytes=None):
+    """``t.append(df)`` with the driver write on (default cap) or, for
+    ``max_bytes=0``, the distributed writer."""
+    if max_bytes is not None:
+        spark.conf.set(_MAX_BYTES, str(max_bytes))
+    try:
+        return t.append(df)
+    finally:
+        spark.conf.unset(_MAX_BYTES)
+
+
+def _assert_stats_match_spark(spark, t, cols):
+    """Oracle inside the test: every recorded per-file stats entry
+    equals a Spark count/min/max over ``spark.read.parquet(<file>)``."""
+    from interop_datalake_spark.lake.txn import _stats_encode
+
+    m = t.manifest()
+    assert m["files"]
+    for f in m["files"]:
+        row = (
+            spark.read.parquet(str(t.root / f))
+            .agg(
+                F.count(F.lit(1)).alias("rows"),
+                *[F.min(c).alias(f"lo_{c}") for c in cols],
+                *[F.max(c).alias(f"hi_{c}") for c in cols],
+            )
+            .collect()[0]
+        )
+        want = {"rows": row["rows"]}
+        for c in cols:
+            want[c] = [_stats_encode(row[f"lo_{c}"]), _stats_encode(row[f"hi_{c}"])]
+        assert m["stats"][f] == want, (f, m["stats"][f], want)
+
+
+_TYPED_DDL = (
+    "k INT, s STRING, d DATE, ts TIMESTAMP, amt DECIMAL(10,2), "
+    "big DECIMAL(30,1), flag BOOLEAN, n STRING"
+)
+_TYPED_COLS = ["k", "s", "d", "ts", "amt", "big", "flag", "n"]
+
+
+@pytest.mark.parametrize("max_bytes", [None, 0], ids=["driver", "distributed"])
+def test_footer_stats_equal_spark_oracle(session, spark, max_bytes):
+    """Footers are the one stats source on both write paths: the
+    recorded stats equal a Spark count/min/max over the written file
+    for int, string (non-ASCII), date, timestamp, both decimal
+    encodings (INT64-backed DECIMAL(10,2), FLBA DECIMAL(30,1)),
+    boolean and all-null columns."""
+    from datetime import datetime as _dt
 
     rows = [
-        (5, "beta", _date(2021, 5, 6), None),
-        (2, "alphaé", _date(2020, 1, 1), None),
-        (9, None, _date(2023, 12, 31), None),
+        (5, "beta", date(2021, 5, 6), _dt(2021, 5, 6, 7, 8, 9, 123456),
+         Decimal("-3.25"), Decimal("12345678901234567890.5"), True, None),
+        (2, "alphaé", date(2020, 1, 1), _dt(1969, 12, 31, 23, 59, 59),
+         Decimal("0.00"), Decimal("-1.0"), False, None),
+        (9, None, date(2023, 12, 31), None, None, None, None, None),
     ]
-    ddl = "k INT, s STRING, d DATE, n STRING"
-    cols = ["k", "s", "d", "n"]
-
-    t1 = TxnTable(session, "fs_fast", stats_cols=cols)
-    t1.append(spark.createDataFrame(rows, ddl).coalesce(1))
-    fast = _json.loads(
-        (t1.root / "_manifests" / "v1.json").read_text()
-    )["stats"]
-
-    # force the agg path by disabling the footer reader
-    orig = _txn._footer_stats
-    _txn._footer_stats = lambda *a, **k: None
-    try:
-        t2 = TxnTable(session, "fs_agg", stats_cols=cols)
-        t2.append(spark.createDataFrame(rows, ddl).coalesce(1))
-    finally:
-        _txn._footer_stats = orig
-    agg = _json.loads(
-        (t2.root / "_manifests" / "v1.json").read_text()
-    )["stats"]
-
-    assert len(fast) == len(agg) == 1
-    fstats = next(iter(fast.values()))
-    astats = next(iter(agg.values()))
-    assert fstats == astats, (fstats, astats)
-    assert fstats["rows"] == 3
-    assert fstats["k"] == [2, 9]
-    assert fstats["s"] == ["alphaé", "beta"]
-    assert fstats["n"] == [None, None]
+    t = TxnTable(session, "fs_oracle", stats_cols=_TYPED_COLS)
+    _append_on(
+        spark, t, spark.createDataFrame(rows, _TYPED_DDL).coalesce(1), max_bytes
+    )
+    _assert_stats_match_spark(spark, t, _TYPED_COLS)
+    (st,) = t.manifest()["stats"].values()
+    assert st["rows"] == 3
+    assert st["k"] == [2, 9]
+    assert st["s"] == ["alphaé", "beta"]
+    assert st["n"] == [None, None]
+    assert st["amt"] == [{"_t": "dec", "v": "-3.25"}, {"_t": "dec", "v": "0.00"}]
+    assert st["flag"] == [False, True]
 
 
-def test_footer_stats_fallback_types_still_pruned(session, spark):
-    """Timestamp stats columns fall back to the agg path (INT96
-    footers carry no statistics) — pruning still works."""
+@pytest.mark.parametrize("max_bytes", [None, 0], ids=["driver", "distributed"])
+def test_timestamp_stats_prune(session, spark, max_bytes):
+    """Timestamp stats come from the INT64 footers both writers
+    produce (Spark under TIMESTAMP_MICROS, pyarrow natively), so a
+    timestamp key range prunes on either path."""
     from datetime import datetime as _dt
 
     t = TxnTable(session, "fs_ts", stats_cols=["ts"])
-    t.append(
-        spark.createDataFrame(
-            [(_dt(2020, 1, 1),)], "ts TIMESTAMP"
-        ).coalesce(1)
-    )
-    t.append(
-        spark.createDataFrame(
-            [(_dt(2024, 1, 1),)], "ts TIMESTAMP"
-        ).coalesce(1)
-    )
+    for y in (2020, 2024):
+        _append_on(
+            spark,
+            t,
+            spark.createDataFrame([(_dt(y, 1, 1),)], "ts TIMESTAMP").coalesce(1),
+            max_bytes,
+        )
     assert (
         len(
             t.resolve_files(
@@ -1092,20 +1117,73 @@ def test_footer_stats_fallback_types_still_pruned(session, spark):
     )
 
 
+def test_int96_session_timestamp_stats_record_no_bounds(session, spark):
+    """A session that still writes legacy INT96 timestamps gets no
+    footer bounds for them: the timestamp stats column records
+    nothing, every file is scanned, and reads stay exact."""
+    from datetime import datetime as _dt
+
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.parquet.outputTimestampType"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        t = TxnTable(session, "fs_int96", stats_cols=["ts", "k"])
+        for k, y in ((1, 2020), (2, 2024)):
+            _append_on(
+                spark,
+                t,
+                spark.createDataFrame(
+                    [(k, _dt(y, 1, 1))], "k INT, ts TIMESTAMP"
+                ).coalesce(1),
+                0,
+            )
+    finally:
+        spark.conf.set(key, old)
+    m = t.manifest()
+    for f in m["files"]:
+        md = pq.read_metadata(t.root / f)
+        assert md.schema.column(1).physical_type == "INT96"
+        assert "ts" not in m["stats"][f] and "k" in m["stats"][f]
+    lo, hi = _dt(2023, 1, 1), _dt(2025, 1, 1)
+    assert len(t.resolve_files(key_range=("ts", lo, hi))) == 2
+    assert [r["k"] for r in t.read(key_range=("ts", lo, hi)).collect()] == [2]
+
+
+@pytest.mark.parametrize("max_bytes", [None, 0], ids=["driver", "distributed"])
+def test_nan_double_stats_never_prune_live_rows(session, spark, max_bytes):
+    """A DOUBLE stats column records no bounds. Spark's footers keep a
+    NaN max ([1.0, NaN]) and ``lo <= NaN`` is False, so a key-range
+    read used to prune the file holding the 1.0 row; pyarrow's
+    footers drop NaN, so no footer bound is safe. Pinned on both
+    write paths."""
+    t = TxnTable(session, "nan_stats", stats_cols=["x"])
+    for rows in ([(1.0,), (float("nan"),)], [(50.0,)]):
+        _append_on(
+            spark,
+            t,
+            spark.createDataFrame(rows, "x DOUBLE").coalesce(1),
+            max_bytes,
+        )
+    got = t.read(key_range=("x", 0.0, 10.0)).collect()
+    assert [r["x"] for r in got] == [1.0]
+
+
 def test_footer_stats_property_random_frames(session, spark):
-    """Property fuzz for the footer fast path: random typed frames
-    (ints incl. extremes, strings incl. non-ASCII/empty, dates,
-    nulls, multiple files) must record IDENTICAL stats through the
-    footer path and the Spark agg path."""
-    import json as _json
+    """Property fuzz for the footer stats: random typed frames (ints
+    incl. extremes, strings incl. non-ASCII/empty, dates, timestamps,
+    both decimal encodings, booleans, nulls, multiple files) written
+    by either writer record exactly what a Spark count/min/max over
+    each written file returns."""
     import random
 
-    from datetime import date as _date
-
-    from interop_datalake_spark.lake import txn as _txn
+    from datetime import datetime as _dt
 
     rng = random.Random(14)
     pool_s = ["", "a", "zz", "álpha", "Ωmega", "x" * 80, "naïve", None]
+    pool_ts = [None, _dt(1970, 1, 1), _dt(2262, 4, 11), _dt(1900, 1, 1, 0, 0, 1)]
+    cols = ["i", "s", "d", "ts", "a", "b", "bo"]
     for trial in range(6):
         n = rng.randint(1, 12)
         rows = [
@@ -1117,43 +1195,26 @@ def test_footer_stats_property_random_frames(session, spark):
                 rng.choice(
                     [
                         None,
-                        _date(1970, 1, 1),
-                        _date(2262, 4, 11),
-                        _date(2020, rng.randint(1, 12), 1),
+                        date(1970, 1, 1),
+                        date(2262, 4, 11),
+                        date(2020, rng.randint(1, 12), 1),
                     ]
                 ),
+                rng.choice(pool_ts + [_dt(2020, 1, 1, rng.randint(0, 23))]),
+                rng.choice(
+                    [None, Decimal("99999999.99"), Decimal(rng.randint(-9999, 9999)) / 100]
+                ),
+                rng.choice([None, Decimal(rng.randint(-(10**20), 10**20)) / 10]),
+                rng.choice([None, True, False]),
             )
             for _ in range(n)
         ]
-        nparts = rng.randint(1, 3)
         df = spark.createDataFrame(
-            rows, "i INT, s STRING, d DATE"
-        ).repartition(nparts)
-
-        t1 = TxnTable(
-            session, f"fsp_f{trial}", stats_cols=["i", "s", "d"]
-        )
-        t1.append(df)
-        fast = _json.loads(
-            (t1.root / "_manifests" / "v1.json").read_text()
-        )["stats"]
-
-        orig = _txn._footer_stats
-        _txn._footer_stats = lambda *a, **k: None
-        try:
-            t2 = TxnTable(
-                session, f"fsp_a{trial}", stats_cols=["i", "s", "d"]
-            )
-            t2.append(df)
-        finally:
-            _txn._footer_stats = orig
-        agg = _json.loads(
-            (t2.root / "_manifests" / "v1.json").read_text()
-        )["stats"]
-
-        # compare per-file stats VALUES (file names differ by uuid):
-        # sort each side's entries canonically
-        canon = lambda st: sorted(
-            _json.dumps(v, sort_keys=True) for v in st.values()
-        )
-        assert canon(fast) == canon(agg), (trial, fast, agg)
+            rows,
+            "i INT, s STRING, d DATE, ts TIMESTAMP, a DECIMAL(10,2), "
+            "b DECIMAL(30,1), bo BOOLEAN",
+        ).repartition(rng.randint(1, 3))
+        t = TxnTable(session, f"fsp_{trial}", stats_cols=cols)
+        _append_on(spark, t, df, None if trial % 2 else 0)
+        assert t.manifest()["rows"] == n
+        _assert_stats_match_spark(spark, t, cols)

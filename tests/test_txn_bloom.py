@@ -161,6 +161,22 @@ class TestBloomPruning:
         assert t.read(bloom_eq={"tag": "7"}).count() == 1
         assert t.read(bloom_eq={"tag": "103"}).count() == 0
 
+    def test_bloom_eq_on_int_partition_casts_literal(self, spark, lake):
+        # a path-encoded column records no bloom; its bloom_eq prunes
+        # by the files' partition values against the literal CAST to
+        # the column type, so 5.0 and '05' find INT 5 like the row
+        # filter does, and other partitions are pruned
+        t = TxnTable(lake, "bpi", partition_cols=["code"], bloom_cols=["code"])
+        t.append(
+            spark.createDataFrame([(1, 5), (2, 7), (3, None)], "k INT, code INT")
+        )
+        m = t.manifest()
+        assert not any("bloom:code" in s for s in m["stats"].values())
+        for probe in (5, 5.0, "05"):
+            assert len(t.resolve_files(bloom_eq={"code": probe})) == 1
+            got = t.read(bloom_eq={"code": probe}).collect()
+            assert [r["k"] for r in got] == [1], probe
+
     def test_bloom_survives_clone(self, spark, lake):
         t = TxnTable(lake, "b6", bloom_cols=["tag"])
         for g in range(3):
