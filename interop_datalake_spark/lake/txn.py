@@ -153,6 +153,86 @@ def typed_partition_value(s: str | None, ddl: str):
     return s
 
 
+def _holds_type(v, ddl: str) -> bool:
+    """Whether a Python literal is already a value of Spark type
+    ``ddl`` in the form :func:`typed_partition_value` returns, so it
+    compares with column values without a cast."""
+    if isinstance(v, bool):  # an int subclass: check first
+        return ddl == "boolean"
+    if isinstance(v, int):
+        return ddl in ("tinyint", "smallint", "int", "bigint")
+    if isinstance(v, float):
+        return ddl in ("float", "double")
+    if isinstance(v, Decimal):
+        return ddl.startswith("decimal")
+    if isinstance(v, datetime):
+        return ddl.startswith("timestamp")
+    if isinstance(v, date):
+        return ddl == "date"
+    return isinstance(v, str) and ddl == "string"
+
+
+def _is_number(v) -> bool:
+    return isinstance(v, (int, float, Decimal)) and not isinstance(v, bool)
+
+
+def _path_col_groups(
+    rel_files: list[str], state: dict, log_names: set | None
+) -> dict[tuple, list[str]]:
+    """A snapshot's files grouped by the columns their paths encode
+    (PARTITION EVOLUTION: one group per historical spec, a handful,
+    never per file). A file's path-encoded set is the manifest's
+    RECORDED keys for that file, intersected with the log schema, NOT
+    the current ``partition_cols``: a file written under an older spec
+    whose path column was later dropped or replaced must still have
+    that column injected from its path (round-5 advice finding).
+    Transform columns are HIDDEN and never injected. Order: current-
+    spec columns first (``partition_cols`` order), then dropped ones
+    by name — stable."""
+    pcols = state.get("partition_cols") or []
+    parts = state.get("partitions", {})
+    tf_names = set(state.get("partition_transforms") or {})
+    groups: dict[tuple, list[str]] = {}
+    for f in rel_files:
+        eligible = {
+            c
+            for c in parts.get(f, {})
+            if c not in tf_names and (log_names is None or c in log_names)
+        }
+        key = tuple(c for c in pcols if c in eligible) + tuple(
+            sorted(eligible - set(pcols))
+        )
+        groups.setdefault(key, []).append(f)
+    return groups
+
+
+def _arrow_type_matches(got, want) -> bool:
+    """Whether a data file's column of Arrow type ``got`` reads as
+    ``want`` with no value change: equal types, string/large_string,
+    binary/large_binary, or timestamps of one unit and time-zone kind
+    (a zone name is metadata). Anything else — nanosecond INT96, a
+    narrower integer, another decimal scale — is a schema difference
+    the driver read leaves to Spark."""
+    import pyarrow.types as pt
+
+    if got == want:
+        return True
+    if pt.is_timestamp(got) and pt.is_timestamp(want):
+        return got.unit == want.unit and (got.tz is None) == (want.tz is None)
+    for family in (
+        (pt.is_string, pt.is_large_string),
+        (pt.is_binary, pt.is_large_binary),
+    ):
+        if any(p(got) for p in family) and any(p(want) for p in family):
+            return True
+    return False
+
+
+def _as_list(want) -> list:
+    """A filter value or collection of values as a list."""
+    return list(want) if isinstance(want, (list, tuple, set)) else [want]
+
+
 def _footer_bounds(st, col) -> tuple:
     """(min, max) of one column chunk's footer statistics ``st`` as a
     Spark ``collect`` returns them. Integer-backed decimals (Spark
@@ -285,6 +365,12 @@ def _run_starts(keys) -> list[int]:
 # layout values) and one file per run of equal keys, rows in input
 # order, so file counts/contents match what the distributed writer
 # produces for the same execution.
+#
+# The same cap bounds the keyed DRIVER READ (TxnTable._driver_read),
+# the read-side twin: a pruned lookup whose manifest-resolved files
+# total at most the cap on disk, and whose Arrow result stays under
+# it, is read by pyarrow on the driver with no Spark job. 0 disables
+# it too, so every read plans a Spark scan.
 
 _DRIVER_COMMIT_MAX_BYTES_KEY = "spark.interop.datalake.driverCommit.maxBytes"
 _DRIVER_COMMIT_MAX_BYTES_DEFAULT = str(32 * 1024 * 1024)
@@ -1086,7 +1172,6 @@ class TxnTable:
         )
         with_lineage = bool(dv_paths) or keep_lineage
 
-        pcols = state.get("partition_cols") or []
         ptypes = state.get("partition_types") or {}
         schema_json = state.get("schema")
         st = None
@@ -1103,37 +1188,12 @@ class TxnTable:
         # ones in the data or legitimately absent). The manifest's
         # per-file partition values are the per-COLUMN discriminator:
         # a column recorded for a file was path-encoded at its write;
-        # anything else reads as an ordinary data column. Files group
-        # by their path-encoded column set (one group per historical
-        # spec — a handful, never per-file), each group gets the
-        # matching read schema + injections, and the frames union by
-        # name — no spec's files are ever silently NULLed.
-        parts = state.get("partitions", {})
-        # each file's path-encoded set comes from the manifest's
-        # RECORDED keys for that file (intersected with the log
-        # schema), NOT from the current partition_cols: a file written
-        # under an older spec whose path column was later dropped or
-        # replaced must still have that column injected from its path
-        # — filtering on the current spec would silently NULL it
-        # (round-5 advice finding). Ordering: current-spec columns
-        # first (pcols order), then dropped ones by name — stable.
+        # anything else reads as an ordinary data column. Each group of
+        # _path_col_groups gets the matching read schema + injections,
+        # and the frames union by name — no spec's files are ever
+        # silently NULLed.
         log_names = {f.name for f in st.fields} if st is not None else None
-        tf_names = set(state.get("partition_transforms") or {})
-        groups: dict[tuple, list[str]] = {}
-        for f in rel_files:
-            recorded = parts.get(f, {})
-            eligible = {
-                c
-                for c in recorded
-                # transform columns are HIDDEN: path/manifest only,
-                # never injected into the read-back frame
-                if c not in tf_names
-                and (log_names is None or c in log_names)
-            }
-            key = tuple(c for c in pcols if c in eligible) + tuple(
-                sorted(eligible - set(pcols))
-            )
-            groups.setdefault(key, []).append(f)
+        groups = _path_col_groups(rel_files, state, log_names)
 
         def _read(files: list[str], path_cols: tuple) -> DataFrame:
             reader = self.spark.read.format("parquet")
@@ -1281,7 +1341,9 @@ class TxnTable:
 
         ``partition_filter={col: value_or_list}`` prunes by recorded
         partition values — directory-semantics pruning, the first and
-        cheapest cut on a tenant/date-partitioned 100 TB table.
+        cheapest cut on a tenant/date-partitioned 100 TB table. Values
+        compare in the column's recorded type
+        (:meth:`_partition_literals`): ``5.0`` finds INT ``5``.
 
         ``key_range=(col, lo, hi)`` prunes by per-file min/max stats:
         files whose recorded range doesn't intersect [lo, hi] are
@@ -1306,6 +1368,11 @@ class TxnTable:
             if version is not None:
                 raise ValueError("pass either version or as_of_ts, not both")
             version = self.version_at_timestamp(as_of_ts)
+        if version is None:
+            # one snapshot per read: the file list, the partition map
+            # and the schema all come from this version, even when a
+            # commit lands mid-read
+            version = self.current_version()
         m = self.manifest(version)
         if not m["files"]:
             if m.get("schema") is not None:
@@ -1321,8 +1388,7 @@ class TxnTable:
                     [], StructType.fromJson(json.loads(m["schema"]))
                 )
             raise FileNotFoundError(
-                f"table {self.name} has no committed data at "
-                f"version {version if version is not None else self.current_version()}"
+                f"table {self.name} has no committed data at version {version}"
             )
         fs = self.resolve_files(
             version=version,
@@ -1350,23 +1416,23 @@ class TxnTable:
                 else {}
             )
             for col, want in partition_filter.items():
-                vals = [
-                    str(w)
-                    for w in (
-                        want
-                        if isinstance(want, (list, tuple, set))
-                        else [want]
-                    )
-                ]
                 if col in transforms:
                     spec = transforms[col]
                     src = spec[-1]
                     col_expr = _cached_transform_expr(
                         self.spark, src, spec, src_types.get(src)
                     )
+                    vals = [str(w) for w in _as_list(want)]
+                    df = df.filter(col_expr.cast("string").isin(vals))
+                    continue
+                typed = self._partition_literals(col, want, m)
+                if typed is None:  # no recorded type: compare strings
+                    vals = [str(w) for w in _as_list(want)]
+                    df = df.filter(F.col(col).cast("string").isin(vals))
                 else:
-                    col_expr = F.col(col)
-                df = df.filter(col_expr.cast("string").isin(vals))
+                    df = df.filter(
+                        F.col(col).isin(typed) if typed else F.lit(False)
+                    )
         for col, lo, hi in _normalize_key_ranges(key_range):
             df = df.filter(F.col(col).between(lo, hi))
         if bloom_eq:
@@ -1393,20 +1459,26 @@ class TxnTable:
         parts = m.get("partitions", {})
         if partition_filter:
             for col, want in partition_filter.items():
-                wants = {
-                    str(w)
-                    for w in (
-                        want
-                        if isinstance(want, (list, tuple, set))
-                        else [want]
-                    )
-                }
-                fs = [
-                    f
-                    for f in fs
-                    if parts.get(f, {}).get(col) is None
-                    or parts[f][col] in wants
-                ]
+                typed = self._partition_literals(col, want, m)
+                if typed is None:  # no recorded type: compare strings
+                    wants = {str(w) for w in _as_list(want)}
+                    fs = [
+                        f
+                        for f in fs
+                        if parts.get(f, {}).get(col) is None
+                        or parts[f][col] in wants
+                    ]
+                    continue
+                typ = m["partition_types"][col]
+                seen: dict = {}  # raw path value -> does it match
+                keep = []
+                for f in fs:
+                    raw = parts.get(f, {}).get(col)
+                    if raw is not None and raw not in seen:
+                        seen[raw] = typed_partition_value(raw, typ) in typed
+                    if raw is None or seen[raw]:
+                        keep.append(f)
+                fs = keep
         for col, lo, hi in _normalize_key_ranges(key_range):
             stats = m.get("stats", {})
             fs = [
@@ -1505,6 +1577,146 @@ class TxnTable:
                     )
                 ]
         return fs
+
+    def _driver_read(
+        self,
+        version: int,
+        partition_filter: dict[str, object] | None = None,
+        key_range: tuple[str, object, object]
+        | list[tuple[str, object, object]]
+        | None = None,
+        keys: tuple[str, list] | None = None,
+    ):
+        """The rows of a small keyed read as a ``pyarrow.Table``, read
+        on the driver with no Spark job, or None when Spark must read
+        them. The read-side twin of :meth:`_driver_commit_write`: the
+        files :meth:`resolve_files` keeps at ``version`` are read by
+        one pyarrow parquet dataset scan under the log schema, the
+        path-encoded partition columns are filled from the manifest's
+        recorded values (:func:`typed_partition_value`), and the same
+        row filters as :meth:`read` apply — ``partition_filter`` in
+        typed form, ``key_range`` as BETWEEN — plus ``keys=(col,
+        values)`` as an IN. Columns come in the log-schema order
+        :meth:`_load_files` produces, and files in the order Spark's
+        scan reads them (largest first), so ``collect()`` and a first
+        row agree with the Spark path.
+
+        None when any of these holds: the driver cap
+        (``_DRIVER_COMMIT_MAX_BYTES_KEY``) is 0, the resolved files are
+        larger on disk than the cap, or the result's Arrow size grows
+        past it; a resolved file carries a deletion vector; the table
+        has partition transforms or no log schema; a file's footer
+        schema differs from the log schema (a file that predates an
+        added column); or a filtered or path-encoded column is of a
+        type whose Arrow comparison or path decoding could differ from
+        Spark's (only strings, integers and dates qualify)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+        from pyarrow.fs import LocalFileSystem
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import StructField, StructType
+
+        max_bytes = self._driver_max_bytes()
+        m = self._state(version)
+        if (
+            max_bytes <= 0
+            or m.get("schema") is None
+            or m.get("partition_transforms")
+        ):
+            return None
+        fs = self.resolve_files(
+            version=version,
+            key_range=key_range,
+            partition_filter=partition_filter,
+        )
+        dvs = m.get("dvs") or {}
+        if any(dvs.get(f) for f in fs):
+            return None
+        sizes = {f: os.path.getsize(self.root / f) for f in fs}
+        if sum(sizes.values()) > max_bytes:
+            return None
+        st = StructType.fromJson(json.loads(m["schema"]))
+        ddl = {f.name: f.dataType.simpleString() for f in st.fields}
+        try:
+            want = to_arrow_schema(
+                StructType(
+                    [StructField(f.name, f.dataType, True) for f in st.fields]
+                )
+            )
+        except TypeError:
+            return None  # a type Arrow does not carry
+
+        def literals(col, vals):
+            if ddl.get(col) not in _PATH_SAFE_LAYOUT_TYPES or not all(
+                _holds_type(v, ddl[col]) for v in vals
+            ):
+                return None
+            return pa.array(vals, type=want.field(col).type)
+
+        where = pc.scalar(True)
+        for col, wanted in (partition_filter or {}).items():
+            typed = self._partition_literals(col, wanted, m)
+            arr = None if typed is None else literals(col, typed)
+            if arr is None:
+                return None
+            where &= pc.field(col).isin(arr)
+        for col, lo, hi in _normalize_key_ranges(key_range):
+            arr = literals(col, [lo, hi])
+            if arr is None:
+                return None
+            where &= (pc.field(col) >= arr[0]) & (pc.field(col) <= arr[1])
+        if keys is not None:
+            arr = literals(keys[0], [v for v in keys[1] if v is not None])
+            if arr is None:
+                return None
+            where &= pc.field(keys[0]).isin(arr)
+
+        # each file's path-encoded values become its partition
+        # expression, from which the scan fills those columns
+        parts = m.get("partitions", {})
+        ptypes = m.get("partition_types") or {}
+        paths, known, data_cols = [], [], []
+        for path_cols, files in _path_col_groups(fs, m, set(ddl)).items():
+            if any(
+                ddl[c] not in _PATH_SAFE_LAYOUT_TYPES
+                or ptypes.get(c, ddl[c]) != ddl[c]
+                for c in path_cols
+            ):
+                return None
+            names = {n for n in want.names if n not in path_cols}
+            # Spark's scan orders splits by size, largest first (stable)
+            for f in sorted(files, key=lambda f: -sizes[f]):
+                guarantee = pc.scalar(True)
+                for c in path_cols:
+                    v = typed_partition_value(parts[f][c], ddl[c])
+                    guarantee &= (
+                        pc.field(c).is_null()
+                        if v is None
+                        else pc.field(c) == pa.scalar(v, want.field(c).type)
+                    )
+                paths.append(str(self.root / f))
+                known.append(guarantee)
+                data_cols.append(names)
+        dataset = ds.FileSystemDataset.from_paths(
+            paths,
+            schema=want,
+            format=ds.ParquetFileFormat(),
+            filesystem=LocalFileSystem(),
+            partitions=known,
+        )
+        try:
+            rows = dataset.to_table(filter=where)
+        except (pa.ArrowInvalid, pa.ArrowNotImplementedError, pa.ArrowTypeError):
+            return None  # a file type that does not cast; Spark decides
+        # checked after the scan, which has already read every footer
+        for frag, names in zip(dataset.get_fragments(), data_cols):
+            got = {fld.name: fld.type for fld in frag.physical_schema}
+            if set(got) != names or not all(
+                _arrow_type_matches(got[n], want.field(n).type) for n in names
+            ):
+                return None
+        return None if rows.nbytes > max_bytes else rows
 
     def read_changes(
         self,
@@ -1610,6 +1822,20 @@ class TxnTable:
             or {}
         )
 
+    def _driver_max_bytes(self) -> int:
+        """The driver-path byte cap (``_DRIVER_COMMIT_MAX_BYTES_KEY``)
+        shared by the commit write, the vector write and the keyed
+        read; 0 (disabled) when it is 0 or not a number."""
+        try:
+            return int(
+                self.spark.conf.get(
+                    _DRIVER_COMMIT_MAX_BYTES_KEY,
+                    _DRIVER_COMMIT_MAX_BYTES_DEFAULT,
+                )
+            )
+        except ValueError:
+            return 0
+
     def _driver_commit_write(
         self,
         wdf: DataFrame,
@@ -1627,16 +1853,7 @@ class TxnTable:
         ``stat_cols`` only; :meth:`_write_data` reads the stats back
         from the footers exactly as it does for the distributed
         writer's files."""
-        spark = self.spark
-        try:
-            max_bytes = int(
-                spark.conf.get(
-                    _DRIVER_COMMIT_MAX_BYTES_KEY,
-                    _DRIVER_COMMIT_MAX_BYTES_DEFAULT,
-                )
-            )
-        except ValueError:
-            return None
+        max_bytes = self._driver_max_bytes()
         if max_bytes <= 0:
             return None
         dt = dict(wdf.dtypes)
@@ -1995,6 +2212,43 @@ class TxnTable:
             name: [row[f"{name}__{i}"] for i in range(len(values))]
             for name in specs
         }
+
+    def _partition_literals(self, col: str, want, state: dict) -> list | None:
+        """A ``partition_filter`` entry as values of the column's
+        recorded partition type, so pruning and the row filter compare
+        typed values and ``5.0`` or ``'5'`` finds INT ``5``. A literal
+        already of that type passes as is, with no job; the others are
+        cast by Spark through the identity transform
+        (:meth:`_transform_literals`, the bloom_eq rule), and a numeric
+        literal the cast changes (``5.5`` on an INT column) matches
+        nothing, like SQL equality. NULL never matches. A literal the
+        type cannot hold raises ``ValueError``. None when the column
+        has no recorded type: the caller compares strings."""
+        from pyspark.errors import PySparkException
+
+        typ = (state.get("partition_types") or {}).get(col)
+        if typ is None:
+            return None
+        wants = [w for w in _as_list(want) if w is not None]
+        typed = [w for w in wants if _holds_type(w, typ)]
+        other = [w for w in wants if not _holds_type(w, typ)]
+        if other:
+            try:
+                cast = self._transform_literals(
+                    {col: ["identity", col]}, other, state
+                )[col]
+            except PySparkException as e:
+                raise ValueError(
+                    f"table {self.name}: partition_filter {col}={other!r} "
+                    f"cannot be read as {typ}"
+                ) from e
+            typed += [
+                v
+                for w, v in zip(other, cast)
+                if v is not None
+                and not (_is_number(w) and _is_number(v) and v != w)
+            ]
+        return typed
 
     def _rows_of(self, state: dict, rel_files: list[str]) -> int:
         """LIVE row count of a file subset: recorded write-time stats
@@ -3209,15 +3463,7 @@ class TxnTable:
         # (manifests record the DIRECTORY + per-data-file counts).
         # A production-scale delete's estimate blows the gate and
         # takes the distributed path below unchanged.
-        try:
-            max_bytes = int(
-                self.spark.conf.get(
-                    _DRIVER_COMMIT_MAX_BYTES_KEY,
-                    _DRIVER_COMMIT_MAX_BYTES_DEFAULT,
-                )
-            )
-        except ValueError:
-            max_bytes = 0
+        max_bytes = self._driver_max_bytes()
         est = _plan_size_estimate(matches) if max_bytes > 0 else None
         if est is not None and est <= max_bytes:
             tbl = None

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -22,6 +23,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def jobs_of(spark):
+    """``jobs_of(fn)`` runs ``fn`` and returns (its result, the ids of
+    the Spark jobs it ran), counted by a job group."""
+
+    def run(fn):
+        sc = spark.sparkContext
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            got = fn()
+            return got, sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setJobGroup("", "")
+
+    return run
 
 
 # ---- slow-tier marking (round 15) ----------------------------------

@@ -6,7 +6,6 @@ transform-literal evaluation must equal the per-literal build."""
 import os
 import shutil
 import tempfile
-import uuid
 from datetime import date
 
 import pytest
@@ -326,19 +325,7 @@ def _append_python_rows(lake, spark, name, max_bytes=None, **table_kw):
         spark.conf.unset(_KEY)
 
 
-def _jobs_of(spark, fn):
-    """Run ``fn`` and return (its result, the Spark jobs it ran)."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        got = fn()
-        return got, sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc.setJobGroup("", "")
-
-
-def test_python_rows_commit_in_one_job(lake, spark, monkeypatch):
+def test_python_rows_commit_in_one_job(lake, spark, monkeypatch, jobs_of):
     """A ``createDataFrame(list)`` frame is driver-resident: its commit
     runs exactly one Spark job (the Arrow collect) — timestamp and
     decimal stats columns included, since their stats come from the
@@ -346,7 +333,7 @@ def test_python_rows_commit_in_one_job(lake, spark, monkeypatch):
     files per partition, rows, stats. The NaN-holding DOUBLE stats
     column records no bounds on either path."""
     took = _spy_path(monkeypatch)
-    on, jobs = _jobs_of(spark, lambda: _append_python_rows(lake, spark, "py_on"))
+    on, jobs = jobs_of(lambda: _append_python_rows(lake, spark, "py_on"))
     assert took == [True]
     assert len(jobs) == 1
     st = on.manifest()["stats"]
@@ -357,18 +344,16 @@ def test_python_rows_commit_in_one_job(lake, spark, monkeypatch):
     assert _commit_shape(on) == _commit_shape(off)
 
 
-def test_bloom_commit_runs_one_bloom_job(lake, spark, monkeypatch):
+def test_bloom_commit_runs_one_bloom_job(lake, spark, monkeypatch, jobs_of):
     """After the data write, a commit runs a Spark job only for bloom
     columns, and then exactly one: the collect plus the bloom job on
     the driver path, the write plus the bloom job on the distributed
     path — each leaving the same blooms."""
     took = _spy_path(monkeypatch)
-    on, jobs_on = _jobs_of(
-        spark,
+    on, jobs_on = jobs_of(
         lambda: _append_python_rows(lake, spark, "bl_on", bloom_cols=["body"]),
     )
-    off, jobs_off = _jobs_of(
-        spark,
+    off, jobs_off = jobs_of(
         lambda: _append_python_rows(
             lake, spark, "bl_off", max_bytes=0, bloom_cols=["body"]
         ),
