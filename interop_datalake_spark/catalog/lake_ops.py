@@ -981,7 +981,7 @@ ORDER BY probe, event_type
 
 def lake_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read deletes via DELETION VECTORS (lake/txn.py:
-    _delete_matching_dv; the Delta deletion-vector / Iceberg v2
+    _vector_commit; the Delta deletion-vector / Iceberg v2
     position-delete design): ``documents`` is committed once, then a
     ``lang='de'`` delete records per-file row-position vectors in ONE
     commit that moves ZERO data bytes — ``n_files_rewritten`` is

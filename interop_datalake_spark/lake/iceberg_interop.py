@@ -3876,7 +3876,11 @@ def iceberg_set_ref(
 def iceberg_drop_ref(table: TxnTable, name: str) -> None:
     """Remove a named ref (releases its snapshot for expiry).
     Unknown names refuse — silently 'dropping' a typo would leave
-    the real ref retaining snapshots forever."""
+    the real ref retaining snapshots forever. Kept without a library
+    caller because it is the only release path of the refs-retain
+    contract of :func:`expire_iceberg_snapshots` (a ref'd snapshot
+    survives expiry until its ref is dropped; pinned in
+    tests/test_iceberg_interop.py::TestIcebergRefs)."""
     import os
 
     meta_dir = table.root / "metadata"

@@ -59,6 +59,8 @@ import os
 import re
 import shutil
 import uuid
+from collections import Counter
+from contextlib import contextmanager
 from datetime import date, datetime, timezone
 from decimal import Decimal
 from pathlib import Path
@@ -302,6 +304,16 @@ def _footer_stats(path: Path, stat_cols: list[str]) -> dict:
         if c not in bad:
             entry[c] = [_stats_encode(mins.get(c)), _stats_encode(maxs.get(c))]
     return entry
+
+
+def _epoch_applied(state: dict, epoch: int | None) -> bool:
+    """Whether ``epoch`` is at or behind the snapshot's applied epoch
+    watermark: the commit is a streaming replay, a no-op."""
+    return (
+        epoch is not None
+        and state["epoch"] is not None
+        and epoch <= state["epoch"]
+    )
 
 
 def _run_starts(keys) -> list[int]:
@@ -2550,7 +2562,7 @@ class TxnTable:
         attempt_base = base_version
         for _ in range(max_attempts):
             prev = self._state(attempt_base)
-            if epoch is not None and prev["epoch"] is not None and epoch <= prev["epoch"]:
+            if _epoch_applied(prev, epoch):
                 return None  # replayed epoch landed concurrently: no-op
             schema = (
                 self._merge_schema(prev, incoming_schema)
@@ -2599,25 +2611,6 @@ class TxnTable:
         tmp.write_text(json.dumps(state))
         os.replace(tmp, path)
 
-    def _write_gated(self, df: DataFrame, props):
-        """:meth:`_write_data`, then resolve ``props``. A zero-arg
-        callable runs here, AFTER the data write and before the commit
-        — the Observation idiom: metrics observed on ``df`` are ready
-        once the write action ran, so a caller can record or check
-        aggregates of the written batch with zero extra jobs. A
-        callable that raises is a pre-commit gate refusing the batch:
-        the commit's staged directory is deleted and the error
-        propagates, so no version is made and nothing is left behind."""
-        commit_dir = f"data/{uuid.uuid4().hex}"
-        written = self._write_data(df, commit_dir=commit_dir)
-        if callable(props):
-            try:
-                props = props()
-            except BaseException:
-                shutil.rmtree(self.root / commit_dir, ignore_errors=True)
-                raise
-        return written, props
-
     def append(self, df: DataFrame, _props=None) -> int:
         """ACID append; returns the new version. Schema evolution:
         new columns merge into the table schema (metadata-only — no
@@ -2625,15 +2618,37 @@ class TxnTable:
         type changes raise :class:`SchemaEvolutionError` BEFORE any
         data is written. ``_props`` (a dict, or a zero-arg callable
         run after the data write and before the commit, which may
-        refuse the commit by raising — see :meth:`_write_gated`) rides
+        refuse the commit by raising — see :meth:`_append`) rides
         the commit record verbatim (see :meth:`_commit`); cumulative
         props assume a single writer per prop — a rebase re-CASes the
         same record, it does not recompute caller state."""
+        return self._append(df, None, _props)
+
+    def _append(self, df: DataFrame, epoch: int | None, props):
+        """The one append body: :meth:`append` is
+        :meth:`append_epoch` without an epoch. A callable ``props``
+        runs AFTER the data write and before the commit — the
+        Observation idiom: metrics observed on ``df`` are ready once
+        the write action ran, so a caller can record or check
+        aggregates of the written batch with zero extra jobs. A
+        callable that raises is a pre-commit gate refusing the batch:
+        the commit's staged directory is deleted and the error
+        propagates, so no version is made and nothing is left behind."""
         base = self.current_version()
-        self._merge_schema(self._state(base), df)  # validate before writing
-        (files, rows, stats, parts, ptypes), _props = self._write_gated(
-            df, _props
+        prev = self._state(base)
+        if _epoch_applied(prev, epoch):
+            return None
+        self._merge_schema(prev, df)  # validate before writing
+        commit_dir = f"data/{uuid.uuid4().hex}"
+        files, rows, stats, parts, ptypes = self._write_data(
+            df, commit_dir=commit_dir
         )
+        if callable(props):
+            try:
+                props = props()
+            except BaseException:
+                shutil.rmtree(self.root / commit_dir, ignore_errors=True)
+                raise
         return self._commit_retry(
             base,
             op="append",
@@ -2645,7 +2660,8 @@ class TxnTable:
             partitions=parts,
             partition_types=ptypes,
             incoming_schema=df.schema,
-            props=_props,
+            epoch=epoch,
+            props=props,
         )
 
     def overwrite(
@@ -2679,12 +2695,7 @@ class TxnTable:
         (round-8 review)."""
         base = self.current_version()
         prev = self._state(base)
-        if (
-            not _epoch_force
-            and _epoch is not None
-            and prev["epoch"] is not None
-            and _epoch <= prev["epoch"]
-        ):
+        if not _epoch_force and _epoch_applied(prev, _epoch):
             return None
         files, rows, stats, parts, ptypes = self._write_data(df)
         return self._commit(
@@ -2712,7 +2723,7 @@ class TxnTable:
         behind the stored epoch (replay no-op)."""
         base = self.current_version()
         prev = self._state(base)
-        if prev["epoch"] is not None and epoch <= prev["epoch"]:
+        if _epoch_applied(prev, epoch):
             return None
         return self._commit(
             base,
@@ -2931,7 +2942,9 @@ class TxnTable:
         rest — atomic across every file in ONE commit (the property
         a per-partition staged swap cannot give). Returns the new version
         (None only for internal epoch merges whose epoch landed
-        concurrently — a streaming-replay no-op).
+        concurrently — a streaming-replay no-op). The copy-on-write
+        path is :meth:`merge_sync`'s body (:meth:`_upsert`) with an
+        empty delete scope.
 
         File pruning: when the first merge key is a stats column, only
         files whose recorded [min,max] range intersects the updates'
@@ -2954,189 +2967,78 @@ class TxnTable:
         base = self.current_version()
         prev = self._state(base)
         self._merge_schema(prev, updates)  # validate before writing
-        # the updates PLAN is consumed 3x below (key-range agg,
-        # key semi-join, data write) — for a trivial frame that is
-        # noise, but callers routinely pass a full change-feed fold
-        # (CDF parse + scans + window shuffles), which would otherwise
-        # execute per consumer. Persist for the duration (spills past
-        # memory; never larger than the one materialization each
-        # consumer would pay anyway) — unless the CALLER already
-        # persisted this exact frame, whose cache must survive us.
-        sl = updates.storageLevel
-        ours = not (sl.useMemory or sl.useDisk or sl.useOffHeap)
-        if ours:
-            updates = updates.persist()
-        try:
-            return self._merge_persisted(
-                updates, key_cols, prune, _epoch, merge_on_read,
-                base, prev,
+        with self._persisted(updates) as updates:
+            if not (merge_on_read and base > 0):
+                return self._upsert(
+                    updates, key_cols, base, prev, "merge", _epoch, prune
+                )
+            # stats-prune to the files whose key range can match; their
+            # rows whose key the updates carry become the vector (the
+            # semi-join reads only key + lineage columns)
+            return self._rerun_on_conflict(
+                base,
+                prev,
+                lambda b, p: self._vector_commit(
+                    b,
+                    p,
+                    "merge",
+                    self._key_touched(p, updates, key_cols[0], prune),
+                    lambda live: live.join(
+                        updates.select(*key_cols).distinct(),
+                        key_cols,
+                        "left_semi",
+                    ),
+                    new=updates,
+                ),
             )
+
+    @contextmanager
+    def _persisted(self, frame: DataFrame):
+        """``frame`` persisted for the duration of one upsert. Its plan
+        is consumed several times (key-range agg, key join, data
+        write) — trivial for a small frame, but callers routinely pass
+        a full change-feed fold or an IVM join plan, which would
+        otherwise execute per consumer (spills past memory; never
+        larger than the one materialization each consumer would pay
+        anyway). A frame the CALLER already persisted is used as is:
+        its cache must survive us."""
+        sl = frame.storageLevel
+        if sl.useMemory or sl.useDisk or sl.useOffHeap:
+            yield frame
+            return
+        frame = frame.persist()
+        try:
+            yield frame
         finally:
-            if ours:
-                updates.unpersist()
+            frame.unpersist()
 
-    def _merge_persisted(
-        self,
-        updates: DataFrame,
-        key_cols: list[str],
-        prune: bool,
-        _epoch: int | None,
-        merge_on_read: bool,
-        base: int,
-        prev: dict,
-    ) -> int | None:
-        if merge_on_read and base > 0:
-            # conflict = re-run on the fresh snapshot (see delete_where)
-            for attempt in range(4):
-                try:
-                    return self._merge_dv(updates, key_cols, prune, base, prev)
-                except CommitConflictError:
-                    if attempt == 3:
-                        raise
-                    base = self.current_version()
-                    prev = self._state(base)
-        # a merge's READ scope is partition-confined only when the
-        # partition columns are part of the merge key (a key then
-        # cannot match rows outside its own partition) — the condition
-        # for rebase-on-conflict to stay serializable
-        scoped = set(self._effective_partition_cols()) <= set(key_cols)
-        if base == 0:
-            files, rows, nstats, parts, ptypes = self._write_data(updates)
-            version = self._commit_retry(
-                base,
-                op="merge",
-                added=files,
-                removed=[],
-                new_rows=rows,
-                removed_rows=0,
-                stats=nstats,
-                partitions=parts,
-                partition_types=ptypes,
-                incoming_schema=updates.schema,
-                epoch=_epoch,
-                partition_scoped=scoped,
-            )
-            return version
-        k = key_cols[0]
-        touched = list(prev["files"])
-        if prune and self.stats_cols and k in self.stats_cols:
-            touched, _ = self._key_intersecting_split(prev, updates, k)
-        if not touched:
-            new_files, new_rows, new_stats, new_parts, ptypes = (
-                self._write_data(updates)
-            )
-        else:
-            existing = self._load_files(touched, prev)
-            kept = existing.join(
-                updates.select(*key_cols).distinct(), key_cols, "left_anti"
-            )
-            # allowMissingColumns BOTH ways: an updates frame carrying
-            # a NEW column (schema evolution, validated above)
-            # null-fills it on the kept side; a table column the
-            # updates LACK null-fills on the updates side — kept rows
-            # always retain every column they had (projecting kept to
-            # the updates' columns here was a data-loss bug: it
-            # silently dropped evolved columns from untouched rows)
-            merged = kept.unionByName(updates, allowMissingColumns=True)
-            new_files, new_rows, new_stats, new_parts, ptypes = (
-                self._write_data(merged)
-            )
-        version = self._commit_retry(
-            base,
-            op="merge",
-            added=new_files,
-            removed=touched,
-            new_rows=new_rows,
-            removed_rows=self._rows_of(prev, touched),
-            stats=new_stats,
-            partitions=new_parts,
-            partition_types=ptypes,
-            incoming_schema=updates.schema,
-            epoch=_epoch,
-            partition_scoped=scoped,
-        )
-        return version
-
-    def _merge_dv(
-        self,
-        updates: DataFrame,
-        key_cols: list[str],
-        prune: bool,
-        base: int,
-        prev: dict,
-    ) -> int:
-        """Deletion-vector MERGE body: (1) stats-prune to the files
-        whose key range can match, (2) semi-join their rows' lineage
-        against the updates' (distinct, usually broadcast) key set —
-        the matched positions become this commit's vector, (3) write
-        the updates as new data files, (4) ONE commit carrying both.
-        Existing data files are scanned only for key + lineage columns
-        (column pruning reaches the parquet reader) and never
-        rewritten."""
+    def _key_touched(
+        self, prev: dict, frame: DataFrame, k: str, prune: bool = True
+    ) -> list[str]:
+        """The files whose recorded [min,max] range of ``k`` intersects
+        ``frame``'s key range — every file when ``prune`` is off or
+        ``k`` records no stats. Stats-less files are conservatively
+        touched; an empty frame touches nothing. Shared by the upsert
+        and the vector merge so the NULL-stats and empty-frame
+        subtleties live in ONE place."""
         from pyspark.sql import functions as F
 
-        k = key_cols[0]
-        candidates = list(prev["files"])
-        if prune and self.stats_cols and k in self.stats_cols:
-            candidates, _ = self._key_intersecting_split(prev, updates, k)
-        dv = None
-        if candidates:
-            live = self._load_files(candidates, prev, keep_lineage=True)
-            doomed = live.join(
-                updates.select(*key_cols).distinct(), key_cols, "left_semi"
-            ).select(
-                F.col("_dv_file").alias("file_key"),
-                F.col("_dv_row").alias("row_idx"),
-            )
-            dv = self._write_dv_vector(doomed, prev)
-        new_files, new_rows, new_stats, new_parts, ptypes = (
-            self._write_data(updates)
-        )
-        n_deleted = sum(dv["files"].values()) if dv else 0
-        try:
-            return self._commit(
-                base,
-                op="merge",
-                added=new_files,
-                removed=[],
-                rows_total=prev["rows"] - n_deleted + new_rows,
-                stats=new_stats,
-                partitions=new_parts,
-                partition_types=ptypes,
-                schema=self._merge_schema(prev, updates),
-                dv=dv,
-            )
-        except CommitConflictError:
-            if dv:
-                shutil.rmtree(self.root / dv["path"], ignore_errors=True)
-            raise
-
-    def _key_intersecting_split(
-        self, prev: dict, frame: DataFrame, k: str
-    ) -> tuple[list[str], list[str]]:
-        """(touched, carried): files whose recorded [min,max] range of
-        ``k`` intersects ``frame``'s key range vs files provably
-        disjoint. Stats-less files are conservatively touched; an
-        empty frame touches nothing. Shared by merge/merge_sync so the
-        NULL-stats and empty-frame subtleties live in ONE place."""
-        from pyspark.sql import functions as F
-
+        if not (prev["files"] and prune and k in self.stats_cols):
+            return list(prev["files"])
         row = frame.agg(F.min(k).alias("lo"), F.max(k).alias("hi")).collect()[
             0
         ]
         umin, umax = row["lo"], row["hi"]
-        touched, carried = [], []
+        if umin is None:  # empty frame: nothing intersects
+            return []
+        touched = []
         for f in prev["files"]:
             rng = _decode_range(prev["stats"].get(f, {}).get(k))
-            if umin is None:  # empty frame: nothing intersects
-                carried.append(f)
-            elif rng is None or rng[0] is None or (
+            if rng is None or rng[0] is None or (
                 rng[0] <= umax and umin <= rng[1]
             ):
                 touched.append(f)
-            else:
-                carried.append(f)
-        return touched, carried
+        return touched
 
     def merge_sync(
         self,
@@ -3179,55 +3081,8 @@ class TxnTable:
         base = self.current_version()
         prev = self._state(base)
         self._merge_schema(prev, source)  # validate BEFORE any data write
-        # same multi-consumption as merge (key-range agg, key
-        # anti-join, data write) — and IVM refreshes pass a JOIN plan
-        # as source; persist unless the caller already did
-        _sl = source.storageLevel
-        _ours = not (_sl.useMemory or _sl.useDisk or _sl.useOffHeap)
-        if _ours:
-            source = source.persist()
-        try:
-            return self._merge_sync_persisted(
-                source, key_cols, scope, scope_partition_filter,
-                scope_candidate_files, _epoch, base, prev,
-            )
-        finally:
-            if _ours:
-                source.unpersist()
-
-    def _merge_sync_persisted(
-        self,
-        source: DataFrame,
-        key_cols: list[str],
-        scope,
-        scope_partition_filter,
-        scope_candidate_files,
-        _epoch: int | None,
-        base: int,
-        prev: dict,
-    ) -> int | None:
-        from pyspark.sql import functions as F
-
-        if not prev["files"]:
-            new_files, new_rows, new_stats, new_parts, ptypes = (
-                self._write_data(source)
-            )
-            return self._commit_retry(
-                base,
-                op="merge_sync",
-                added=new_files,
-                removed=[],
-                new_rows=new_rows,
-                removed_rows=0,
-                stats=new_stats,
-                partitions=new_parts,
-                partition_types=ptypes,
-                incoming_schema=source.schema,
-                epoch=_epoch,
-            )
-        if scope is None:
-            touched = list(prev["files"])
-        else:
+        hits: set[str] = set()
+        if scope is not None and prev["files"]:
             # the scope-hit scan defaults to the whole table (a scope
             # predicate can reference anything); when the caller states
             # that the scope is partition-confined —
@@ -3243,9 +3098,7 @@ class TxnTable:
                 # between its read and this commit) must not crash the
                 # load — missing files simply can't hold scope rows
                 live = set(prev["files"])
-                scan_files = [
-                    f for f in scope_candidate_files if f in live
-                ]
+                scan_files = [f for f in scope_candidate_files if f in live]
             elif scope_partition_filter:
                 scan_files = self.resolve_files(
                     version=base, partition_filter=scope_partition_filter
@@ -3257,70 +3110,127 @@ class TxnTable:
                 # DV'd table the loaded frame is a join (data ⋈ anti
                 # vectors) and input_file_name() is undefined across
                 # join shapes; _dv_file is the decoded manifest-
-                # relative path, exact on every plan
+                # relative path, exact on every plan — plain
+                # membership, no re-decoding (an extra unquote() would
+                # double-decode '%25' partitions and let their scope
+                # rows escape the sync)
                 scan = self._load_files(scan_files, prev, keep_lineage=True)
-                scope_hits = {
+                hits = {
                     r["_f"]
                     for r in scan.filter(scope)
                     .select(F.col("_dv_file").alias("_f"))
                     .distinct()
                     .collect()  # one row per file containing scope rows
                 }
-            else:
-                scope_hits = set()
-            k = key_cols[0]
-            if self.stats_cols and k in self.stats_cols:
-                key_touched, _ = self._key_intersecting_split(
-                    prev, source, k
-                )
-            else:
-                # no stats to prune by: any file could hold matched
-                # keys — conservatively rewrite everything
-                key_touched = list(prev["files"])
-            key_set = set(key_touched)
-            # scope_hits are exact manifest-relative paths from the
-            # lineage column — plain membership, no re-decoding (an
-            # extra unquote() would double-decode '%25' partitions
-            # and let their scope rows escape the sync)
-            touched = [
-                f
-                for f in prev["files"]
-                if f in key_set or f in scope_hits
-            ]
-        if not touched:
-            new_files, new_rows, new_stats, new_parts, ptypes = (
-                self._write_data(source)
+        with self._persisted(source) as source:
+            # scope=None: the whole table is the scope — every file is
+            # rewritten (no key pruning) and no row is kept
+            return self._upsert(
+                source,
+                key_cols,
+                base,
+                prev,
+                "merge_sync",
+                _epoch,
+                prune=scope is not None,
+                scope=F.lit(True) if scope is None else scope,
+                hits=hits,
             )
-        else:
-            existing = self._load_files(touched, prev)
-            unmatched = existing.join(
+
+    def _upsert(
+        self,
+        source: DataFrame,
+        key_cols: list[str],
+        base: int,
+        prev: dict,
+        op: str,
+        epoch: int | None,
+        prune: bool = True,
+        scope=None,
+        hits: set[str] = frozenset(),
+    ) -> int | None:
+        """The one copy-on-write upsert of :meth:`merge` and
+        :meth:`merge_sync`: rewrite the files whose key range can hold
+        a source key (:meth:`_key_touched`) or that hold a row of the
+        delete ``scope`` (``hits``), keeping their rows whose key the
+        source lacks and that lie outside the scope, plus every source
+        row; all other files carry by reference. A plain merge is the
+        empty scope (None): it deletes no row and scans nothing."""
+        from pyspark.sql import functions as F
+
+        keyed = set(self._key_touched(prev, source, key_cols[0], prune))
+        touched = [f for f in prev["files"] if f in keyed or f in hits]
+
+        def kept(rows: DataFrame) -> DataFrame:
+            rows = rows.join(
                 source.select(*key_cols).distinct(), key_cols, "left_anti"
             )
             # NULL scope → not in scope → KEEP (coalesce guards the
             # three-valued ~NULL trap that silently deleted such rows)
-            kept = (
-                unmatched.filter(~F.coalesce(scope, F.lit(False)))
-                if scope is not None
-                else unmatched.filter(F.lit(False))
-            )
-            # kept rows retain every table column; source-missing
-            # columns null-fill on the SOURCE side only (see merge)
-            merged = kept.unionByName(source, allowMissingColumns=True)
-            new_files, new_rows, new_stats, new_parts, ptypes = (
-                self._write_data(merged)
-            )
+            if scope is None:
+                return rows
+            return rows.filter(~F.coalesce(scope, F.lit(False)))
+
+        # a merge's READ scope is partition-confined only when the
+        # partition columns are part of the merge key (a key then
+        # cannot match rows outside its own partition) — the condition
+        # for rebase-on-conflict to stay serializable
+        scoped = set(self._effective_partition_cols()) <= set(key_cols)
+        return self._rewrite(
+            base, prev, op, touched, kept, source,
+            epoch=epoch, partition_scoped=scoped,
+        )
+
+    def _rewrite(
+        self,
+        base: int,
+        prev: dict,
+        op: str,
+        touched,
+        kept=None,
+        new: DataFrame | None = None,
+        *,
+        epoch: int | None = None,
+        partition_scoped: bool = True,
+    ) -> int | None:
+        """The one copy-on-write commit of every row-level op — merge,
+        merge_sync, delete and overwrite_partitions, the Delta paper's
+        rewrite transaction: write ``kept(load(touched)) ∪ new`` as
+        fresh files, then ONE :meth:`_commit_retry` that removes
+        ``touched`` and adds them. ``kept`` None keeps no row of the
+        touched files (nothing is loaded); ``new`` None adds no row
+        and leaves the table schema as it is. ``touched`` may instead
+        be a function of the written files' partition values, called
+        after the write (:meth:`overwrite_partitions`)."""
+        frame = new
+        if kept is not None and touched:
+            frame = kept(self._load_files(touched, prev))
+            if new is not None:
+                # allowMissingColumns BOTH ways: a new frame carrying a
+                # NEW column (schema evolution, validated by the
+                # caller) null-fills it on the kept side; a table
+                # column the new frame LACKS null-fills on the new
+                # side — kept rows always retain every column they had
+                # (projecting kept to the new frame's columns was a
+                # data-loss bug: it silently dropped evolved columns
+                # from untouched rows)
+                frame = frame.unionByName(new, allowMissingColumns=True)
+        files, rows, stats, parts, ptypes = self._write_data(frame)
+        if callable(touched):
+            touched = touched(parts)
         return self._commit_retry(
             base,
-            op="merge_sync",
-            added=new_files,
+            op=op,
+            added=files,
             removed=touched,
-            new_rows=new_rows,
+            new_rows=rows,
             removed_rows=self._rows_of(prev, touched),
-            stats=new_stats,
-            partitions=new_parts,
+            stats=stats,
+            partitions=parts,
             partition_types=ptypes,
-            incoming_schema=source.schema,
-            epoch=_epoch,
+            incoming_schema=None if new is None else new.schema,
+            epoch=epoch,
+            partition_scoped=partition_scoped,
         )
 
     def delete_where(self, condition, merge_on_read: bool = False) -> int:
@@ -3361,24 +3271,21 @@ class TxnTable:
         :meth:`delete_keys` (keyed semi-join): ``match(df)`` filters a
         scan to the rows to delete, ``keep(df)`` to the survivors —
         the two spellings of one membership test, supplied together
-        so they can never drift."""
+        so they can never drift. SQL DELETE semantics ride ``match``
+        on the vector path: a NULL predicate row / NULL key simply
+        doesn't match and survives."""
         from pyspark.sql import functions as F
 
         base = self.current_version()
         prev = self._state(base)
         if merge_on_read:
-            # conflict handling = RE-RUN against the fresh snapshot
-            # (the correct serial order; a vector indexes exactly one
-            # snapshot's files, so it can never be re-CASed blindly) —
-            # same outcome the cow path's rebase-or-retry gives
-            for attempt in range(4):
-                try:
-                    return self._delete_matching_dv(match, base, prev)
-                except CommitConflictError:
-                    if attempt == 3:
-                        raise
-                    base = self.current_version()
-                    prev = self._state(base)
+            return self._rerun_on_conflict(
+                base,
+                prev,
+                lambda b, p: self._vector_commit(
+                    b, p, "delete", p["files"], match
+                ),
+            )
         scan = self._load_files(prev["files"], prev, keep_lineage=True)
         hit_files = {
             r["_f"]
@@ -3399,21 +3306,7 @@ class TxnTable:
                 removed=[],
                 rows_total=prev["rows"],
             )
-        remaining = keep(self._load_files(touched, prev))
-        new_files, new_rows, new_stats, new_parts, ptypes = self._write_data(
-            remaining
-        )
-        return self._commit_retry(
-            base,
-            op="delete",
-            added=new_files,
-            removed=touched,
-            new_rows=new_rows,
-            removed_rows=self._rows_of(prev, touched),
-            stats=new_stats,
-            partitions=new_parts,
-            partition_types=ptypes,
-        )
+        return self._rewrite(base, prev, "delete", touched, keep)
 
     def delete_keys(
         self,
@@ -3441,14 +3334,12 @@ class TxnTable:
         )
 
     def _write_dv_vector(self, matches: DataFrame, prev: dict):
-        """Shared vector-commit tail of the two merge-on-read writers
-        (:meth:`_delete_matching_dv`, :meth:`_merge_dv`): write the
-        (file_key, row_idx) matches as one parquet vector via a
-        distributed job, aggregate per-file deleted counts (one
-        bounded collect — rows = touched files, not deleted rows),
-        and validate every key against the snapshot. Returns the
-        commit's ``dv`` payload, or None when nothing matched (the
-        empty dir is removed)."""
+        """Write the (file_key, row_idx) ``matches`` as one parquet
+        vector, aggregate per-file deleted counts and validate every
+        key against the snapshot. Returns the commit's ``dv`` payload,
+        or None when nothing matched. On either write path a refused
+        vector — nothing matched, or a key names no live file —
+        leaves no directory behind."""
         from pyspark.sql import functions as F
 
         dv_rel = f"dv/{uuid.uuid4().hex}"
@@ -3463,102 +3354,153 @@ class TxnTable:
         # (manifests record the DIRECTORY + per-data-file counts).
         # A production-scale delete's estimate blows the gate and
         # takes the distributed path below unchanged.
+        counts = None
         max_bytes = self._driver_max_bytes()
         est = _plan_size_estimate(matches) if max_bytes > 0 else None
         if est is not None and est <= max_bytes:
-            tbl = None
             try:
                 tbl = matches.toArrow()
             except Exception:
-                pass  # result too large / exotic plan: distributed path
+                tbl = None  # result too large / exotic plan: distributed
             if tbl is not None:
-                if tbl.num_rows == 0:
-                    return None
-                import pyarrow.parquet as _pq
+                counts = Counter(tbl.column("file_key").to_pylist())
+                if counts:
+                    import pyarrow.parquet as _pq
 
-                dv_dir.mkdir(parents=True, exist_ok=True)
-                _pq.write_table(
-                    tbl,
-                    dv_dir / f"part-00000-{uuid.uuid4().hex}.snappy.parquet",
-                    compression="snappy",
-                )
-                live_set = set(prev["files"])
-                dv_files: dict[str, int] = {}
-                for k in tbl.column("file_key").to_pylist():
-                    if k not in live_set:
-                        shutil.rmtree(dv_dir, ignore_errors=True)
-                        raise RuntimeError(
-                            f"table {self.name}: deletion vector "
-                            f"references unknown file {k!r}"
-                        )
-                    dv_files[k] = dv_files.get(k, 0) + 1
-                return {"path": dv_rel, "files": dv_files}
-        # persist: the matches plan (a lineage scan + key semi-join)
-        # feeds BOTH the vector write and the per-file counts; without
-        # it the counts re-read the just-written parquet from disk —
-        # an extra listing + scan round-trip per merge-on-read commit
-        matches = matches.persist()
-        try:
-            matches.write.mode("overwrite").parquet(str(dv_dir))
-            per_file = (
-                matches.groupBy("file_key")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()  # one row per touched file — bounded
-            )
-        finally:
-            matches.unpersist()
-        if not per_file:
+                    dv_dir.mkdir(parents=True, exist_ok=True)
+                    _pq.write_table(
+                        tbl,
+                        dv_dir / f"part-00000-{uuid.uuid4().hex}.snappy.parquet",
+                        compression="snappy",
+                    )
+        if counts is None:
+            # persist: the matches plan (a lineage scan + key
+            # semi-join) feeds BOTH the vector write and the per-file
+            # counts; without it the counts re-read the just-written
+            # parquet from disk — an extra listing + scan round-trip
+            # per merge-on-read commit
+            matches = matches.persist()
+            try:
+                matches.write.mode("overwrite").parquet(str(dv_dir))
+                counts = {
+                    r["file_key"]: int(r["n"])
+                    for r in matches.groupBy("file_key")
+                    .agg(F.count(F.lit(1)).alias("n"))
+                    .collect()  # one row per touched file — bounded
+                }
+            finally:
+                matches.unpersist()
+        live = set(prev["files"])
+        unknown = [k for k in counts if k not in live]
+        if not counts or unknown:
             shutil.rmtree(dv_dir, ignore_errors=True)
-            return None
-        live_set = set(prev["files"])
-        dv_files = {}
-        for r in per_file:
-            if r["file_key"] not in live_set:
-                raise RuntimeError(
-                    f"table {self.name}: deletion vector references "
-                    f"unknown file {r['file_key']!r}"
-                )
-            dv_files[r["file_key"]] = int(r["n"])
-        return {"path": dv_rel, "files": dv_files}
+        if unknown:
+            raise RuntimeError(
+                f"table {self.name}: deletion vector references "
+                f"unknown file {unknown[0]!r}"
+            )
+        return {"path": dv_rel, "files": dict(counts)} if counts else None
 
-    def _delete_matching_dv(self, match, base: int, prev: dict) -> int:
-        """Merge-on-read tail of :meth:`_delete_matching`: ONE
-        metadata+vector commit, zero data bytes moved. SQL DELETE
-        semantics ride the ``match`` callback (a NULL predicate row /
-        NULL key simply doesn't match and survives — no three-valued
-        trap on this path). Commits via plain CAS, never a rebase — a
-        vector is only valid against the exact snapshot whose files
-        it indexes; on conflict the caller re-RUNS the whole delete
-        against the fresh snapshot, which is the correct serial
-        order."""
+    def _vector_commit(
+        self,
+        base: int,
+        prev: dict,
+        op: str,
+        files: list[str],
+        match,
+        new: DataFrame | None = None,
+    ) -> int:
+        """The merge-on-read commit of :meth:`merge` and the deletes:
+        the rows ``match`` keeps of a lineage scan of ``files`` become
+        this commit's deletion vector, ``new`` (if any) lands as new
+        data files, and ONE plain CAS commits both — no existing data
+        file is rewritten (the scan reads only the columns ``match``
+        needs plus lineage). Never rebased: a vector indexes exactly
+        the snapshot whose files it names, so a conflict deletes the
+        vector and raises for :meth:`_rerun_on_conflict`."""
         from pyspark.sql import functions as F
 
-        live = self._load_files(prev["files"], prev, keep_lineage=True)
-        matches = match(live).select(
-            F.col("_dv_file").alias("file_key"),
-            F.col("_dv_row").alias("row_idx"),
-        )
-        dv = self._write_dv_vector(matches, prev)
-        if dv is None:  # no matching rows: clean no-op commit
-            return self._commit(
-                base,
-                op="delete",
-                added=[],
-                removed=[],
-                rows_total=prev["rows"],
+        dv = None
+        if files:
+            live = self._load_files(files, prev, keep_lineage=True)
+            dv = self._write_dv_vector(
+                match(live).select(
+                    F.col("_dv_file").alias("file_key"),
+                    F.col("_dv_row").alias("row_idx"),
+                ),
+                prev,
             )
+        added, rows, stats, parts, ptypes = (
+            ([], 0, None, None, None) if new is None else self._write_data(new)
+        )
         try:
             return self._commit(
                 base,
-                op="delete",
-                added=[],
+                op=op,
+                added=added,
                 removed=[],
-                rows_total=prev["rows"] - sum(dv["files"].values()),
+                rows_total=prev["rows"]
+                + rows
+                - (sum(dv["files"].values()) if dv else 0),
+                stats=stats,
+                partitions=parts,
+                partition_types=ptypes,
+                schema=None if new is None else self._merge_schema(prev, new),
                 dv=dv,
             )
         except CommitConflictError:
-            shutil.rmtree(self.root / dv["path"], ignore_errors=True)
+            if dv:
+                shutil.rmtree(self.root / dv["path"], ignore_errors=True)
             raise
+
+    def _rerun_on_conflict(self, base: int, prev: dict, body):
+        """``body(base, prev)``, RE-RUN against the fresh snapshot when
+        its plain CAS loses — at most 4 runs. The conflict handling of
+        every vector commit: a vector indexes exactly one snapshot's
+        files, so it can never be re-CASed blindly, and re-running is
+        the correct serial order (the outcome the copy-on-write path's
+        rebase-or-retry gives)."""
+        for attempt in range(4):
+            try:
+                return body(base, prev)
+            except CommitConflictError:
+                if attempt == 3:
+                    raise
+                base = self.current_version()
+                prev = self._state(base)
+
+    def overwrite_partitions(self, replacement: DataFrame) -> int:
+        """Dynamic-partition overwrite (Delta ``replaceWhere`` /
+        ``partitionOverwriteMode=dynamic``), transactional: partitions
+        present in ``replacement`` are replaced, every other partition
+        carries by reference — and unlike the Hive version, the swap
+        of ALL affected partitions is one atomic commit. The replaced
+        partitions are the manifest partition values of the files this
+        commit writes: the same raw Hive ``key=value`` strings the
+        snapshot records for every file, on both writers, so NULL,
+        boolean and empty-string partitions are replaced like any
+        other, and no job runs before the write."""
+        pcols = self._effective_partition_cols()
+        if not pcols:
+            raise ValueError(
+                f"table {self.name} has no partition columns; use overwrite()"
+            )
+        base = self.current_version()
+        prev = self._state(base)
+        self._merge_schema(prev, replacement)  # validate before writing
+
+        def replaced(written: dict[str, dict]) -> list[str]:
+            combos = self._partition_tuples(list(written), written, pcols)
+            return [
+                f
+                for f in prev["files"]
+                if self._partition_tuples([f], prev["partitions"], pcols)
+                <= combos
+            ]
+
+        return self._rewrite(
+            base, prev, "overwrite_partitions", replaced, new=replacement
+        )
 
     def consolidate_vectors(self) -> int | None:
         """Merge every stacked deletion-vector parquet into ONE vector
@@ -3638,48 +3580,6 @@ class TxnTable:
         except CommitConflictError:
             shutil.rmtree(dv_dir, ignore_errors=True)
             raise
-
-    def overwrite_partitions(self, replacement: DataFrame) -> int:
-        """Dynamic-partition overwrite (Delta ``replaceWhere`` /
-        ``partitionOverwriteMode=dynamic``), transactional: partitions
-        present in ``replacement`` are replaced, every other partition
-        carries by reference — and unlike the Hive version, the swap
-        of ALL affected partitions is one atomic commit."""
-        from pyspark.sql import functions as F  # noqa: F401
-
-        pcols = self._effective_partition_cols()
-        if not pcols:
-            raise ValueError(
-                f"table {self.name} has no partition columns; use overwrite()"
-            )
-        base = self.current_version()
-        prev = self._state(base)
-        self._merge_schema(prev, replacement)  # validate before writing
-        combos = {
-            tuple(str(r[c]) for c in pcols)
-            for r in replacement.select(*pcols).distinct().collect()
-        }  # distinct partition tuples — small by definition
-        parts = prev["partitions"]
-        removed = [
-            f
-            for f in prev["files"]
-            if tuple(parts.get(f, {}).get(c) for c in pcols) in combos
-        ]
-        new_files, new_rows, new_stats, new_parts, ptypes = self._write_data(
-            replacement
-        )
-        return self._commit_retry(
-            base,
-            op="overwrite_partitions",
-            added=new_files,
-            removed=removed,
-            new_rows=new_rows,
-            removed_rows=self._rows_of(prev, removed),
-            stats=new_stats,
-            partitions=new_parts,
-            partition_types=ptypes,
-            incoming_schema=replacement.schema,
-        )
 
     def compact(
         self,
@@ -3921,29 +3821,7 @@ class TxnTable:
         epoch's change window need no log scan and no
         current_version() TOCTOU), or None when the epoch was already
         applied (replay no-op)."""
-        base = self.current_version()
-        prev = self._state(base)
-        last = prev["epoch"]
-        if last is not None and epoch_id <= last:
-            return None
-        self._merge_schema(prev, batch_df)  # validate before writing
-        (files, rows, stats, parts, ptypes), _props = self._write_gated(
-            batch_df, _props
-        )
-        return self._commit_retry(
-            base,
-            op="append",
-            added=files,
-            removed=[],
-            new_rows=rows,
-            removed_rows=0,
-            stats=stats,
-            partitions=parts,
-            partition_types=ptypes,
-            incoming_schema=batch_df.schema,
-            epoch=epoch_id,
-            props=_props,
-        )
+        return self._append(batch_df, epoch_id, _props)
 
     def foreach_batch_writer(self):
         """``writeStream.foreachBatch(table.foreach_batch_writer())`` —
@@ -3966,9 +3844,7 @@ class TxnTable:
         ``foreachBatch + MERGE`` streaming-CDC idiom; file pruning
         applies as in :meth:`merge`, so a keyed micro-batch rewrites
         only intersecting files. Returns True if applied."""
-        base = self.current_version()
-        last = self._state(base)["epoch"]
-        if last is not None and epoch_id <= last:
+        if _epoch_applied(self._state(self.current_version()), epoch_id):
             return False
         return self.merge(batch_df, key_cols, _epoch=epoch_id) is not None
 

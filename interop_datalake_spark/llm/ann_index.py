@@ -420,47 +420,3 @@ class IvfPqIndex:
             .filter(F.col("rn") <= k)
             .select("query_id", "neighbor_id", "rn", "score_pq")
         )
-
-
-def ivfpq_rerank(
-    idx: IvfPqIndex,
-    queries: DataFrame,
-    corpus: DataFrame,
-    vec_col: str,
-    id_col: str,
-    k: int = 3,
-    n_probe: int = 2,
-    shortlist: int = 30,
-) -> DataFrame:
-    """Two-stage IVF×PQ retrieval: probe-restricted ADC SHORTLIST from
-    the code store (8-byte rows, n_probe/n_cells of them) → exact
-    float cosine RERANK fetching only the shortlisted ids from
-    ``corpus`` (shortlist·|Q| rows — the point-lookup pattern, one
-    semi-join). The pq.py:pq_rerank_topk shape with the IVF index as
-    stage 1: pipeline recall = recall@shortlist of the probed cells,
-    measured and pinned in tests/test_ivfpq.py. ``corpus`` is the
-    float-vector source of truth (e.g. the embeddings table or an
-    IvfIndex vector store); the code store never materializes floats.
-    Returns (query_id, neighbor_id, rn, cos)."""
-    cand = idx.query(
-        queries, vec_col, id_col, k=shortlist, n_probe=n_probe
-    ).select("query_id", "neighbor_id")
-    vecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    )
-    rescored = (
-        cand.join(vecs, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cos", cosine_similarity("_qv", "_cv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.col("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "rn", "cos")
-    )

@@ -182,7 +182,10 @@ def logreg_score(feats: DataFrame, weights: DataFrame) -> DataFrame:
     """Score a feature frame under a trained 1-row weight frame:
     (id, …, y, p) with p = σ(w·x) rounded to 9 dp. The broadcast
     cross-join keeps scoring a pure map — this is the cheap-firehose
-    half of the distillation."""
+    half of the distillation. Kept without a catalog caller because it
+    is the model's only read-out: it pins that trained weights
+    separate the classes and that scoring never shuffles
+    (tests/test_classifier.py)."""
     z = F.col("w_bias").cast("double") + sum(
         (F.col(f"w_{fc.split('_')[1]}").cast("double") * F.col(fc)
          for fc in FEATURES),

@@ -96,32 +96,3 @@ def dedup_pipeline_writer(
         )
 
     return _process
-
-
-def start_dedup_stream(
-    session,
-    docs_table,
-    sig_store,
-    pairs_table,
-    checkpoint_dir: str,
-    starting_version: int = 0,
-    **params,
-):
-    """Tail ``docs_table``'s change feed with ``availableNow`` and run
-    the dedup pipeline over every committed-but-unprocessed batch;
-    returns the StreamingQuery (call ``awaitTermination()``). Restart
-    with the same ``checkpoint_dir`` to process later commits —
-    offsets and epochs continue."""
-    from interop_datalake_spark.streaming.txn_source import read_txn_stream
-
-    stream = read_txn_stream(
-        session, docs_table.name, starting_version=starting_version
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            dedup_pipeline_writer(docs_table, sig_store, pairs_table, **params)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -67,7 +67,10 @@ def has_take_ordered(df: DataFrame) -> bool:
 
 def codegen_stage_count(df: DataFrame) -> int:
     """Number of whole-stage-codegen subtrees ('codegen' explain mode —
-    the formatted plan hides them before AQE finalizes)."""
+    the formatted plan hides them before AQE finalizes). Like every
+    helper here it serves the plan-contract tests: it pins that the
+    scan-filter-project shape compiles to fused codegen stages
+    (tests/test_plans.py::test_whole_stage_codegen_active)."""
     out = explain_str(df, mode="codegen")
     for line in out.splitlines():
         if "WholeStageCodegen subtrees" in line:  # "Found N WholeStageCodegen subtrees."

@@ -104,21 +104,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for spark.sql() queries."""
     for t in TABLES:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
-def read_json_documents(
-    spark: SparkSession, path: str, schema: str | None = None
-) -> DataFrame:
-    """Bronze-fidelity JSON document scan (the reference's lake stores
-    one JSON document per object — SURVEY §1.1). PERMISSIVE mode keeps
-    malformed documents as ``_corrupt_record`` rows instead of failing
-    the batch, so bronze ingestion never loses payloads; pair with an
-    explicit schema at scale (schema inference is a full extra pass).
-    """
-    reader = spark.read.option("mode", "PERMISSIVE").option(
-        "columnNameOfCorruptRecord", "_corrupt_record"
-    )
-    if schema:
-        # PERMISSIVE corrupt-record capture needs the column in-schema
-        reader = reader.schema(f"{schema}, _corrupt_record STRING")
-    return reader.json(path)

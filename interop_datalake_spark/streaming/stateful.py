@@ -71,7 +71,10 @@ def running_user_stats(events: DataFrame) -> DataFrame:
 
 
 def user_stats_batch_twin(events: DataFrame) -> DataFrame:
-    """The same statistics as a batch aggregation (test yardstick)."""
+    """The same statistics as a batch aggregation — the definition
+    :func:`running_user_stats` must converge to once a stream is fully
+    consumed. Kept as the batch reference tests/test_stateful.py
+    compares the stateful stream against."""
     return events.groupBy("user_id").agg(
         F.count("*").alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value"),

@@ -271,35 +271,3 @@ class TestRecall:
             )
         )
         assert r1 == r2 and r1
-
-
-class TestRerank:
-    def test_pipeline_recall_beats_raw_adc(
-        self, spark, lake, emb, exact_top10
-    ):
-        """Shortlist→exact-rerank recall@10 = 0.53/0.67 at shortlist
-        30/60 with n_probe=4 on this corpus (round-11 residual
-        encoding; was 0.505/0.635 raw) vs ~0.33 for probe-restricted
-        residual ADC — the standard pipeline argument
-        (pq_rerank_topk's, with the persisted index as stage 1).
-        Floors pinned below measured; shortlist a monotone lever."""
-        from interop_datalake_spark.llm.ann_index import ivfpq_rerank
-
-        idx = IvfPqIndex(lake, "pqrr")
-        idx.build(emb, "embedding", "vec_id", n_cells=8)
-
-        def recall(shortlist):
-            got = {
-                (r.query_id, r.neighbor_id)
-                for r in ivfpq_rerank(
-                    idx, _queries(emb), emb, "embedding", "vec_id",
-                    k=10, n_probe=4, shortlist=shortlist,
-                ).collect()
-            }
-            return len(got & exact_top10) / len(exact_top10)
-
-        r30 = recall(30)
-        r60 = recall(60)
-        assert r30 >= 0.45, (r30, r60)
-        assert r60 >= r30 - 0.02  # monotone lever
-        assert r60 >= 0.6, (r30, r60)

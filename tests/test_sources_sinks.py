@@ -11,7 +11,7 @@ from interop_datalake_spark.lake.publish import (
 from interop_datalake_spark.lake.retrieve import retrieve_binary_batch
 from interop_datalake_spark.lake.txn import TxnTable
 from interop_datalake_spark.session import DatalakeSession
-from interop_datalake_spark.sources.tables import load_table, read_json_documents
+from interop_datalake_spark.sources.tables import load_table
 
 BIN_SCHEMA = "resource_id STRING, content_type STRING, resource_json STRING"
 
@@ -73,23 +73,6 @@ def test_overwrite_partition_on_fresh_table_outside_layout(spark, tmp_path):
     assert sorted(
         (r["fhir_tenant_id"], r["resource_id"]) for r in t.read().collect()
     ) == [("tA", "r4"), ("tB", "r2"), ("tB", "r3")]
-
-
-def test_json_scan_bronze_fidelity(spark, tmp_path):
-    p = tmp_path / "docs.jsonl"
-    p.write_text(
-        '{"resourceType":"Patient","id":"p1"}\n'
-        '{"resourceType":"Location","id":"l1"}\n'
-        "this is not json at all\n"
-    )
-    df = read_json_documents(
-        spark, str(p), schema="resourceType STRING, id STRING"
-    )
-    rows = df.collect()
-    good = [r for r in rows if r["_corrupt_record"] is None]
-    bad = [r for r in rows if r["_corrupt_record"] is not None]
-    assert sorted(r["id"] for r in good) == ["l1", "p1"]
-    assert len(bad) == 1 and "not json" in bad[0]["_corrupt_record"]
 
 
 def test_streaming_foreach_batch_sink(spark, sf_dir, tmp_path):

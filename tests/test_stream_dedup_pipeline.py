@@ -7,16 +7,28 @@ from pyspark.sql import functions as F
 
 from interop_datalake_spark.lake.txn import TxnTable
 from interop_datalake_spark.llm.dedup import lsh_sign_bands, minhash_lsh_dedup
-from interop_datalake_spark.llm.incremental import (
-    dedup_pipeline_writer,
-    start_dedup_stream,
-)
+from interop_datalake_spark.llm.incremental import dedup_pipeline_writer
 from interop_datalake_spark.session import DatalakeSession
 from interop_datalake_spark.sources.tables import load_table
+from interop_datalake_spark.streaming.txn_source import read_txn_stream
 
 
 def _pairs(df):
     return {(r["id_a"], r["id_b"], round(r["jaccard"], 6)) for r in df.collect()}
+
+
+def _drain(session, docs_t, store, pairs_t, ckpt):
+    """Tail the docs change feed with ``availableNow`` through the
+    pipeline writer; a restart on the same checkpoint continues the
+    offsets and epochs."""
+    (
+        read_txn_stream(session, docs_t.name, starting_version=0)
+        .writeStream.foreachBatch(dedup_pipeline_writer(docs_t, store, pairs_t))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def _setup(spark, tmp_path):
@@ -36,12 +48,12 @@ def test_streamed_batches_equal_monolithic_dedup(spark, sf_dir, tmp_path):
 
     # day 0: the initial corpus arrives
     docs_t.append(all_docs.filter(F.col("doc_id") < 450))
-    start_dedup_stream(session, docs_t, store, pairs_t, ckpt).awaitTermination()
+    _drain(session, docs_t, store, pairs_t, ckpt)
 
     # days 1+2: two more ingests land before the stream wakes again
     docs_t.append(all_docs.filter(F.col("doc_id").between(450, 474)))
     docs_t.append(all_docs.filter(F.col("doc_id") >= 475))
-    start_dedup_stream(session, docs_t, store, pairs_t, ckpt).awaitTermination()
+    _drain(session, docs_t, store, pairs_t, ckpt)
 
     got = _pairs(pairs_t.read())
     want = _pairs(minhash_lsh_dedup(all_docs, "text", "doc_id"))
@@ -53,7 +65,7 @@ def test_streamed_batches_equal_monolithic_dedup(spark, sf_dir, tmp_path):
 
     # idle restart: no new commits → no new epochs, tables unchanged
     vs_before = (store.current_version(), pairs_t.current_version())
-    start_dedup_stream(session, docs_t, store, pairs_t, ckpt).awaitTermination()
+    _drain(session, docs_t, store, pairs_t, ckpt)
     assert (store.current_version(), pairs_t.current_version()) == vs_before
 
 
