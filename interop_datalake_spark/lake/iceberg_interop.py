@@ -2901,7 +2901,7 @@ def compact_preserving_row_lineage(
         )
         .coalesce(target_files)
     )
-    files, rows, stats, parts, ptypes = table._write_data(df)
+    files, rows, stats, parts, ptypes = table._write_data(df, state)
     return table._commit(
         cur,
         op="compact",

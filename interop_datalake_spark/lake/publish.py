@@ -239,10 +239,7 @@ def publish_raw_data(
         "tenant_id STRING, transaction_id STRING, url STRING, time STRING, body STRING",
     )
     txn_table(session, RAW_TABLE).append(row_df)
-    path = row_df.select(
-        raw_data_file_path(F.col("tenant_id"), F.col("transaction_id")).alias("p")
-    ).first()["p"]
-    full_url = row_df.select(
-        datalake_full_url(F.lit(path)).alias("u")
-    ).first()["u"]
-    return full_url
+    # path and URL in one projection of literals: one JVM-only job,
+    # not a re-read of the Python-built row
+    url_col = datalake_full_url(raw_data_file_path(F.lit(tenant_id), F.lit(txn_id)))
+    return session.spark.range(1).select(url_col.alias("u")).collect()[0]["u"]

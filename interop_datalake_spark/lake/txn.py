@@ -73,7 +73,12 @@ from interop_datalake_spark.session import DatalakeSession
 
 class CommitConflictError(RuntimeError):
     """The table's latest version moved between snapshot resolution and
-    commit — retry against the new snapshot."""
+    commit — retry against the new snapshot. ``found``: the version the
+    pre-CAS check listed; None when the CAS itself lost."""
+
+    def __init__(self, message: str, found: int | None = None):
+        super().__init__(message)
+        self.found = found
 
 
 class SchemaEvolutionError(ValueError):
@@ -1821,17 +1826,13 @@ class TxnTable:
 
     # -- write path ---------------------------------------------------------
 
-    def _effective_partition_cols(self) -> list[str]:
-        if self.partition_cols:
-            return self.partition_cols
-        return self._state(self.current_version()).get("partition_cols", [])
-
-    def _effective_partition_transforms(self) -> dict[str, list]:
-        if self.partition_transforms:
-            return self.partition_transforms
+    def _layout(self, state: dict) -> tuple[list[str], dict[str, list]]:
+        """(partition cols, transforms) an op on snapshot ``state``
+        writes and commits: the handle's own, else the snapshot's (a
+        handle opened without a spec discovers it from the log)."""
         return (
-            self._state(self.current_version()).get("partition_transforms")
-            or {}
+            self.partition_cols or state.get("partition_cols") or [],
+            self.partition_transforms or state.get("partition_transforms") or {},
         )
 
     def _driver_max_bytes(self) -> int:
@@ -1847,6 +1848,25 @@ class TxnTable:
             )
         except ValueError:
             return 0
+
+    def _driver_collect(self, df: DataFrame):
+        """``df`` collected as one Arrow table, or None for the
+        distributed path: the commit and vector writes' one admission
+        rule (module comment above ``_DRIVER_COMMIT_MAX_BYTES_KEY``)."""
+        max_bytes = self._driver_max_bytes()
+        if max_bytes <= 0:
+            return None
+        est = _plan_size_estimate(df)
+        if est is None:
+            if not _driver_resident(df):
+                return None
+        elif est > max_bytes:
+            return None
+        try:
+            tbl = df.toArrow()
+        except Exception:
+            return None  # unsupported type / result too large: fall back
+        return tbl if tbl.nbytes <= max_bytes else None  # post-collect cap
 
     def _driver_commit_write(
         self,
@@ -1865,34 +1885,22 @@ class TxnTable:
         ``stat_cols`` only; :meth:`_write_data` reads the stats back
         from the footers exactly as it does for the distributed
         writer's files."""
-        max_bytes = self._driver_max_bytes()
-        if max_bytes <= 0:
-            return None
         dt = dict(wdf.dtypes)
         if any(dt.get(c) not in _PATH_SAFE_LAYOUT_TYPES for c in layout):
-            return None
-        est = _plan_size_estimate(wdf)
-        if est is None:
-            if not _driver_resident(wdf):
-                return None
-        elif est > max_bytes:
             return None
         from pyspark.sql import functions as F
 
         pid = "_idl_pid"
         while pid in wdf.columns:
             pid = "_" + pid
-        try:
-            tbl = wdf.withColumn(pid, F.spark_partition_id()).toArrow()
-        except Exception:
-            return None  # unsupported type / result too large: fall back
+        tbl = self._driver_collect(wdf.withColumn(pid, F.spark_partition_id()))
+        if tbl is None:
+            return None
         if tbl.num_rows == 0:
             # the distributed writer's empty part files are dropped
             # from the commit anyway — the visible end state is the
             # same empty add
             return []
-        if tbl.nbytes > max_bytes:
-            return None  # post-collect cap: the frame outgrew its bound
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
@@ -1935,10 +1943,12 @@ class TxnTable:
     def _write_data(
         self,
         df: DataFrame,
+        prev: dict,
         layout_partition_by: list[str] | None = None,
         commit_dir: str | None = None,
     ) -> tuple[list[str], int, dict[str, dict], dict[str, dict], dict[str, str]]:
-        """Write ``df`` into a fresh per-commit subdir; returns
+        """Write ``df`` into a fresh per-commit subdir under the layout
+        of the op's snapshot ``prev`` (:meth:`_layout`); returns
         (root-relative file paths, row count, per-file stats, per-file
         partition values, partition column types). The subdir is
         invisible to readers until a commit record references it.
@@ -1952,11 +1962,10 @@ class TxnTable:
         bound cannot be compared safely), and bloom columns cost one
         bloom-only job (:meth:`_bloom_stats`). Partition values are
         parsed from the Hive ``key=value`` path segments."""
-        pcols = self._effective_partition_cols()
+        pcols, transforms = self._layout(prev)
         ptypes = {
             c: t for c, t in df.dtypes if c in pcols
         }  # recorded in the log so reads re-type the path-encoded values
-        transforms = self._effective_partition_transforms()
         in_dtypes = dict(df.dtypes)
         wdf = df
         for tname, spec in transforms.items():
@@ -2312,12 +2321,19 @@ class TxnTable:
         — a true compare-and-swap, no check-then-write window. Raises
         :class:`CommitConflictError` on conflict (caller retries on
         the new snapshot); exactly one of two racing commits survives,
-        never a lost update (tests/test_txn.py two-writer race)."""
-        if self.current_version() != base_version:
+        never a lost update (tests/test_txn.py two-writer race).
+
+        The pre-CAS listing stays: were a stale base's successor record
+        vacuumed, the link alone would succeed and fork the log. Its
+        conflict carries the version found, so a retry lists no more."""
+        found = self.current_version()
+        if found != base_version:
             raise CommitConflictError(
-                f"table {self.name}: expected v{base_version}, "
-                f"found v{self.current_version()}"
+                f"table {self.name}: expected v{base_version}, found v{found}",
+                found=found,
             )
+        base_state = self._state(base_version)
+        pcols, transforms = self._layout(base_state)
         new_version = base_version + 1
         self._manifest_dir.mkdir(parents=True, exist_ok=True)
         # version_at_timestamp / expire_snapshots binary-search on the
@@ -2343,10 +2359,10 @@ class TxnTable:
             "rows_total": rows_total,
             "stats": stats or {},
             "partitions": partitions or {},
-            "partition_cols": self._effective_partition_cols(),
+            "partition_cols": pcols,
             "partition_types": partition_types
-            or self._state(base_version).get("partition_types", {}),
-            "partition_transforms": self._effective_partition_transforms(),
+            or base_state.get("partition_types", {}),
+            "partition_transforms": transforms,
         }
         if schema is not None:
             record["schema"] = schema
@@ -2441,27 +2457,9 @@ class TxnTable:
         ops are reorderable by construction).
 
         A concurrent vacuum may truncate any of the log reads this
-        check performs (commit records AND state replays) — all of it
-        degrades to a plain conflict, never a crash.
+        check performs (commit records AND state replays) —
+        :meth:`_commit_retry` degrades it to a plain conflict.
         """
-        try:
-            return self._rebase_ok_inner(
-                op, removed, partitions_added, base_version, new_base,
-                partition_scoped,
-            )
-        except FileNotFoundError:
-            return False  # vacuum truncated the log mid-check
-
-    def _rebase_ok_inner(
-        self,
-        op: str,
-        removed: list[str],
-        partitions_added: dict[str, dict],
-        base_version: int,
-        new_base: int,
-        partition_scoped: bool = True,
-    ) -> bool:
-        pcols = self._effective_partition_cols()
         if op == "merge_sync":
             # its delete-unmatched decision reads an arbitrary scope
             # predicate — never provably partition-confined, so a
@@ -2471,6 +2469,7 @@ class TxnTable:
             "merge", "delete", "overwrite_partitions"
         ):
             return False  # read scope spans partitions: cannot reorder
+        pcols = self._layout(self._state(new_base))[0]
         our_parts: set[tuple] | None = None
         if removed or op in ("merge", "delete", "overwrite_partitions"):
             if not pcols:
@@ -2586,16 +2585,17 @@ class TxnTable:
                     ),
                     props=props,
                 )
-            except CommitConflictError:
-                new_base = self.current_version()
-                if not self._rebase_ok(
-                    op,
-                    removed,
-                    partitions or {},
-                    attempt_base,
-                    new_base,
-                    partition_scoped,
-                ):
+            except CommitConflictError as e:
+                # after a lost link the winner's version is unknown
+                new_base = self.current_version() if e.found is None else e.found
+                try:
+                    ok = self._rebase_ok(
+                        op, removed, partitions or {}, attempt_base,
+                        new_base, partition_scoped,
+                    )
+                except FileNotFoundError:
+                    ok = False  # vacuum truncated the log mid-check
+                if not ok:
                     raise
                 attempt_base = new_base
         raise CommitConflictError(
@@ -2641,7 +2641,7 @@ class TxnTable:
         self._merge_schema(prev, df)  # validate before writing
         commit_dir = f"data/{uuid.uuid4().hex}"
         files, rows, stats, parts, ptypes = self._write_data(
-            df, commit_dir=commit_dir
+            df, prev, commit_dir=commit_dir
         )
         if callable(props):
             try:
@@ -2697,7 +2697,7 @@ class TxnTable:
         prev = self._state(base)
         if not _epoch_force and _epoch_applied(prev, _epoch):
             return None
-        files, rows, stats, parts, ptypes = self._write_data(df)
+        files, rows, stats, parts, ptypes = self._write_data(df, prev)
         return self._commit(
             base,
             op="overwrite",
@@ -2880,10 +2880,10 @@ class TxnTable:
             bloom_bits=self.bloom_bits,
             partition_transforms=state.get("partition_transforms") or None,
         )
-        if target.current_version() != 0:
+        found = target.current_version()
+        if found != 0:
             raise ValueError(
-                f"clone target {target_name} is not empty "
-                f"(v{target.current_version()})"
+                f"clone target {target_name} is not empty (v{found})"
             )
         missing = [f for f in state["files"] if not (self.root / f).exists()]
         if missing:
@@ -2966,6 +2966,8 @@ class TxnTable:
         never rebased)."""
         base = self.current_version()
         prev = self._state(base)
+        if _epoch_applied(prev, _epoch):
+            return None  # replayed epoch: no-op before any job or write
         self._merge_schema(prev, updates)  # validate before writing
         with self._persisted(updates) as updates:
             if not (merge_on_read and base > 0):
@@ -2989,6 +2991,7 @@ class TxnTable:
                         "left_semi",
                     ),
                     new=updates,
+                    epoch=_epoch,
                 ),
             )
 
@@ -3080,6 +3083,8 @@ class TxnTable:
 
         base = self.current_version()
         prev = self._state(base)
+        if _epoch_applied(prev, _epoch):
+            return None  # replayed epoch: no-op before any job or write
         self._merge_schema(prev, source)  # validate BEFORE any data write
         hits: set[str] = set()
         if scope is not None and prev["files"]:
@@ -3175,7 +3180,7 @@ class TxnTable:
         # partition columns are part of the merge key (a key then
         # cannot match rows outside its own partition) — the condition
         # for rebase-on-conflict to stay serializable
-        scoped = set(self._effective_partition_cols()) <= set(key_cols)
+        scoped = set(self._layout(prev)[0]) <= set(key_cols)
         return self._rewrite(
             base, prev, op, touched, kept, source,
             epoch=epoch, partition_scoped=scoped,
@@ -3215,7 +3220,7 @@ class TxnTable:
                 # data-loss bug: it silently dropped evolved columns
                 # from untouched rows)
                 frame = frame.unionByName(new, allowMissingColumns=True)
-        files, rows, stats, parts, ptypes = self._write_data(frame)
+        files, rows, stats, parts, ptypes = self._write_data(frame, prev)
         if callable(touched):
             touched = touched(parts)
         return self._commit_retry(
@@ -3344,35 +3349,24 @@ class TxnTable:
 
         dv_rel = f"dv/{uuid.uuid4().hex}"
         dv_dir = self.root / dv_rel
-        # BOUNDED-VECTOR FAST PATH (round 15, same gate as the
-        # bounded-commit driver write): when the matched positions are
-        # estimate-bounded, ONE Arrow collect replaces persist + write
-        # job + count job — the vector parquet is written by pyarrow
-        # and the per-file counts fold in Python. The DV read path
-        # pins _DV_SCHEMA, so the single driver-written part file
-        # reads identically; nothing observes DV part-file counts
-        # (manifests record the DIRECTORY + per-data-file counts).
-        # A production-scale delete's estimate blows the gate and
-        # takes the distributed path below unchanged.
+        # BOUNDED-VECTOR FAST PATH: past the commit write's gate
+        # (_driver_collect), ONE Arrow collect replaces persist + write
+        # job + count job. The DV read pins _DV_SCHEMA, so the single
+        # pyarrow part file reads identically; manifests record only
+        # the directory and per-data-file counts.
         counts = None
-        max_bytes = self._driver_max_bytes()
-        est = _plan_size_estimate(matches) if max_bytes > 0 else None
-        if est is not None and est <= max_bytes:
-            try:
-                tbl = matches.toArrow()
-            except Exception:
-                tbl = None  # result too large / exotic plan: distributed
-            if tbl is not None:
-                counts = Counter(tbl.column("file_key").to_pylist())
-                if counts:
-                    import pyarrow.parquet as _pq
+        tbl = self._driver_collect(matches)
+        if tbl is not None:
+            counts = Counter(tbl.column("file_key").to_pylist())
+            if counts:
+                import pyarrow.parquet as _pq
 
-                    dv_dir.mkdir(parents=True, exist_ok=True)
-                    _pq.write_table(
-                        tbl,
-                        dv_dir / f"part-00000-{uuid.uuid4().hex}.snappy.parquet",
-                        compression="snappy",
-                    )
+                dv_dir.mkdir(parents=True, exist_ok=True)
+                _pq.write_table(
+                    tbl,
+                    dv_dir / f"part-00000-{uuid.uuid4().hex}.snappy.parquet",
+                    compression="snappy",
+                )
         if counts is None:
             # persist: the matches plan (a lineage scan + key
             # semi-join) feeds BOTH the vector write and the per-file
@@ -3409,17 +3403,20 @@ class TxnTable:
         files: list[str],
         match,
         new: DataFrame | None = None,
-    ) -> int:
+        epoch: int | None = None,
+    ) -> int | None:
         """The merge-on-read commit of :meth:`merge` and the deletes:
         the rows ``match`` keeps of a lineage scan of ``files`` become
         this commit's deletion vector, ``new`` (if any) lands as new
-        data files, and ONE plain CAS commits both — no existing data
-        file is rewritten (the scan reads only the columns ``match``
-        needs plus lineage). Never rebased: a vector indexes exactly
-        the snapshot whose files it names, so a conflict deletes the
-        vector and raises for :meth:`_rerun_on_conflict`."""
+        data files, and ONE plain CAS commits both with ``epoch`` (None
+        when already applied) — no existing data file is rewritten.
+        Never rebased: a vector indexes exactly the snapshot whose files
+        it names, so a conflict deletes the vector and raises for
+        :meth:`_rerun_on_conflict`."""
         from pyspark.sql import functions as F
 
+        if _epoch_applied(prev, epoch):
+            return None
         dv = None
         if files:
             live = self._load_files(files, prev, keep_lineage=True)
@@ -3431,7 +3428,9 @@ class TxnTable:
                 prev,
             )
         added, rows, stats, parts, ptypes = (
-            ([], 0, None, None, None) if new is None else self._write_data(new)
+            ([], 0, None, None, None)
+            if new is None
+            else self._write_data(new, prev)
         )
         try:
             return self._commit(
@@ -3446,6 +3445,7 @@ class TxnTable:
                 partitions=parts,
                 partition_types=ptypes,
                 schema=None if new is None else self._merge_schema(prev, new),
+                epoch=epoch,
                 dv=dv,
             )
         except CommitConflictError:
@@ -3463,10 +3463,10 @@ class TxnTable:
         for attempt in range(4):
             try:
                 return body(base, prev)
-            except CommitConflictError:
+            except CommitConflictError as e:
                 if attempt == 3:
                     raise
-                base = self.current_version()
+                base = self.current_version() if e.found is None else e.found
                 prev = self._state(base)
 
     def overwrite_partitions(self, replacement: DataFrame) -> int:
@@ -3480,13 +3480,13 @@ class TxnTable:
         snapshot records for every file, on both writers, so NULL,
         boolean and empty-string partitions are replaced like any
         other, and no job runs before the write."""
-        pcols = self._effective_partition_cols()
+        base = self.current_version()
+        prev = self._state(base)
+        pcols = self._layout(prev)[0]
         if not pcols:
             raise ValueError(
                 f"table {self.name} has no partition columns; use overwrite()"
             )
-        base = self.current_version()
-        prev = self._state(base)
         self._merge_schema(prev, replacement)  # validate before writing
 
         def replaced(written: dict[str, dict]) -> list[str]:
@@ -3625,11 +3625,11 @@ class TxnTable:
         from pyspark.sql import functions as F
 
         base = self.current_version()
+        prev = self._state(base)
         if target_mb is not None:
-            st_now = self._state(base)
             total = sum(
                 (self.root / f).stat().st_size
-                for f in st_now["files"]
+                for f in prev["files"]
                 if (self.root / f).exists()
             )
             # on-disk bytes still include rows soft-deleted by deletion
@@ -3637,11 +3637,11 @@ class TxnTable:
             # compact-reconciliation case) would otherwise pack to files
             # well under target. Scale by the live fraction from the
             # manifest's own row accounting (round-6 advice).
-            file_stats = st_now.get("stats") or {}
-            dv_deleted = st_now.get("dv_deleted") or {}
+            file_stats = prev.get("stats") or {}
+            dv_deleted = prev.get("dv_deleted") or {}
             stat_rows = sum(
                 file_stats[f]["rows"]
-                for f in st_now["files"]
+                for f in prev["files"]
                 if f in file_stats
             )
             # the fraction must be computed over a CONSISTENT file
@@ -3650,7 +3650,7 @@ class TxnTable:
             # undershooting target_files (round-7 advice)
             dead = sum(
                 dv_deleted.get(f, 0)
-                for f in st_now["files"]
+                for f in prev["files"]
                 if f in file_stats
             )
             if stat_rows > 0 and dead > 0:
@@ -3790,9 +3790,8 @@ class TxnTable:
         else:
             df = df.coalesce(target_files)
         files, rows, stats, parts, ptypes = self._write_data(
-            df, layout_partition_by=layout_by
+            df, prev, layout_partition_by=layout_by
         )
-        prev = self._state(base)
         return self._commit(
             base,
             op="compact",
@@ -3844,8 +3843,6 @@ class TxnTable:
         ``foreachBatch + MERGE`` streaming-CDC idiom; file pruning
         applies as in :meth:`merge`, so a keyed micro-batch rewrites
         only intersecting files. Returns True if applied."""
-        if _epoch_applied(self._state(self.current_version()), epoch_id):
-            return False
         return self.merge(batch_df, key_cols, _epoch=epoch_id) is not None
 
     def foreach_batch_merge_writer(self, key_cols: list[str]):

@@ -361,7 +361,7 @@ class TestDeletionVectors:
         remaining = t._load_files(touched, prev).filter(
             ~F.coalesce(cond, F.lit(False))
         )
-        staged = t._write_data(remaining)
+        staged = t._write_data(remaining, prev)
         # writer B lands a merge-on-read delete on the same files first
         b = TxnTable(lake, "race", partition_cols=["site"], stats_cols=["k"])
         b.delete_where(

@@ -429,3 +429,33 @@ def test_exploding_join_over_cap_falls_back(lake, spark, monkeypatch):
         spark.conf.unset(_KEY)
     assert took == [False]
     assert t.read().count() == 90_000
+
+
+def test_vector_write_keeps_post_collect_cap(lake, spark, monkeypatch):
+    """The vector write shares the commit write's driver-collect gate,
+    post-collect cap included: with the size estimate forced under a
+    1 KB cap, a merge-on-read delete whose vector collects past the
+    cap is written by the distributed writer, and deletes the same
+    rows."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from interop_datalake_spark.lake import txn
+
+    t = TxnTable(lake, "dvcap", stats_cols=["id"])
+    t.append(spark.range(2000).withColumn("tag", F.lit("x")))
+    saved: list[str] = []
+    real = DataFrameWriter.parquet
+
+    def spy(self, path, *a, **kw):
+        saved.append(str(path))
+        return real(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    monkeypatch.setattr(txn, "_plan_size_estimate", lambda df: 1)
+    spark.conf.set(_KEY, "1024")
+    try:
+        t.delete_where(F.col("id") % 2 == 0, merge_on_read=True)
+    finally:
+        spark.conf.unset(_KEY)
+    assert [p for p in saved if "/dv/" in p]
+    assert t.read().count() == 1000

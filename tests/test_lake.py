@@ -248,3 +248,21 @@ def test_parse_object_url_malformed_is_null(spark):
     assert rows[0]["p"]["path"] == "a/b.json"
     assert rows[1]["p"] is None and rows[2]["p"] is None and rows[3]["p"] is None
 
+
+
+
+def test_publish_raw_runs_at_most_two_jobs(session, spark, jobs_of):
+    """The append is one job and the URL one more: the path and the
+    URL come from one projection, not two ``first()`` scans of the
+    Python-built row (each a job per slice it has to reach)."""
+    from interop_datalake_spark.lake.retrieve import read_lake_table
+
+    url, jobs = jobs_of(
+        lambda: publish_raw_data(session, "t1", "body", "http://Epic.com")
+    )
+    assert len(jobs) <= 2
+    txn_id = read_lake_table(session, "raw_data_response").first()["transaction_id"]
+    assert url == (
+        "https://objectstorage.us-phoenix-1.oraclecloud.com/n/namespace/b/"
+        f"datalake/o/raw_data_response/tenant_id=t1/transaction_id/{txn_id}"
+    )

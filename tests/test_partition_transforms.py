@@ -151,7 +151,7 @@ class TestHiddenPartitioning:
         )
         t.append(_events(spark))  # 5 days of files
         fresh = TxnTable(lake, "ev6")  # no spec passed: discovered
-        assert fresh._effective_partition_transforms() == {
+        assert fresh.manifest()["partition_transforms"] == {
             "ts_day": ["days", "ts"]
         }
         pruned = fresh.resolve_files(

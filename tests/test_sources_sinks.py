@@ -69,7 +69,7 @@ def test_overwrite_partition_on_fresh_table_outside_layout(spark, tmp_path):
         )
         assert got == len(rows)
     t = TxnTable(session, "other")
-    assert t._effective_partition_cols() == ["fhir_tenant_id"]
+    assert t.manifest()["partition_cols"] == ["fhir_tenant_id"]
     assert sorted(
         (r["fhir_tenant_id"], r["resource_id"]) for r in t.read().collect()
     ) == [("tA", "r4"), ("tB", "r2"), ("tB", "r3")]

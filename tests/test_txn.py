@@ -104,7 +104,7 @@ def test_commit_conflict_detection(table, spark):
     table.append(_df(spark, [(1, "a")]))
     base = table.current_version()
     new_files, new_rows, new_stats, new_parts, _ = table._write_data(
-        _df(spark, [(2, "b")])
+        _df(spark, [(2, "b")]), table.manifest(base)
     )
     # another writer lands first
     table.append(_df(spark, [(3, "c")]))
@@ -138,8 +138,9 @@ def test_two_writer_race_exactly_one_commit_survives(session, spark, monkeypatch
     t.append(_df(spark, [(1, "a")]))
     base = t.current_version()
 
-    files_a, rows_a, stats_a, _, _ = t._write_data(_df(spark, [(2, "A")]))
-    files_b, rows_b, stats_b, _, _ = t._write_data(_df(spark, [(3, "B")]))
+    prev = t.manifest(base)
+    files_a, rows_a, stats_a, _, _ = t._write_data(_df(spark, [(2, "A")]), prev)
+    files_b, rows_b, stats_b, _, _ = t._write_data(_df(spark, [(3, "B")]), prev)
 
     # writer A commits v2 first
     t._commit(base, op="append", added=files_a, removed=[],

@@ -59,7 +59,7 @@ def test_concurrent_appends_both_succeed(session, spark, monkeypatch):
 
     # writer B stages its files against `base`
     files_b, rows_b, stats_b, parts_b, ptypes_b = t._write_data(
-        _df(spark, [(3, "B")])
+        _df(spark, [(3, "B")]), t.manifest(base)
     )
     # writer A lands first
     t.append(_df(spark, [(2, "A")]))

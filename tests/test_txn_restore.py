@@ -105,7 +105,7 @@ def test_append_does_not_rebase_across_restore(table, spark):
     table.append(_df(spark, [(2, "b")]))
     base = table.current_version()
     files, rows, stats, parts, ptypes = table._write_data(
-        _df(spark, [(3, "c")])
+        _df(spark, [(3, "c")]), table.manifest(base)
     )
     table.restore(1)  # intervening wholesale replacement
     with pytest.raises(CommitConflictError):
