@@ -14,33 +14,41 @@ delete-emitting change feed. Expansion check: (L+ΔL)⋈(R+ΔR) − L⋈R =
 term — each refresh costs O(|ΔL| · fanout + |ΔR| · fanout), never a
 re-join of the full tables.
 
+ONE incremental-view core: :class:`JoinViewCore` builds that signed
+delta for both join views — per side a checkpointed change frame, the
+changed keys or their envelope, and the broadcast decision — and
+:class:`IncrementalJoinAggView` hands its aggregate to the same
+delta-apply step :class:`~interop_datalake_spark.lake.ivm.IncrementalAggView`
+uses (the DBSP composition: aggregate ∘ join). Every file resolution
+goes through ``ivm.resolve_key_files``.
+
 Scale shape: the two snapshot sides (R_new, L_old) are NOT full
 scans when the snapshot table records stats on the join key — the
-changed join-key values prune the snapshot read per key exactly like
-the agg view's min/max repair (ivm.py round-7 item 2): ≤
+changed join-key values prune the snapshot read per key (≤
 _PRUNE_KEYS_MAX keys resolve per-key point ranges and union the file
-sets; beyond that one (min, max) envelope. "Bounded by the window's
+sets; beyond that one (min, max) envelope). "Bounded by the window's
 changed rows" is ENFORCED, not assumed (round-8 verdict item 1): the
 refresh pre-counts the window from the commit records
 (ivm.py:window_change_rows — manifest row stats + vector counts, no
 Spark job) and picks a mode, exposed as ``last_prune_mode``:
 
-- ``"per-id"`` (window ≤ max_point_window_rows): collect the changed
-  (id, join_key) pairs, per-key point-range pruning everywhere, and
-  explicit broadcast of the (small, checkpointed) delta sides.
+- point mode (``"per-id"`` / ``"per-key"``; window ≤
+  max_point_window_rows): collect the changed join keys (and ids),
+  per-key point-range pruning everywhere, and explicit broadcast of
+  the (small, checkpointed) delta sides.
 - ``"envelope"`` (large or unknown window — a bulk backfill, a week
   of unrefreshed changes): NOTHING row-shaped ever reaches the
-  driver. Per-side (min, max) bounds of the ids and join keys are
-  aggregated distributed (one 5-scalar row per side); snapshot reads
-  and the scoped view read prune by those envelopes; the scope
+  driver. Per-side (min, max) bounds of the join keys (and ids) are
+  aggregated distributed (one row per side); snapshot reads and the
+  scoped view read prune by those envelopes; the join view's scope
   predicate is the BETWEEN of the id envelopes (wider than the exact
   id set — untouched in-scope rows flow through the full-outer merge
   unchanged, so the widening costs I/O, never correctness); and the
   delta joins carry NO broadcast hint — AQE picks the strategy for
   a delta that may be executor-memory-sized.
 
-Row identity: view rows are keyed by (left_id, right_id) — each side
-must expose a UNIQUE id column (the primary-key contract every
+Row identity: join view rows are keyed by (left_id, right_id) — each
+side must expose a UNIQUE id column (the primary-key contract every
 CDC-maintained join view has; violations are detected distributed
 and refused loudly, never silently merged). Inner equi-join only:
 outer-join IVM needs per-key presence counters to decide when a
@@ -49,8 +57,7 @@ NULL-padded row appears/disappears — documented out of scope.
 Exactly-once: the pair of source versions (lv, rv) packs into the
 view's commit epoch (lv·2²⁰ + rv, lexicographically monotone), so a
 replayed refresh is a no-op and a crash between feed read and commit
-re-runs the same delta — the same idempotence contract as
-IncrementalAggView, which this class deliberately mirrors.
+re-runs the same delta.
 
 Reference parity: the reference publishes per-tenant resource
 batches (DatalakePublishService.kt:50-90); "resources ⋈ tenant
@@ -60,16 +67,19 @@ maintenance shape.
 
 from __future__ import annotations
 
+from collections import namedtuple
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from interop_datalake_spark.lake.ivm import (
-    _PRUNE_KEYS_MAX,
-    additive_combine_exprs,
+    AggViewCore,
+    MaterializedView,
     assert_window_delta_visible,
-    keys_predicate,
-    null_out_empty_sums,
     resolve_key_files,
+    schema_types,
+    scoped_read,
     window_change_rows,
 )
 from interop_datalake_spark.lake.txn import TxnTable
@@ -80,9 +90,7 @@ _EPOCH_BASE = 2**20
 
 def pack_epoch(lv: int, rv: int) -> int:
     """(left, right) source versions → one lexicographically-monotone
-    commit epoch. Shared by both join-view classes (a drifting copy of
-    the encoding would silently desynchronize their replay
-    semantics)."""
+    commit epoch."""
     if rv >= _EPOCH_BASE or lv >= _EPOCH_BASE:
         raise ValueError(
             f"source version exceeds the packed-epoch bound "
@@ -100,50 +108,215 @@ def pruned_snapshot(
     table: TxnTable,
     version: int,
     cols: list[str],
-    join_keys: list | None,
-    key0: str,
-    obs: dict,
-    side: str,
+    key: str,
+    keys: list | None = None,
     envelope: tuple | None = None,
-) -> DataFrame | None:
-    """``table`` at ``version``, pruned to files that can hold the
-    changed join-key values (point-range per key ≤ cap, else one
-    envelope), recording the opened file set in ``obs[side]``.
-    ``envelope=(lo, hi)`` skips the per-key path entirely and prunes
-    by that one range — the large-window mode, where the caller
-    derived the bounds distributed instead of collecting keys
-    (round-8 verdict item 1). Pruning drops files, not rows — the
-    downstream equi-join is the exact residual filter, so a stats-less
-    table degrades to a full snapshot scan, never to a wrong answer.
-    Returns None when the term is provably empty (no snapshot data, no
-    keys, or every file pruned). Shared by the join view and the
-    join-agg view."""
-    if version == 0:
-        return None
-    m = table.manifest(version)
-    if not m["files"]:
-        return None
-    if envelope is not None:
-        lo, hi = envelope
-        if lo is None or hi is None:
-            # every changed join key was NULL: NULLs never equi-join
-            obs[side] = []
-            return None
-        files = table.resolve_files(
-            version=version, key_range=(key0, lo, hi)
-        )
-    else:
-        if not any(k is not None for k in join_keys):
-            obs[side] = []
-            return None
-        files = resolve_key_files(table, version, key0, join_keys)
-    obs[side] = files
+) -> tuple[DataFrame | None, list[str]]:
+    """``(table@version pruned to the files that can hold the changed
+    join-key values, those files)`` — the frame is None when the term
+    is provably empty (no snapshot data, only NULL keys, or every
+    file pruned). Pruning drops files, not rows — the downstream
+    equi-join is the exact residual filter, so a stats-less table
+    degrades to a full snapshot scan, never to a wrong answer."""
+    files = resolve_key_files(table, version, key, keys, envelope)
     if not files:
-        return None
-    return table._load_files(files, m).select(*cols)
+        return None, files
+    return table._load_files(files, table.manifest(version)).select(*cols), files
 
 
-class IncrementalJoinView:
+#: one source's share of a join refresh: its signed change frame, and
+#: the changed join keys / ids as value lists (point mode) or (lo, hi)
+#: envelopes (envelope mode); ids are None for the id-less join-agg
+_Side = namedtuple("_Side", "change keys key_env ids id_env")
+
+
+class JoinViewCore(MaterializedView):
+    """What both join views share: packed (lv, rv) epochs, the
+    delta-visibility gate, the window pre-count and mode decision, the
+    per-side change frames, and the two bilinear delta terms. Per
+    class, as data: ``_id_cols`` (the join view's unique ids; none for
+    the aggregate), ``_point_mode`` (the point mode's name in
+    ``last_prune_mode``), ``_recompute`` (the snapshot-join result a
+    first materialization and ``full_refresh`` write) and
+    ``_apply_join_delta`` (what the signed delta terms become)."""
+
+    _id_cols = (None, None)
+    _pack = staticmethod(pack_epoch)
+
+    def __init__(self, left, right, on, max_point_window_rows):
+        self.left = left
+        self.right = right
+        self.on = list(on)
+        #: change windows above this many rows (pre-counted from the
+        #: commit records) refresh in "envelope" mode: no per-row
+        #: driver collect, no delta broadcast (round-8 verdict item 1)
+        self.max_point_window_rows = max_point_window_rows
+        #: files the last refresh's pruned snapshot reads resolved,
+        #: keyed by side ("left"/"right"); absent side = that side's
+        #: term was not built. A stats-less table records its full
+        #: file list (the conservative full-scan degradation).
+        self.last_snapshot_scan_files: dict[str, list[str]] = {}
+        #: files the last refresh's in-scope VIEW read opened (None =
+        #: refresh didn't reach the scoped read)
+        self.last_view_scan_files: list[str] | None = None
+        #: point-mode name | "envelope" — how the last refresh pruned
+        #: (None = refresh didn't reach the mode decision)
+        self.last_prune_mode: str | None = None
+
+    def last_refreshed_versions(self) -> tuple[int, int]:
+        """(left, right) source versions the view reflects (0, 0 =
+        never refreshed)."""
+        v = self.view.current_version()
+        epoch = (self.view.manifest(v).get("epoch") or 0) if v else 0
+        return unpack_epoch(epoch)
+
+    def _snapshot_join(self, lv: int, rv: int) -> DataFrame | None:
+        """Both source snapshots joined on ``on`` — None while either
+        holds no data."""
+        if not (
+            lv
+            and rv
+            and self.left.manifest(lv)["files"]
+            and self.right.manifest(rv)["files"]
+        ):
+            return None
+        return (
+            self.left.read(version=lv)
+            .select(*self.left_cols)
+            .join(
+                self.right.read(version=rv).select(*self.right_cols, *self.on),
+                self.on,
+            )
+        )
+
+    def full_refresh(self, force: bool = False) -> int | None:
+        """Recompute the view from both snapshots — the first
+        materialization, and the recovery path after a rewriting
+        source commit. ``force=True`` recomputes at already-stamped
+        versions (overwrite's verbatim-epoch contract), the deliberate
+        resync after suspected divergence."""
+        lv, rv = self.left.current_version(), self.right.current_version()
+        out = self._recompute(lv, rv)
+        if out is None:
+            return None
+        return self.view.overwrite(
+            out, _epoch=pack_epoch(lv, rv), _epoch_force=force
+        )
+
+    def _side(self, table, last, cur, cols, idc, point) -> _Side | None:
+        """One source's share of the join delta — None when it has no
+        changed rows. The signed change frame is checkpointed once: it
+        drives a bounded collect/aggregate AND a join term, and
+        without the barrier the feed read (with its DV semi-joins)
+        re-runs per consumer. Point mode collects the changed join
+        keys (and ids) — bounded by the pre-counted window; envelope
+        mode aggregates their (min, max) into one distributed row."""
+        if cur <= last:
+            return None
+        # _commit_version rides along as _cv: multi-commit windows need
+        # it to pick the LATEST insert payload per pair and to tell
+        # "re-updated across commits" (legal) from "duplicated within
+        # one commit" (unique-id breach) — round-8 full-session review
+        change = (
+            table.read_changes(last, cur, include_deletes=True)
+            .select(
+                *cols,
+                F.when(F.col("_change_type") == "delete", -1)
+                .otherwise(1)
+                .alias("_sign"),
+                F.col("_commit_version").alias("_cv"),
+            )
+            .localCheckpoint()
+        )
+        probe = [c for c in (self.on[0], idc) if c is not None]
+        if point:
+            rows = change.select(*probe).collect()
+            if not rows:
+                return None
+            vals = [list(c) for c in zip(*rows)]
+            return _Side(change, vals[0], None, vals[-1] if idc else None, None)
+        row = change.agg(
+            F.count("*"), *[f(c) for c in probe for f in (F.min, F.max)]
+        ).collect()[0]  # bounded: one row of bounds
+        if row[0] == 0:
+            return None
+        return _Side(
+            change, None, (row[1], row[2]), None, (row[3], row[4]) if idc else None
+        )
+
+    def refresh(self) -> int | None:
+        """Apply both sources' change deltas since the last refresh in
+        ONE atomic view commit. Returns the view's new version, or
+        None when already current. Driver actions are bounded by
+        ENFORCEMENT, not assumption: the window is pre-counted from
+        the commit records and windows above ``max_point_window_rows``
+        switch to envelope mode (module docstring; ``last_prune_mode``
+        records the decision), where the only collects are one bounds
+        row per side."""
+        lv, rv = self.left.current_version(), self.right.current_version()
+        llast, rlast = self.last_refreshed_versions()
+        if (lv, rv) == (llast, rlast):
+            return None
+        self.last_snapshot_scan_files = {}
+        self.last_view_scan_files = None
+        self.last_prune_mode = None
+        if self.view.current_version() == 0:
+            # initial materialization joins SNAPSHOTS and never reads
+            # the feed — rewriting commits in the pre-history are
+            # irrelevant here (the delta-visibility asserts below
+            # would spuriously refuse any source that was ever
+            # compacted). A still-empty source materializes and stamps
+            # nothing; the rescan of this window is O(1).
+            return self.full_refresh()
+        assert_window_delta_visible(self.left, llast, lv)
+        assert_window_delta_visible(self.right, rlast, rv)
+        # pre-count the window from the commit records (no Spark job):
+        # "bounded by the window's changed rows" is only a bound if
+        # something counted the window — a bulk backfill or a long-
+        # unrefreshed view must not collect millions of rows onto the
+        # driver nor broadcast the backlog (round-8 verdict item 1)
+        wl = window_change_rows(self.left, llast, lv) if lv > llast else 0
+        wr = window_change_rows(self.right, rlast, rv) if rv > rlast else 0
+        point = (
+            wl is not None
+            and wr is not None
+            and wl + wr <= self.max_point_window_rows
+        )
+        self.last_prune_mode = self._point_mode if point else "envelope"
+        lid, rid = self._id_cols
+        l = self._side(self.left, llast, lv, self.left_cols, lid, point)
+        r = self._side(
+            self.right, rlast, rv, self.right_cols + self.on, rid, point
+        )
+        packed = pack_epoch(lv, rv)
+        if l is None and r is None:
+            # no-op commits on both sides: stamp so the (empty, cheap)
+            # window is never rescanned
+            return self.view.stamp_epoch(packed)
+        # point mode: the delta side is checkpointed (hides size stats)
+        # and window-bounded — broadcast it explicitly, per the repo's
+        # checkpoint-hides-stats rule. Envelope mode: NO hint, the
+        # delta may be arbitrarily large — AQE picks the strategy.
+        hint = F.broadcast if point else (lambda df: df)
+        tl = tr = None
+        if l is not None:  # ΔL ⋈ R_new
+            snap, self.last_snapshot_scan_files["right"] = pruned_snapshot(
+                self.right, rv, self.right_cols + self.on, self.on[0],
+                l.keys, l.key_env,
+            )
+            if snap is not None:
+                tl = hint(l.change).join(snap, self.on)
+        if r is not None:  # L_old ⋈ ΔR (the snapshot carries no _sign)
+            snap, self.last_snapshot_scan_files["left"] = pruned_snapshot(
+                self.left, llast, self.left_cols, self.on[0],
+                r.keys, r.key_env,
+            )
+            if snap is not None:
+                tr = snap.join(hint(r.change), self.on)
+        return self._apply_join_delta(l, r, tl, tr, packed, point)
+
+
+class IncrementalJoinView(JoinViewCore):
     """``left ⋈ right ON on_cols`` materialized as a TxnTable and
     maintained from change deltas.
 
@@ -153,6 +326,8 @@ class IncrementalJoinView:
     upstream). Column names across the two sides must be disjoint
     (refused at construction — silent collisions are how join views
     rot)."""
+
+    _point_mode = "per-id"
 
     def __init__(
         self,
@@ -167,15 +342,10 @@ class IncrementalJoinView:
         right_cols: list[str] | None = None,
         max_point_window_rows: int = 100_000,
     ):
-        #: change windows above this many rows (pre-counted from the
-        #: commit records) refresh in "envelope" mode: no per-row
-        #: driver collect, no delta broadcast (round-8 verdict item 1)
-        self.max_point_window_rows = max_point_window_rows
-        self.left = left
-        self.right = right
-        self.on = list(on)
+        super().__init__(left, right, on, max_point_window_rows)
         self.left_id = left_id
         self.right_id = right_id
+        self._id_cols = (left_id, right_id)
         # on-cols ride the left projection; ids always materialize
         self.left_cols = [left_id] + self.on + [
             c
@@ -212,34 +382,6 @@ class IncrementalJoinView:
         # stats on BOTH id columns: a refresh prunes the in-scope view
         # read per changed id (either side), not by full scan
         self.view = TxnTable(session, name, stats_cols=[left_id, right_id])
-        #: files the last refresh's pruned snapshot reads opened,
-        #: keyed by side ("left"/"right"); absent side = that term was
-        #: empty. Always the actual opened file list — a stats-less
-        #: table records its full file list (the conservative
-        #: full-scan degradation). Observability for tests, like
-        #: ivm.last_repair_scan_files.
-        self.last_snapshot_scan_files: dict[str, list[str]] = {}
-        #: files the last refresh's in-scope VIEW read opened (None =
-        #: refresh didn't reach the scoped read)
-        self.last_view_scan_files: list[str] | None = None
-        #: "per-id" | "envelope" — how the last refresh pruned and
-        #: scoped (None = refresh didn't reach the mode decision)
-        self.last_prune_mode: str | None = None
-
-    # -- epochs ---------------------------------------------------------------
-
-    def _pack(self, lv: int, rv: int) -> int:
-        return pack_epoch(lv, rv)
-
-    def last_refreshed_versions(self) -> tuple[int, int]:
-        """(left, right) source versions the view reflects (0, 0 =
-        never refreshed)."""
-        v = self.view.current_version()
-        epoch = (self.view.manifest(v).get("epoch") or 0) if v else 0
-        return unpack_epoch(epoch)
-
-    def read(self) -> DataFrame:
-        return self.view.read()
 
     def read_left_outer(self) -> DataFrame:
         """The LEFT OUTER form, composed at read time: the
@@ -274,211 +416,73 @@ class IncrementalJoinView:
         ).select(*self._view_cols())
         return inner.select(*self._view_cols()).unionByName(padded)
 
-    # -- snapshot + delta construction ---------------------------------------
-
-    def _snapshot(
-        self, table: TxnTable, version: int, cols: list[str],
-        join_keys: list, side: str,
-    ) -> DataFrame:
-        return pruned_snapshot(
-            table, version, cols, join_keys, self.on[0],
-            self.last_snapshot_scan_files, side,
+    def _view_cols(self) -> list[str]:
+        return (
+            self.on
+            + [c for c in self.left_cols if c not in self.on]
+            + self.right_cols
         )
 
-    @staticmethod
-    def _signed(changes: DataFrame, cols: list[str]) -> DataFrame:
-        # _commit_version rides along: multi-commit windows need it to
-        # pick the LATEST insert payload per pair and to tell
-        # "re-updated across commits" (legal) from "duplicated within
-        # one commit" (unique-id breach) — round-8 full-session review
-        sign = F.when(F.col("_change_type") == "delete", -1).otherwise(1)
-        return changes.select(
-            *cols, sign.alias("_sign"), F.col("_commit_version").alias("_cv")
-        )
-
-    # -- refresh --------------------------------------------------------------
-
-    def refresh(self) -> int | None:
-        """Apply both sources' change deltas since the last refresh in
-        ONE atomic view commit. Returns the view's new version, or
-        None when already current. Driver actions are bounded by
-        ENFORCEMENT, not assumption: the window is pre-counted from
-        the commit records and windows above ``max_point_window_rows``
-        switch to envelope mode (module docstring; ``last_prune_mode``
-        records the decision), where the only collects are one
-        5-scalar bounds row per side plus the distributed violation
-        count every mode pays."""
-        lv, rv = self.left.current_version(), self.right.current_version()
-        llast, rlast = self.last_refreshed_versions()
-        if (lv, rv) == (llast, rlast):
+    def _recompute(self, lv: int, rv: int) -> DataFrame | None:
+        joined = self._snapshot_join(lv, rv)
+        if joined is None:
             return None
-        self.last_snapshot_scan_files = {}
-        self.last_view_scan_files = None
-        self.last_prune_mode = None
-        packed = self._pack(lv, rv)
-        if self.view.current_version() == 0:
-            # initial materialization joins SNAPSHOTS and never reads
-            # the feed — rewriting commits in the pre-history are
-            # irrelevant here (the delta-visibility asserts below
-            # would spuriously refuse any source that was ever
-            # compacted, and cost an O(all-commits) driver loop —
-            # post-review fix)
-            out = self._full_join(lv, rv)
-            if out is None:
-                # a source is still empty: nothing to materialize and
-                # nothing to stamp on a version-0 view — the rescan of
-                # this window is an empty-manifest check, O(1)
-                return None
-            # enforce the unique-id contract UP FRONT: a duplicate id
-            # materialized silently would later make an incremental
-            # retraction delete BOTH copies (round-8 full-session
-            # review, reproduced) — the refusal the docstring promises
-            # must cover the initial snapshot too
-            self._assert_unique_ids(lv, rv)
-            return self.view.merge(
-                out, [self.left_id, self.right_id], _epoch=packed
-            )
-        assert_window_delta_visible(self.left, llast, lv)
-        assert_window_delta_visible(self.right, rlast, rv)
-        # pre-count the window from the commit records (no Spark job):
-        # "bounded by the window's changed rows" is only a bound if
-        # something counted the window — a bulk backfill or a long-
-        # unrefreshed view must not collect millions of rows onto the
-        # driver nor broadcast the backlog (round-8 verdict item 1)
-        wl = window_change_rows(self.left, llast, lv) if lv > llast else 0
-        wr = window_change_rows(self.right, rlast, rv) if rv > rlast else 0
-        per_id = (
-            wl is not None
-            and wr is not None
-            and wl + wr <= self.max_point_window_rows
-        )
-        self.last_prune_mode = "per-id" if per_id else "envelope"
+        # enforce the unique-id contract UP FRONT: a duplicate id
+        # materialized silently would later make an incremental
+        # retraction delete BOTH copies (round-8 full-session review,
+        # reproduced)
+        self._assert_unique_ids(lv, rv)
+        return joined.select(*self._view_cols())
 
-        # checkpoint the signed feeds once: each drives a bounded
-        # collect/aggregate AND a join term — without the barrier the
-        # feed read (with its DV semi-joins) re-runs per consumer
-        lchange = (
-            self._signed(
-                self.left.read_changes(llast, lv, include_deletes=True),
-                self.left_cols,
-            ).localCheckpoint()
-            if lv > llast
-            else None
-        )
-        rchange = (
-            self._signed(
-                self.right.read_changes(rlast, rv, include_deletes=True),
-                self.right_cols + self.on,
-            ).localCheckpoint()
-            if rv > rlast
-            else None
-        )
-        view_cols = self._view_cols()
-        payload = [c for c in view_cols if c not in (self.left_id, self.right_id)]
-        terms = []
-        lids = rids = None
-        lb = rb = None
-        if per_id:
-            # changed ids / join keys: bounded by the pre-counted
-            # window rows
-            lrows = (
-                lchange.select(self.left_id, self.on[0]).collect()
-                if lchange is not None
-                else []
+    def _assert_unique_ids(self, lv: int, rv: int) -> None:
+        """Distributed uniqueness check of both id columns at the
+        given snapshot versions (two bounded one-scalar actions).
+        Pair multiplicity in the join is the PRODUCT of the two
+        sides' id multiplicities, so per-side uniqueness implies pair
+        uniqueness."""
+        for table, idc, v, side in (
+            (self.left, self.left_id, lv, "left"),
+            (self.right, self.right_id, rv, "right"),
+        ):
+            dup = (
+                table.read(version=v)
+                .groupBy(idc)
+                .count()
+                .filter(F.col("count") > 1)
+                .count()
             )
-            rrows = (
-                rchange.select(self.right_id, self.on[0]).collect()
-                if rchange is not None
-                else []
-            )
-            if not lrows and not rrows:
-                # no-op commits on both sides: stamp so the (empty,
-                # cheap) window is never rescanned
-                return self.view.stamp_epoch(packed)
-            lids = [r[0] for r in lrows]
-            rids = [r[0] for r in rrows]
-            if lrows:
-                r_snap = self._snapshot(
-                    self.right,
-                    rv,
-                    self.right_cols + self.on,
-                    [r[1] for r in lrows],
-                    "right",
+            if dup:
+                raise ValueError(
+                    f"{side} source holds {dup} duplicated {idc!r} "
+                    f"value(s): the unique-id contract is violated — "
+                    f"dedupe the source before materializing"
                 )
-                if r_snap is not None:
-                    # _term=2 (the PRIORITY value under the struct
-                    # max): ΔL⋈R_new sees BOTH sides current, so when
-                    # a pair collects an insert from each term (both
-                    # sides updated in one window) THIS term's payload
-                    # must win — the L_old⋈ΔR term (_term=1) carries
-                    # the stale pre-window left payload. The delta
-                    # side is checkpointed (hides size stats) and
-                    # window-bounded: broadcast it explicitly, per the
-                    # repo's checkpoint-hides-stats rule.
-                    terms.append(
-                        F.broadcast(lchange).join(r_snap, self.on).withColumn(
-                            "_term", F.lit(2)
-                        )
-                    )
-            if rrows:
-                l_snap = self._snapshot(
-                    self.left,
-                    llast,
-                    self.left_cols,
-                    [r[1] for r in rrows],
-                    "left",
-                )
-                if l_snap is not None:
-                    # _term=1 (loses the payload-priority max to
-                    # ΔL⋈R_new when both contribute). l_snap carries
-                    # no _sign column: the join inherits rchange's
-                    # sign unambiguously. Broadcast the checkpointed
-                    # delta side explicitly (same rule as above).
-                    terms.append(
-                        l_snap.join(F.broadcast(rchange), self.on).withColumn(
-                            "_term", F.lit(1)
-                        )
-                    )
-            scope = self._scope_predicate(lids, rids)
-            cur = self._scoped_view(lids, rids, scope)
-        else:
-            # ENVELOPE mode: per-side (min, max, count) bounds of the
-            # changed ids and join keys — one 5-scalar row per side,
-            # the ONLY driver materialization at any window size
-            lb = self._bounds(lchange, self.left_id)
-            rb = self._bounds(rchange, self.right_id)
-            if lb is None and rb is None:
-                return self.view.stamp_epoch(packed)
-            if lb is not None:
-                r_snap = pruned_snapshot(
-                    self.right, rv, self.right_cols + self.on, None,
-                    self.on[0], self.last_snapshot_scan_files, "right",
-                    envelope=(lb["klo"], lb["khi"]),
-                )
-                if r_snap is not None:
-                    # NO broadcast hint: the delta may be arbitrarily
-                    # large here — AQE picks the join strategy
-                    terms.append(
-                        lchange.join(r_snap, self.on).withColumn(
-                            "_term", F.lit(2)
-                        )
-                    )
-            if rb is not None:
-                l_snap = pruned_snapshot(
-                    self.left, llast, self.left_cols, None,
-                    self.on[0], self.last_snapshot_scan_files, "left",
-                    envelope=(rb["klo"], rb["khi"]),
-                )
-                if l_snap is not None:
-                    terms.append(
-                        l_snap.join(rchange, self.on).withColumn(
-                            "_term", F.lit(1)
-                        )
-                    )
-            scope = self._scope_predicate_envelope(lb, rb)
-            cur = self._scoped_view_envelope(lb, rb, scope)
+
+    def _apply_join_delta(self, l, r, tl, tr, packed, point):
+        """Merge the tagged delta terms into the in-scope view rows by
+        pair presence, refusing unique-id breaches."""
         ids = [self.left_id, self.right_id]
-        if not terms:
+        # the in-scope view rows: every changed side's ids — the exact
+        # set in point mode, the BETWEEN of the id envelope otherwise
+        # (wider than the changed ids, which is safe: the scoped read
+        # uses the SAME predicate, so untouched in-scope rows ride the
+        # full-outer merge through to survivors unchanged — the
+        # widening costs rewrite I/O, never rows)
+        scope, probes = F.lit(False), []
+        for s, idc in ((l, self.left_id), (r, self.right_id)):
+            if s is None:
+                continue
+            probes.append((idc, s.ids, s.id_env))
+            if point:
+                scope = scope | F.col(idc).isin(s.ids)
+            elif s.id_env[0] is not None:
+                scope = scope | F.col(idc).between(
+                    F.lit(s.id_env[0]), F.lit(s.id_env[1])
+                )
+        cur, self.last_view_scan_files = scoped_read(
+            self.view, self.view.current_version(), probes, scope
+        )
+        if tl is None and tr is None:
             # changes joined nothing. If no touched id is materialized
             # either, the window is pure orphans: stamp and move on.
             # A MATERIALIZED id whose change joined nothing, however,
@@ -488,34 +492,21 @@ class IncrementalJoinView:
             # refuse loudly rather than let merge_sync silently delete
             # the in-scope rows (post-review fix: this branch used to
             # sync empty over the scope, corrupting the view exactly
-            # when the unique-id contract was broken)
-            if per_id:
+            # when the unique-id contract was broken). The envelope
+            # scope is WIDER than the touched ids, so there a
+            # non-empty scoped read proves nothing — semi-join the
+            # changed ids distributed instead (bounded one-scalar
+            # actions, no collect)
+            if point:
                 touched = cur.limit(1).count() > 0
             else:
-                # the envelope scope is WIDER than the touched ids, so
-                # a non-empty scoped read proves nothing — semi-join
-                # the changed ids distributed instead (two bounded
-                # one-scalar actions, no collect)
-                touched = lb is not None and (
-                    cur.join(
-                        lchange.select(self.left_id).distinct(),
-                        self.left_id,
-                        "left_semi",
-                    )
+                touched = any(
+                    cur.join(s.change.select(idc).distinct(), idc, "left_semi")
                     .limit(1)
                     .count()
                     > 0
-                )
-                touched = touched or (
-                    rb is not None
-                    and cur.join(
-                        rchange.select(self.right_id).distinct(),
-                        self.right_id,
-                        "left_semi",
-                    )
-                    .limit(1)
-                    .count()
-                    > 0
+                    for s, idc in ((l, self.left_id), (r, self.right_id))
+                    if s is not None
                 )
             if not touched:
                 return self.view.stamp_epoch(packed)
@@ -526,9 +517,21 @@ class IncrementalJoinView:
                 "(unique-id contract violation) — fix the source and "
                 "full_refresh()"
             )
-        delta = terms[0]
-        for t in terms[1:]:
-            delta = delta.unionByName(t)
+        # _term is the payload PRIORITY under the struct max below:
+        # ΔL⋈R_new (2) sees BOTH sides current, so when a pair collects
+        # an insert from each term (both sides updated in one window)
+        # its payload must win over L_old⋈ΔR (1), which carries the
+        # stale pre-window left payload
+        delta = reduce(
+            DataFrame.unionByName,
+            [
+                t.withColumn("_term", F.lit(p))
+                for t, p in ((tl, 2), (tr, 1))
+                if t is not None
+            ],
+        )
+        view_cols = self._view_cols()
+        payload = [c for c in view_cols if c not in ids]
         # two-stage aggregation (round-8 full-session review): a
         # multi-commit window legitimately carries SEVERAL inserts per
         # pair per term (delete+re-append in every commit), so the
@@ -601,205 +604,32 @@ class IncrementalJoinView:
             _epoch=packed,
         )
 
-    def _bounds(self, change: DataFrame | None, idc: str):
-        """Envelope-mode bounds of one side's change frame: one
-        5-scalar row {c, ilo, ihi, klo, khi} (count, id min/max,
-        join-key min/max) — None when the side has no changed rows.
-        The bounds can be None with a non-zero count (all-NULL ids or
-        keys); callers skip that side's scope/prune term (NULL ids
-        never equi-join and never match view rows)."""
-        if change is None:
-            return None
-        row = change.agg(
-            F.count("*").alias("c"),
-            F.min(idc).alias("ilo"),
-            F.max(idc).alias("ihi"),
-            F.min(self.on[0]).alias("klo"),
-            F.max(self.on[0]).alias("khi"),
-        ).collect()[0]  # bounded: one 5-scalar row
-        return None if row["c"] == 0 else row
 
-    def _scope_predicate_envelope(self, lb, rb):
-        """BETWEEN of the per-side id envelopes — wider than the exact
-        changed-id set, which is safe: the scoped read uses the SAME
-        predicate, so untouched in-scope rows ride the full-outer
-        merge through to survivors unchanged (the widening costs
-        rewrite I/O, never rows)."""
-        pred = F.lit(False)
-        if lb is not None and lb["ilo"] is not None:
-            pred = pred | F.col(self.left_id).between(
-                F.lit(lb["ilo"]), F.lit(lb["ihi"])
-            )
-        if rb is not None and rb["ilo"] is not None:
-            pred = pred | F.col(self.right_id).between(
-                F.lit(rb["ilo"]), F.lit(rb["ihi"])
-            )
-        return pred
-
-    def _scoped_view_envelope(self, lb, rb, scope) -> DataFrame:
-        """Envelope-mode sibling of :meth:`_scoped_view`: file
-        resolution by one (min, max) range per id column instead of
-        per-key point ranges — no id list ever exists on the driver."""
-        v = self.view.current_version()
-        m = self.view.manifest(v)
-        if not m["files"]:
-            self.last_view_scan_files = []
-            return self.view.spark.createDataFrame(
-                [], self.view.table_schema(v)
-            )
-        files: dict[str, None] = {}
-        if lb is not None and lb["ilo"] is not None:
-            for f in self.view.resolve_files(
-                version=v, key_range=(self.left_id, lb["ilo"], lb["ihi"])
-            ):
-                files.setdefault(f)
-        if rb is not None and rb["ilo"] is not None:
-            for f in self.view.resolve_files(
-                version=v, key_range=(self.right_id, rb["ilo"], rb["ihi"])
-            ):
-                files.setdefault(f)
-        self.last_view_scan_files = list(files)
-        if not files:
-            return self.view._load_files(m["files"][:1], m).filter(
-                F.lit(False)
-            )
-        return self.view._load_files(list(files), m).filter(scope)
-
-    def _view_cols(self) -> list[str]:
-        return (
-            self.on
-            + [c for c in self.left_cols if c not in self.on]
-            + self.right_cols
-        )
-
-    def _scoped_view(self, lids, rids, scope) -> DataFrame:
-        """The view rows the refresh may touch, as a stats-pruned read:
-        files intersecting any changed left_id point-range ∪ any
-        changed right_id point-range (the view records stats on both
-        id columns), residual-filtered by the exact scope predicate.
-        Beyond the per-key cap on either side, that side falls back to
-        its (min, max) envelope; a stats-less view degrades to a full
-        scan, never a wrong answer."""
-        v = self.view.current_version()
-        m = self.view.manifest(v)
-        if not m["files"]:
-            # all view rows previously deleted: empty frame, view
-            # schema; the scoped read DID run — record the (empty)
-            # file set, per the attribute's None-means-not-reached
-            # contract
-            self.last_view_scan_files = []
-            return self.view.spark.createDataFrame(
-                [], self.view.table_schema(v)
-            )
-
-        files: dict[str, None] = {}
-        for f in resolve_key_files(self.view, v, self.left_id, lids):
-            files.setdefault(f)
-        for f in resolve_key_files(self.view, v, self.right_id, rids):
-            files.setdefault(f)
-        self.last_view_scan_files = list(files)
-        if not files:
-            return self.view._load_files(m["files"][:1], m).filter(
-                F.lit(False)
-            )
-        return self.view._load_files(list(files), m).filter(scope)
-
-    def _scope_predicate(self, lids, rids):
-        pred = F.lit(False)
-        if lids:
-            pred = pred | F.col(self.left_id).isin(lids)
-        if rids:
-            pred = pred | F.col(self.right_id).isin(rids)
-        return pred
-
-    def _full_join(self, lv: int, rv: int) -> DataFrame | None:
-        if lv == 0 or rv == 0:
-            return None
-        lm = self.left.manifest(lv)
-        rm = self.right.manifest(rv)
-        if not lm["files"] or not rm["files"]:
-            return None
-        out = (
-            self.left.read(version=lv)
-            .select(*self.left_cols)
-            .join(
-                self.right.read(version=rv).select(
-                    *self.right_cols + self.on
-                ),
-                self.on,
-            )
-            .select(*self._view_cols())
-        )
-        return out
-
-    def _assert_unique_ids(self, lv: int, rv: int) -> None:
-        """Distributed uniqueness check of both id columns at the
-        given snapshot versions (two bounded one-scalar actions).
-        Pair multiplicity in the join is the PRODUCT of the two
-        sides' id multiplicities, so per-side uniqueness implies pair
-        uniqueness."""
-        for table, idc, v, side in (
-            (self.left, self.left_id, lv, "left"),
-            (self.right, self.right_id, rv, "right"),
-        ):
-            dup = (
-                table.read(version=v)
-                .groupBy(idc)
-                .count()
-                .filter(F.col("count") > 1)
-                .count()
-            )
-            if dup:
-                raise ValueError(
-                    f"{side} source holds {dup} duplicated {idc!r} "
-                    f"value(s): the unique-id contract is violated — "
-                    f"dedupe the source before materializing"
-                )
-
-    def full_refresh(self, force: bool = False) -> int | None:
-        """Recompute the join from both snapshots — the recovery path
-        after a rewriting source commit. ``force=True`` recomputes at
-        already-stamped versions (overwrite's verbatim-epoch
-        contract), the deliberate resync after suspected
-        divergence."""
-        lv, rv = self.left.current_version(), self.right.current_version()
-        out = self._full_join(lv, rv)
-        if out is None:
-            return None
-        self._assert_unique_ids(lv, rv)
-        return self.view.overwrite(
-            out, _epoch=self._pack(lv, rv), _epoch_force=force
-        )
-
-
-class IncrementalJoinAggView:
+class IncrementalJoinAggView(JoinViewCore, AggViewCore):
     """A grouped (count, sums) aggregate OVER an inner equi-join,
     maintained incrementally WITHOUT materializing the join — the
     DBSP composition: the signed join delta (the same two bilinear
-    terms as :class:`IncrementalJoinView`) feeds the additive
-    aggregate algebra directly, so "revenue per customer segment over
-    orders ⋈ customers" refreshes at O(changed rows × fanout +
-    touched groups) while storing only |groups| rows.
+    terms :class:`IncrementalJoinView` builds, from the same
+    :class:`JoinViewCore`) is aggregated and handed to the agg view's
+    delta-apply step, so "revenue per customer segment over orders ⋈
+    customers" refreshes at O(changed rows × fanout + touched groups)
+    while storing only |groups| rows.
 
     Unlike the join view, NO unique-id contract is needed: aggregates
     are multiset-linear, so duplicate rows simply contribute their
     multiplicity — the delta algebra is exact for any bag semantics.
 
     View schema: ``key_cols`` + ``n`` (BIGINT live joined-row count
-    per group) + ``sum_<c>`` per ``sum_cols``. Groups at n ≤ 0 are
-    removed (≡ recompute). min/max over a join are NOT maintained:
-    repairing a delete-touched extreme would require re-JOINING the
-    touched groups, a different cost class than the agg view's
-    single-table repair scan — use IncrementalJoinView + a downstream
-    aggregate when extremes over joins are needed. sum columns must
-    be INTEGRAL in their owning table's log schema (the same
-    truncate-per-delta refusal as IncrementalAggView).
+    per group) + ``sum_<c>``/``nn_<c>`` per ``sum_cols``. Groups at
+    n ≤ 0 are removed (≡ recompute). min/max over a join are NOT
+    maintained: repairing a delete-touched extreme would require
+    re-JOINING the touched groups, a different cost class than the
+    agg view's single-table repair scan — use IncrementalJoinView + a
+    downstream aggregate when extremes over joins are needed. sum
+    columns must be INTEGRAL in their owning table's log schema."""
 
-    Epochs, delta-visibility gating, and full_refresh recovery follow
-    IncrementalJoinView exactly (packed (lv, rv) epoch; rewriting
-    commits refuse; snapshot terms prune by changed join keys)."""
-
-    _INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint"}
+    _point_mode = "per-key"
+    _stamp_empty_window = True
 
     def __init__(
         self,
@@ -814,35 +644,19 @@ class IncrementalJoinAggView:
         max_delta_groups: int = 100_000,
         large_delta_policy: str = "full_refresh",
     ):
-        if large_delta_policy not in ("refuse", "full_refresh"):
-            raise ValueError(
-                "large_delta_policy must be 'refuse' or 'full_refresh'"
-            )
-        #: windows above this many pre-counted changed rows skip the
-        #: explicit delta broadcast (AQE decides) — the same gate the
-        #: DV read path applies via manifest counts
-        self.max_point_window_rows = max_point_window_rows
-        #: cap on the collected aggregated delta (touched groups);
-        #: beyond it large_delta_policy degrades to the distributed
-        #: full recompute or refuses (same guard as IncrementalAggView)
-        self.max_delta_groups = max_delta_groups
-        self.large_delta_policy = large_delta_policy
-        self.left = left
-        self.right = right
-        self.on = list(on)
-        self.key_cols = list(key_cols)
-        self.sum_cols = list(sum_cols or [])
+        AggViewCore.__init__(
+            self, session, name, key_cols, sum_cols, [], [],
+            max_delta_groups, large_delta_policy,
+        )
+        JoinViewCore.__init__(self, left, right, on, max_point_window_rows)
         # the view generates n / sum_<c> / nn_<c> and the refresh
         # plumbing owns _-prefixed names — collisions would be
         # silently wrong grouping or AnalysisExceptions deep inside
-        # refresh (round-8 review; same guard as IncrementalJoinView)
+        # refresh (round-8 review)
         bad = [
             c
             for c in self.key_cols + self.sum_cols + self.on
-            if c.startswith("_")
-            or c.startswith("sum_")
-            or c.startswith("nn_")
-            or c == "n"
+            if c.startswith(("_", "sum_", "nn_")) or c == "n"
         ]
         if bad:
             raise ValueError(
@@ -854,359 +668,67 @@ class IncrementalJoinAggView:
         # not exist yet at construction (empty tables): resolve lazily
         # at the first refresh that has data, but eagerly here when
         # both schemas are already known so misuse fails fast
-        self._side_of: dict[str, str] | None = None
-        self.left_cols: list[str] | None = None
-        self.right_cols: list[str] | None = None
-        self.view = TxnTable(session, name, stats_cols=self.key_cols[:1])
-        self.last_snapshot_scan_files: dict[str, list[str]] = {}
-        #: "per-key" | "envelope" — how the last refresh pruned its
-        #: snapshot terms (None = not reached)
-        self.last_prune_mode: str | None = None
-        #: "scoped" | "full_recompute" — how the last refresh merged
-        self.last_merge_mode: str | None = None
-        if self._schema_types(left) and self._schema_types(right):
+        self._cols: tuple[list[str], list[str]] | None = None
+        if schema_types(left) and schema_types(right):
             self._resolve()
 
-    def _resolve(self) -> None:
-        """Bind every referenced column to its owning side and
-        validate sum types. Requires both log schemas (callers reach
-        here only once both sources hold data)."""
-        if self._side_of is not None:
-            return
-        lt = self._schema_types(self.left)
-        rt = self._schema_types(self.right)
+    left_cols = property(lambda self: self._resolve()[0])
+    right_cols = property(lambda self: self._resolve()[1])
+
+    def _resolve(self) -> tuple[list[str], list[str]]:
+        """(left_cols, right_cols): every referenced column bound to
+        its owning side (join columns ride the left), sum types
+        validated. Needs both log schemas — callers reach here only
+        once both sources hold data."""
+        if self._cols is not None:
+            return self._cols
+        lt, rt = schema_types(self.left), schema_types(self.right)
         if not lt or not rt:
             raise ValueError(
                 "cannot resolve column ownership: a source has no log "
                 "schema yet (empty table) — append data first"
             )
-        side_of: dict[str, str] = {}
-        for col in self.key_cols + self.sum_cols:
-            if col in self.on:
-                side_of[col] = "left"
-                continue
-            in_l, in_r = col in lt, col in rt
-            if in_l and in_r:
+        refs = list(dict.fromkeys(self.key_cols + self.sum_cols))
+        for c in refs:
+            if c not in self.on and (c in lt) == (c in rt):
                 raise ValueError(
-                    f"column {col!r} exists in both sources — rename "
+                    f"column {c!r} exists in both sources — rename "
                     f"one side upstream (silent ambiguity is how join "
                     f"rollups rot)"
+                    if c in lt
+                    else f"column {c!r} exists in neither source schema"
                 )
-            if not in_l and not in_r:
-                raise ValueError(
-                    f"column {col!r} exists in neither source schema"
-                )
-            side_of[col] = "left" if in_l else "right"
-        self._side_of = side_of
-        self.left_cols = self.on + [
-            c
-            for c in self.key_cols + self.sum_cols
-            if side_of[c] == "left" and c not in self.on
-        ]
-        self.right_cols = [
-            c
-            for c in self.key_cols + self.sum_cols
-            if side_of[c] == "right"
-        ]
-        self._validate_sum_types()
-
-    @staticmethod
-    def _schema_types(table: TxnTable) -> dict[str, str]:
-        st = table.table_schema()
-        if st is None:
-            return {}
-        return {f.name: f.dataType.simpleString() for f in st.fields}
-
-    def _validate_sum_types(self) -> None:
-        assert self._side_of is not None
-        for c in self.sum_cols:
-            side = self.left if self._side_of[c] == "left" else self.right
-            t = self._schema_types(side).get(c)
-            if t is not None and t not in self._INTEGRAL_TYPES:
-                raise ValueError(
-                    f"sum column {c!r} has non-integral type {t}: "
-                    f"delta sums combine in exact BIGINT arithmetic "
-                    f"and a {t} column would truncate per-delta, "
-                    f"diverging from a recompute — use fixed-point "
-                    f"folds (functions/fixedpoint.py) upstream"
-                )
-
-    # -- epochs (same packing as IncrementalJoinView) -------------------------
-
-    def _pack(self, lv: int, rv: int) -> int:
-        return pack_epoch(lv, rv)
-
-    def last_refreshed_versions(self) -> tuple[int, int]:
-        v = self.view.current_version()
-        epoch = (self.view.manifest(v).get("epoch") or 0) if v else 0
-        return unpack_epoch(epoch)
-
-    def read(self) -> DataFrame:
-        return self.view.read()
-
-    # -- aggregation algebra ---------------------------------------------------
-
-    def _agg_exprs(self, sign):
-        exprs = [F.sum(sign).cast("bigint").alias("n")]
-        for c in self.sum_cols:
-            exprs.append(
-                F.sum(sign * F.col(c)).cast("bigint").alias(f"sum_{c}")
-            )
-            # signed non-NULL contributor count — retraction-exact NULL
-            # sums, same rationale as IncrementalAggView._agg_exprs
-            exprs.append(
-                F.sum(
-                    F.when(F.col(c).isNotNull(), sign).otherwise(0)
-                )
-                .cast("bigint")
-                .alias(f"nn_{c}")
-            )
-        return exprs
-
-    def _joined_snapshot(self, lv: int, rv: int) -> DataFrame | None:
-        if lv == 0 or rv == 0:
-            return None
-        if not self.left.manifest(lv)["files"]:
-            return None
-        if not self.right.manifest(rv)["files"]:
-            return None
-        self._resolve()
-        return (
-            self.left.read(version=lv)
-            .select(*self.left_cols)
-            .join(
-                self.right.read(version=rv).select(
-                    *self.right_cols + self.on
-                ),
-                self.on,
-            )
+        self._cols = (
+            self.on + [c for c in refs if c in lt and c not in self.on],
+            [c for c in refs if c not in lt and c not in self.on],
         )
+        self._validate_sum_types()
+        return self._cols
 
-    # -- refresh ----------------------------------------------------------------
+    def _types(self) -> dict[str, str]:
+        # join columns belong to the left side
+        return {**schema_types(self.right), **schema_types(self.left)}
+
+    def _recompute(self, lv: int, rv: int) -> DataFrame | None:
+        joined = self._snapshot_join(lv, rv)
+        return None if joined is None else self._rollup(joined)
 
     def refresh(self) -> int | None:
         """Apply both sources' deltas through the join into the
-        aggregate in ONE atomic view commit. The aggregated delta —
-        bounded by touched groups — is collected once and drives the
-        scoped merge, exactly the agg view's contract."""
-        lv, rv = self.left.current_version(), self.right.current_version()
-        llast, rlast = self.last_refreshed_versions()
-        if (lv, rv) == (llast, rlast):
-            return None
-        self.last_snapshot_scan_files = {}
-        self.last_prune_mode = None
+        aggregate in ONE atomic view commit."""
         self.last_merge_mode = None
-        packed = self._pack(lv, rv)
-        if self.view.current_version() == 0:
-            joined = self._joined_snapshot(lv, rv)
-            if joined is None:
-                return None
-            out = joined.groupBy(*self.key_cols).agg(
-                *self._agg_exprs(F.lit(1))
-            )
-            return self.view.merge(
-                null_out_empty_sums(
-                    out.filter(F.col("n") > 0), self.sum_cols
-                ),
-                self.key_cols,
-                _epoch=packed,
-            )
-        assert_window_delta_visible(self.left, llast, lv)
-        assert_window_delta_visible(self.right, rlast, rv)
-        self._resolve()
-        # broadcast gate: pre-count the window from the commit records
-        # — a backfill-sized delta must not be broadcast (round-8
-        # advice; the DV read path gates the same decision on manifest
-        # counts)
-        wl = window_change_rows(self.left, llast, lv) if lv > llast else 0
-        wr = window_change_rows(self.right, rlast, rv) if rv > rlast else 0
-        small_window = (
-            wl is not None
-            and wr is not None
-            and wl + wr <= self.max_point_window_rows
-        )
-        hint = F.broadcast if small_window else (lambda df: df)
-        sign = F.when(F.col("_change_type") == "delete", -1).otherwise(1)
-        lchange = (
-            self.left.read_changes(llast, lv, include_deletes=True)
-            .select(*self.left_cols, sign.alias("_sign"))
-            .localCheckpoint()
-            if lv > llast
-            else None
-        )
-        rchange = (
-            self.right.read_changes(rlast, rv, include_deletes=True)
-            .select(*self.right_cols + self.on, sign.alias("_sign"))
-            .localCheckpoint()
-            if rv > rlast
-            else None
-        )
-        # DISTINCT changed join keys, collected only up to the pruning
-        # cap (+1 row to detect the burst): beyond _PRUNE_KEYS_MAX the
-        # per-key point ranges fall back to one envelope anyway, so
-        # the full key list never needs to exist on the driver — the
-        # envelope bounds come from one 2-scalar distributed agg
-        # (round-8 verdict item 1, applied to this class's key collect)
-        lkeys, lenv = self._keys_or_envelope(lchange)
-        rkeys, renv = self._keys_or_envelope(rchange)
-        has_l = bool(lkeys) or lenv is not None
-        has_r = bool(rkeys) or renv is not None
-        self.last_prune_mode = (
-            "envelope" if (lenv is not None or renv is not None) else "per-key"
-        )
-        if not has_l and not has_r:
-            return self.view.stamp_epoch(packed)
-        terms = []
-        if has_l:
-            r_snap = pruned_snapshot(
-                self.right, rv, self.right_cols + self.on, lkeys,
-                self.on[0], self.last_snapshot_scan_files, "right",
-                envelope=lenv,
-            )
-            if r_snap is not None:
-                terms.append(hint(lchange).join(r_snap, self.on))
-        if has_r:
-            l_snap = pruned_snapshot(
-                self.left, llast, self.left_cols, rkeys,
-                self.on[0], self.last_snapshot_scan_files, "left",
-                envelope=renv,
-            )
-            if l_snap is not None:
-                terms.append(l_snap.join(hint(rchange), self.on))
+        return super().refresh()
+
+    def _apply_join_delta(self, l, r, tl, tr, packed, point):
+        terms = [t for t in (tl, tr) if t is not None]
         if not terms:
             # pure-orphan window: the join delta is exactly empty
             # (aggregates have no id bypass to guard against — a
             # multiset contributes only what joins)
             return self.view.stamp_epoch(packed)
-        delta = terms[0]
-        for t in terms[1:]:
-            delta = delta.unionByName(t)
-        add_cols = ["n"] + [
-            x for c in self.sum_cols for x in (f"sum_{c}", f"nn_{c}")
-        ]
-        # group-cardinality guard (same contract as IncrementalAggView):
-        # the collect is capped at max_delta_groups + 1 rows by
-        # construction; beyond the cap, degrade to the distributed
-        # full recompute or refuse per large_delta_policy
-        delta_rows = (
-            delta.groupBy(*self.key_cols)
-            .agg(*self._agg_exprs(F.col("_sign")))
-            .limit(self.max_delta_groups + 1)
-            .collect()
-        )
-        if len(delta_rows) > self.max_delta_groups:
-            if self.large_delta_policy == "refuse":
-                raise ValueError(
-                    f"refresh window touches more than "
-                    f"{self.max_delta_groups} groups — the collected "
-                    f"delta would no longer be driver-bounded. Run "
-                    f"full_refresh() (fully distributed) or raise "
-                    f"max_delta_groups deliberately"
-                )
-            self.last_merge_mode = "full_recompute"
-            return self.full_refresh()
-        if not delta_rows:
-            return self.view.stamp_epoch(packed)
-        self.last_merge_mode = "scoped"
-        key_tuples = [
-            tuple(r[k] for k in self.key_cols) for r in delta_rows
-        ]
-        if any(v is None for t in key_tuples for v in t):
-            raise ValueError(
-                "NULL group-key values are unsupported; coalesce the "
-                "key columns in the sources before materializing"
-            )
-        schema = ", ".join(
-            [f"{k} {t}" for k, t in self._key_schema()]
-            + [f"{c} BIGINT" for c in add_cols]
-        )
-        delta_df = self.view.spark.createDataFrame(
-            [
-                tuple(r[k] for k in self.key_cols)
-                + tuple(
-                    int(r[c]) if r[c] is not None else None
-                    for c in add_cols
-                )
-                for r in delta_rows
-            ],
-            schema,
-        )
-        in_keys = keys_predicate(self.key_cols, key_tuples)
-        vm = self.view.manifest(self.view.current_version())
-        if vm["files"]:
-            cur = self.view.read().filter(in_keys)
-        else:
-            # every group previously eliminated: the committed view is
-            # file-less and read() would raise — an empty frame is the
-            # correct current state (round-8 review)
-            cur = self.view.spark.createDataFrame(
-                [], self.view.table_schema(self.view.current_version())
-            )
-        dd = delta_df.select(
-            *self.key_cols,
-            *[F.col(c).alias(f"_d_{c}") for c in add_cols],
-        )
-        new = cur.join(dd, self.key_cols, "full_outer").select(
-            *self.key_cols, *additive_combine_exprs(add_cols)
-        )
-        return self.view.merge_sync(
-            null_out_empty_sums(
-                new.filter(F.col("n") > 0), self.sum_cols
+        return self._apply_delta(
+            self._aggregate(
+                reduce(DataFrame.unionByName, terms), F.col("_sign")
             ),
-            self.key_cols,
-            scope=in_keys,
-            scope_candidate_files=resolve_key_files(
-                self.view,
-                self.view.current_version(),
-                self.key_cols[0],
-                [t[0] for t in key_tuples],
-            ),
-            _epoch=packed,
-        )
-
-    def _keys_or_envelope(self, change: DataFrame | None):
-        """(keys, envelope) for one side's changed join keys: the
-        DISTINCT key list when it fits the pruning cap (collected
-        capped at cap+1 rows), else one (min, max) envelope from a
-        2-scalar distributed agg — the full key list never exists on
-        the driver. (None-ish, None) = the side has no changed rows."""
-        if change is None:
-            return [], None
-        ks = (
-            change.select(self.on[0])
-            .distinct()
-            .limit(_PRUNE_KEYS_MAX + 1)
-            .collect()
-        )
-        if len(ks) <= _PRUNE_KEYS_MAX:
-            return [r[0] for r in ks], None
-        row = change.agg(
-            F.min(self.on[0]).alias("lo"), F.max(self.on[0]).alias("hi")
-        ).collect()[0]
-        return None, (row["lo"], row["hi"])
-
-    def _key_schema(self):
-        out = []
-        for k in self.key_cols:
-            side = self.left if self._side_of[k] == "left" else self.right
-            out.append((k, self._schema_types(side).get(k, "string")))
-        return out
-
-    def full_refresh(self, force: bool = False) -> int | None:
-        """Recompute the rollup from both snapshots — recovery after a
-        rewriting source commit; ``force=True`` recomputes at
-        already-stamped versions."""
-        lv, rv = self.left.current_version(), self.right.current_version()
-        joined = self._joined_snapshot(lv, rv)
-        if joined is None:
-            return None
-        out = joined.groupBy(*self.key_cols).agg(
-            *self._agg_exprs(F.lit(1))
-        )
-        return self.view.overwrite(
-            null_out_empty_sums(
-                out.filter(F.col("n") > 0), self.sum_cols
-            ),
-            _epoch=self._pack(lv, rv),
-            _epoch_force=force,
+            packed,
         )

@@ -409,18 +409,17 @@ class TestIncrementalAggView:
             IncrementalAggView(lake, "v15", src, ["g"], ["v"])
 
     def test_sum_type_guard_without_log_schema(self, spark, lake):
-        """Round-7 advice (low): when the source log carries no schema
-        the construction-time guard can't run — refresh must then
-        check the change-feed frame's dtypes instead of silently
+        """Round-7 advice (low): a view built over an EMPTY source has
+        no log schema to check at construction — the first refresh
+        after a DOUBLE column lands must refuse instead of silently
         truncating DOUBLE deltas."""
         src = TxnTable(lake, "src16", stats_cols=["k"])
+        view = IncrementalAggView(lake, "v16", src, ["g"], ["v"])
         src.append(
             spark.createDataFrame(
                 [(1, "a", 1.5)], "k INT, g STRING, v DOUBLE"
             )
         )
-        src.table_schema = lambda *a, **k: None  # schema-less log
-        view = IncrementalAggView(lake, "v16", src, ["g"], ["v"])
         with pytest.raises(TypeError, match="integral"):
             view.refresh()
 
@@ -804,3 +803,35 @@ class TestGroupCardinalityGuard:
                 lake, "bv", src, ["g"], ["v"],
                 large_delta_policy="explode",
             )
+
+
+class TestScopedViewRead:
+    def test_refresh_touching_one_group_opens_fewer_view_files(
+        self, spark, lake
+    ):
+        """The scoped view read opens only the view files the shared
+        key resolver keeps for the window's groups — the same set
+        merge_sync's scope-hit scan gets — never every view file."""
+        src = TxnTable(lake, "sv_src", stats_cols=["k"])
+        view = IncrementalAggView(lake, "sv_view", src, ["g"], ["v"])
+        # one new group per window: each lands in its own view file
+        for i, g in enumerate("abcd"):
+            src.append(
+                spark.createDataFrame(
+                    [(i, g, i * 10)], "k INT, g STRING, v INT"
+                ).coalesce(1)
+            )
+            view.refresh()
+        view_files = view.view.manifest()["files"]
+        assert len(view_files) >= 4
+        src.append(
+            spark.createDataFrame(
+                [(9, "b", 5)], "k INT, g STRING, v INT"
+            ).coalesce(1)
+        )
+        view.refresh()
+        assert view.last_merge_mode == "scoped"
+        assert view.last_view_scan_files is not None
+        assert 0 < len(view.last_view_scan_files) < len(view_files)
+        assert set(view.last_view_scan_files) <= set(view_files)
+        assert _view_state(view.view) == _recompute(src)

@@ -12,6 +12,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from interop_datalake_spark.lake.ivm import IncrementalAggView
 from interop_datalake_spark.lake.ivm_join import (
     _EPOCH_BASE,
     IncrementalJoinAggView,
@@ -965,4 +966,210 @@ class TestLargeWindowGuards:
             view.refresh()
         # full_refresh is the documented recovery
         assert view.full_refresh() is not None
+        assert _agg_state(view) == _agg_recompute(left, right)
+
+
+class TestOneCore:
+    """The join-aggregate view is the composition of the join view's
+    delta builder and the agg view's delta-apply step: over the same
+    change sequence it must equal a groupBy over the join view, and
+    both must equal a recompute."""
+
+    def test_join_agg_equals_groupby_over_join_view(self, spark, lake):
+        import random
+
+        rng = random.Random(1307)
+        left = TxnTable(lake, "lc_src", stats_cols=["o_id", "cust"])
+        right = TxnTable(lake, "rc_src", stats_cols=["c_id", "cust"])
+        join = IncrementalJoinView(
+            lake, "jc_view", left, right, on=["cust"],
+            left_id="o_id", right_id="c_id",
+            left_cols=["amount"], right_cols=["segment"],
+            max_point_window_rows=8,
+        )
+        rollup = IncrementalJoinAggView(
+            lake, "jac_view", left, right, on=["cust"],
+            key_cols=["segment"], sum_cols=["amount"],
+            max_point_window_rows=8, max_delta_groups=3,
+        )
+        custs = [f"c{i}" for i in range(6)]
+
+        def orders(ids):
+            return _mk(
+                spark,
+                [
+                    (i, rng.choice(custs + ["orphan"]),
+                     None if i % 7 == 3 else rng.randrange(100))
+                    for i in ids
+                ],
+                _L_SCHEMA,
+            )
+
+        def check(prune_mode=None, merge_mode=None):
+            join.refresh()
+            rollup.refresh()
+            over_join = sorted(
+                map(
+                    tuple,
+                    join.read()
+                    .groupBy("segment")
+                    .agg(
+                        F.count(F.lit(1)).alias("n"),
+                        F.sum("amount").alias("sum_amount"),
+                    )
+                    .collect(),
+                )
+            )
+            assert _agg_state(rollup) == over_join
+            assert over_join == _agg_recompute(left, right)
+            assert _state(join) == _recompute(left, right)
+            if prune_mode is not None:
+                assert join.last_prune_mode == "envelope"
+                assert rollup.last_prune_mode == "envelope"
+            if merge_mode is not None:
+                assert rollup.last_merge_mode == merge_mode
+
+        right.append(
+            _mk(spark,
+                [(100 + i, c, f"S{i % 3}") for i, c in enumerate(custs)],
+                _R_SCHEMA)
+        )
+        left.append(orders(range(10)))
+        check()
+        # appends on both sides
+        left.append(orders(range(10, 13)))
+        right.append(_mk(spark, [(106, "orphan", "S1")], _R_SCHEMA))
+        check(merge_mode="scoped")
+        # vector deletes on both sides
+        gone = rng.sample(range(13), 2)
+        left.delete_where(F.col("o_id").isin(gone), merge_on_read=True)
+        right.delete_where(
+            F.col("c_id") == 100 + rng.randrange(6), merge_on_read=True
+        )
+        check(merge_mode="scoped")
+        # merge-on-read merges: updated orders (new customer or amount)
+        # plus a new one; a customer moves segment
+        left.merge(orders([i for i in range(13) if i not in gone][:2] + [13]),
+                   ["o_id"], merge_on_read=True)
+        right.merge(
+            _mk(spark, [(101, "c1", "S2")], _R_SCHEMA),
+            ["c_id"], merge_on_read=True,
+        )
+        check(merge_mode="scoped")
+        # a window past max_point_window_rows: envelope mode
+        left.append(orders(range(20, 32)))
+        check(prune_mode="envelope")
+        # a window touching more than max_delta_groups segments
+        right.append(
+            _mk(spark,
+                [(200 + i, f"n{i}", f"T{i}") for i in range(4)],
+                _R_SCHEMA)
+        )
+        left.append(
+            _mk(spark, [(40 + i, f"n{i}", i) for i in range(4)], _L_SCHEMA)
+        )
+        check(merge_mode="full_recompute")
+        # incremental again after the degrade
+        left.delete_where(F.col("o_id") == 40, merge_on_read=True)
+        left.append(orders([50]))
+        check(merge_mode="scoped")
+
+    def test_join_agg_reads_only_key_resolved_view_files(self, spark, lake):
+        left, right, view = _agg_setup(spark, lake)
+        right.append(
+            _mk(spark,
+                [(100 + i, c, f"SEG{i}") for i, c in enumerate("abcd")],
+                _R_SCHEMA)
+        )
+        # one new segment per window: each lands in its own view file
+        for i, c in enumerate("abcd"):
+            left.append(_mk(spark, [(i, c, i * 10)], _L_SCHEMA))
+            view.refresh()
+        view_files = view.view.manifest()["files"]
+        assert len(view_files) >= 4
+        left.append(_mk(spark, [(9, "b", 5)], _L_SCHEMA))
+        view.refresh()
+        assert view.last_merge_mode == "scoped"
+        assert 0 < len(view.last_view_scan_files) < len(view_files)
+        assert _agg_state(view) == _agg_recompute(left, right)
+
+
+class TestJobBudget:
+    """Spark jobs per refresh of each view class on its own small
+    fixture, counted by job group: the first refresh, an append window
+    and a vector-delete window. The budgets are the counts measured
+    before the views shared one delta builder and one delta-apply
+    step (default test session, local[8]); sharing may only lower
+    them."""
+
+    def _windows(self, jobs_of, view, first, append, delete):
+        counts = []
+        for change in (first, append, delete):
+            change()
+            got, ids = jobs_of(view.refresh)
+            assert got is not None
+            counts.append(len(ids))
+        return counts
+
+    def test_agg_view(self, spark, lake, jobs_of):
+        src = TxnTable(lake, "jb_src", stats_cols=["k"])
+        view = IncrementalAggView(
+            lake, "jb_agg", src, ["g"], ["v"], max_cols=["k"]
+        )
+        counts = self._windows(
+            jobs_of,
+            view,
+            lambda: src.append(
+                spark.range(0, 30)
+                .select(
+                    F.col("id").alias("k"),
+                    (F.col("id") % 3).cast("string").alias("g"),
+                    (F.col("id") * 10).alias("v"),
+                )
+                .coalesce(1)
+            ),
+            lambda: src.append(
+                _mk(spark, [(100, "0", 1), (101, "1", 2)],
+                    "k long, g string, v long")
+            ),
+            lambda: src.delete_where(
+                F.col("k") % 5 == 0, merge_on_read=True
+            ),
+        )
+        assert all(c <= b for c, b in zip(counts, (3, 11, 15))), counts
+
+    def _join_windows(self, spark, jobs_of, left, right, view):
+        def first():
+            right.append(
+                _mk(spark,
+                    [(101, "a", "GOLD"), (102, "b", "SILVER"),
+                     (103, "c", "GOLD")],
+                    _R_SCHEMA)
+            )
+            left.append(
+                _mk(spark,
+                    [(1, "a", 10), (2, "a", 20), (3, "b", 30), (4, "c", 5)],
+                    _L_SCHEMA)
+            )
+
+        def append():
+            left.append(_mk(spark, [(5, "b", 40), (6, "d", 7)], _L_SCHEMA))
+            right.append(_mk(spark, [(104, "d", "BRONZE")], _R_SCHEMA))
+
+        def delete():
+            left.delete_where(F.col("o_id") == 1, merge_on_read=True)
+            right.delete_where(F.col("c_id") == 102, merge_on_read=True)
+
+        return self._windows(jobs_of, view, first, append, delete)
+
+    def test_join_view(self, spark, lake, jobs_of):
+        left, right, view = _setup(spark, lake)
+        counts = self._join_windows(spark, jobs_of, left, right, view)
+        assert all(c <= b for c, b in zip(counts, (9, 14, 22))), counts
+        assert _state(view) == _recompute(left, right)
+
+    def test_join_agg_view(self, spark, lake, jobs_of):
+        left, right, view = _agg_setup(spark, lake)
+        counts = self._join_windows(spark, jobs_of, left, right, view)
+        assert all(c <= b for c, b in zip(counts, (4, 18, 22))), counts
         assert _agg_state(view) == _agg_recompute(left, right)
